@@ -202,6 +202,56 @@ def curate_main(argv: list[str], spark=None) -> int:
             spark.stop()
 
 
+def _write_reports(spark, clusters, config, out_dir: str, names) -> None:
+    """Write the three workbooks for one input and print its stats."""
+    from datafusion_dedup_ai_spark.plans.pipeline import (
+        canonical_summary,
+        golden_mapping,
+        high_confidence_review,
+        run_stats,
+    )
+    from datafusion_dedup_ai_spark.sources.sinks import (
+        settings_sheet,
+        write_xlsx_bytes,
+    )
+
+    # Reference clusters-sheet projection (outputs.py:23-24) —
+    # block_key is internal and stays out of the workbook.
+    sheet_cols = [
+        "row_order",
+        "original_name",
+        "normalized_name",
+        "base_name",
+        "cluster_id",
+        "cluster_size",
+        "canonical_name",
+        "confidence",
+        "reason",
+    ]
+    write_xlsx_bytes(
+        {
+            "clusters": clusters.select(*sheet_cols),
+            "canonical_summary": canonical_summary(clusters),
+            "settings": settings_sheet(config, spark),
+        },
+        out_dir,
+        names[0],
+    )
+    write_xlsx_bytes({"mapping": golden_mapping(clusters)}, out_dir, names[1])
+    write_xlsx_bytes(
+        {"review": high_confidence_review(clusters).select(*sheet_cols)},
+        out_dir,
+        names[2],
+    )
+    s = run_stats(clusters).collect()[0]
+    print("\nProcessing Complete!")
+    print(f"Total Rows: {s['total_rows']}")
+    print(f"Total Clusters: {s['total_clusters']}")
+    print(f"Multi-record Clusters: {s['multi_record_clusters']}")
+    print(f"High-confidence Review Rows: {s['high_confidence_review_rows']}")
+    print(f"Reports written to: {out_dir}")
+
+
 def main(argv: list[str] | None = None, spark=None) -> int:
     """CLI body. ``spark``: tests inject their shared session (then it is
     NOT stopped here); the command line builds and owns one."""
@@ -210,22 +260,14 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         return curate_main(argv[1:], spark)
     args = _build_parser().parse_args(argv)
 
+    from pyspark import StorageLevel
+
     from datafusion_dedup_ai_spark.config import DedupConfig
-    from datafusion_dedup_ai_spark.plans.pipeline import (
-        canonical_summary,
-        dedup_pipeline,
-        golden_mapping,
-        high_confidence_review,
-        run_stats,
-    )
+    from datafusion_dedup_ai_spark.plans.pipeline import dedup_pipeline_cached
     from datafusion_dedup_ai_spark.session import build_session
     from datafusion_dedup_ai_spark.sources.readers import (
         first_string_column,
         read_input,
-    )
-    from datafusion_dedup_ai_spark.sources.sinks import (
-        settings_sheet,
-        write_xlsx_bytes,
     )
 
     config = DedupConfig(
@@ -250,22 +292,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 )
                 rc = 1
                 continue
-            clusters = dedup_pipeline(
-                df, column, config, order_col=args.order_column
-            )
-            # Reference clusters-sheet projection (outputs.py:23-24) —
-            # block_key is internal and stays out of the workbook.
-            sheet_cols = [
-                "row_order",
-                "original_name",
-                "normalized_name",
-                "base_name",
-                "cluster_id",
-                "cluster_size",
-                "canonical_name",
-                "confidence",
-                "reason",
-            ]
             out_dir = args.out or os.path.dirname(os.path.abspath(path))
             os.makedirs(out_dir, exist_ok=True)
             stem = os.path.basename(path)
@@ -276,32 +302,18 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 else (f"dedup_final_{stem}.xlsx", f"golden_{stem}.xlsx",
                       f"review_{stem}.xlsx")
             )
-            write_xlsx_bytes(
-                {
-                    "clusters": clusters.select(*sheet_cols),
-                    "canonical_summary": canonical_summary(clusters),
-                    "settings": settings_sheet(config, spark),
-                },
-                out_dir,
-                names[0],
+            clusters, cached = dedup_pipeline_cached(
+                df, column, config, order_col=args.order_column
             )
-            write_xlsx_bytes(
-                {"mapping": golden_mapping(clusters)}, out_dir, names[1]
-            )
-            write_xlsx_bytes(
-                {"review": high_confidence_review(clusters).select(*sheet_cols)},
-                out_dir,
-                names[2],
-            )
-            s = run_stats(clusters).collect()[0]
-            print("\nProcessing Complete!")
-            print(f"Total Rows: {s['total_rows']}")
-            print(f"Total Clusters: {s['total_clusters']}")
-            print(f"Multi-record Clusters: {s['multi_record_clusters']}")
-            print(
-                f"High-confidence Review Rows: {s['high_confidence_review_rows']}"
-            )
-            print(f"Reports written to: {out_dir}")
+            # Every sheet and the stats read `clusters`; persisting it runs
+            # the pipeline once. It and the pipeline's own cached frames are
+            # released after the last action.
+            clusters = clusters.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                _write_reports(spark, clusters, config, out_dir, names)
+            finally:
+                for d in (clusters, *cached):
+                    d.unpersist()
     finally:
         if owns_session:
             spark.stop()

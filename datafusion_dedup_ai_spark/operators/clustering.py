@@ -2,14 +2,23 @@
 
 Backends:
 
-* ``cluster_from_edges`` (default, exact): per-block ``applyInPandas``
-  union-find. Pairs exist only *within* a block (engine.py:251-255), so
-  components never span blocks and a block-local union-find is exact — no
-  global iteration needed. Replicates the reference's order-dependent
-  confidence quirk (C3, engine.py:235-243): on each root-merging union,
-  only the *first* row of the pair takes ``max(conf, pair_conf)`` and has its
-  reason overwritten. Iterative union-find (no recursion — the reference's
-  recursive ``find`` overflows on deep chains, SURVEY.md §4).
+* ``cluster_exact`` (the pipeline's path, exact): replays the reference's
+  sorted row-pair scan from the entity-collapsed inputs (block members and
+  distinct-base-pair matches). Pairs exist only *within* a block
+  (engine.py:251-255), so components never span blocks and the replay needs
+  no global iteration. Both inputs cogroup on a hash bucket of
+  ``block_key`` with ``spark.sql.shuffle.partitions`` buckets: one Python
+  call per shuffle partition, holding that partition's member and match
+  rows. Blocks above ``max_block_rows`` route to ``cluster_mega_blocks``.
+  Replicates the reference's order-dependent confidence quirk (C3,
+  engine.py:235-243): on each root-merging union, only the *first* row of
+  the pair takes ``max(conf, pair_conf)`` and has its reason overwritten.
+  Iterative union-find (no recursion — the reference's recursive ``find``
+  overflows on deep chains, SURVEY.md §4).
+
+* ``cluster_from_edges`` (reference): per-block ``applyInPandas``
+  union-find over the full row-pair edge list, the same C3 rule. The
+  equivalence tests compare ``cluster_exact`` against it.
 
 * ``cluster_label_propagation`` (scale fallback #1): iterative hash-min label
   propagation on the edge list — O(diameter) joins, each a shuffle on bounded
@@ -29,9 +38,9 @@ Backends:
 
 All iterative backends checkpoint a base edge frame first and derive
 every internal frame from that shared RDD, so a caller's expensive
-unpersisted candidate-generation pipeline materializes exactly once (the
-round-6 scale_probe finding: without it, LP's round-1 DAG referenced the
-LSH band-join subtree up to 8 times).
+unpersisted candidate-generation pipeline materializes exactly once
+(without it, LP's first-round DAG references an LSH band-join subtree up
+to 8 times).
 
 Cluster ids are ``min(row_order)`` over the component — deterministic and
 order-independent, unlike the reference's union-order-dependent root index
@@ -334,8 +343,9 @@ def _replay_block(
     reason_identical: str,
 ) -> pd.DataFrame:
     """Exact replay of the reference's sorted pair scan (engine.py:251-261)
-    from the entity-collapsed inputs: block members (row_order, base_name) and
-    distinct-base-pair matches.
+    from the entity-collapsed inputs of one or more blocks: block members
+    (block_key, row_order, base_name) and distinct-base-pair matches
+    (match_block_key, base_a, base_b, pair_confidence, pair_reason).
 
     Equivalence: processing all row pairs sorted by (a, b) is Kruskal over a
     union of group cliques + complete bipartite graphs between matching
@@ -347,27 +357,34 @@ def _replay_block(
     row has been processed the whole group is a single component (its min
     scanned every member), so later scans resolve it with one find() — the
     fast path that keeps this O(candidates), not O(k^2).
+
+    Groups are keyed by (block_key, base_name), so edges never leave their
+    block and components never span blocks: scanning the union of several
+    blocks in ascending row_order interleaves independent per-block scans
+    and yields exactly the per-block result.
     """
     import bisect
     from collections import defaultdict
 
     rows = members.sort_values("row_order")
     ids = [int(x) for x in rows["row_order"]]
-    base_of = dict(zip(ids, rows["base_name"]))
-    group_members: dict[str, list[int]] = defaultdict(list)
+    group_of = dict(zip(ids, zip(rows["block_key"], rows["base_name"])))
+    group_members: dict[tuple[str, str], list[int]] = defaultdict(list)
     for i in ids:
-        group_members[base_of[i]].append(i)  # ascending
+        group_members[group_of[i]].append(i)  # ascending
 
-    neigh: dict[str, list[tuple[str, float, str]]] = defaultdict(list)
-    for ba, bb, pc, pr in zip(
-        matches["base_a"], matches["base_b"],
+    neigh: dict[tuple[str, str], list[tuple[tuple[str, str], float, str]]] = (
+        defaultdict(list)
+    )
+    for bk, ba, bb, pc, pr in zip(
+        matches["match_block_key"], matches["base_a"], matches["base_b"],
         matches["pair_confidence"], matches["pair_reason"],
     ):
-        neigh[ba].append((bb, float(pc), str(pr)))
-        neigh[bb].append((ba, float(pc), str(pr)))
+        neigh[(bk, ba)].append(((bk, bb), float(pc), str(pr)))
+        neigh[(bk, bb)].append(((bk, ba), float(pc), str(pr)))
     if link_identical:
-        for b in group_members:
-            neigh[b].append((b, conf_identical, reason_identical))
+        for g in group_members:
+            neigh[g].append((g, conf_identical, reason_identical))
 
     parent = {i: i for i in ids}
 
@@ -383,9 +400,8 @@ def _replay_block(
     reason = {i: REASON_DEFAULT for i in ids}
 
     for a in ids:
-        ga = base_of[a]
         cands: dict[int, tuple[int, float, str]] = {}
-        for hb, pc, pr in neigh.get(ga, ()):
+        for hb, pc, pr in neigh.get(group_of[a], ()):
             mem = group_members.get(hb)
             if not mem:
                 continue
@@ -437,13 +453,17 @@ def cluster_exact(
     max_block_rows: int | None = None,
     cc_backend: str = "lp",
 ) -> DataFrame:
-    """C1/C3/C4 via cogrouped per-block replay of the collapsed inputs.
+    """C1/C3/C4 via cogrouped replay of the collapsed inputs.
 
+    Members and matches cogroup on ``pmod(xxhash64(block_key), n)`` with
+    ``n`` = ``spark.sql.shuffle.partitions``, so there is one Python call
+    per shuffle partition, holding that partition's member and match rows;
+    ``_replay_block`` replays every block of the bucket in that call.
     Shuffle volume is O(rows + distinct base pairs) — never the row-pair
     matrix. Empty-base rows stay singletons with the C4 rule.
 
     ``max_block_rows`` routes blocks with more member rows than the cap to
-    the ``cluster_mega_blocks`` fallback instead of a single cogroup task:
+    the ``cluster_mega_blocks`` fallback instead of the cogroup replay:
     identical partitions, order-independent upper-bound confidences
     (documented divergence). ``None`` (default) keeps every block on the
     exact replay. ``cc_backend`` picks the fallback's component algorithm:
@@ -498,12 +518,20 @@ def cluster_exact(
             CONF_TOKEN_AND_HARD, REASON_TOKEN_AND_HARD,
         )
 
-    # Both frames derive from `prepared`; rename the match side's key so the
-    # analyzer doesn't flag an ambiguous self-join on the shared attribute.
+    # One Python call per shuffle partition, not per block: both sides
+    # cogroup on the same hash bucket of block_key and carry block_key, so a
+    # call replays every block of its bucket at once. Both frames derive
+    # from `prepared`; the match side's key is renamed so the analyzer
+    # doesn't flag an ambiguous self-join on the shared attribute.
+    n_buckets = int(prepared.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+    def bucket(key: str):
+        return F.pmod(F.xxhash64(key), F.lit(n_buckets))
+
     gm = group_matches.withColumnRenamed("block_key", "match_block_key")
     labeled = (
-        members.groupBy("block_key")
-        .cogroup(gm.groupBy("match_block_key"))
+        members.groupBy(bucket("block_key"))
+        .cogroup(gm.groupBy(bucket("match_block_key")))
         .applyInPandas(run, schema=_MEMBER_SCHEMA)
     )
     if mega_labeled is not None:

@@ -2,9 +2,10 @@
 (engine.py:210-369) as a declarative DataFrame plan:
 
     prepare (N1-N5/B1/J3)  ->  candidate pairs (B2/J1, block equi-join)
-    ->  match (J2/J4/C2, JW pandas_udf)  ->  cluster (C1/C3/C4, per-block
-    union-find)  ->  canonical + size (C5/C6, windows)  ->  [optional]
-    enrichment (E1-E6, mapInPandas over distinct canonicals)
+    ->  match (J2/J4/C2, JW pandas_udf)  ->  cluster (C1/C3/C4, union-find
+    replay, one Python call per shuffle partition)  ->  canonical + size
+    (C5/C6, windows)  ->  [optional] enrichment (E1-E6, mapInPandas over
+    distinct canonicals)
 
 Stages 1-5 are deterministic and judged; enrichment is pluggable and excluded
 from correctness (nondeterministic external I/O in the reference).
@@ -49,6 +50,18 @@ def dedup_pipeline(
     (a unique numeric key) to make ``row_order`` deterministic without a global
     sort — mandatory at scale.
     """
+    return dedup_pipeline_cached(df, name_col, config, order_col, enricher)[0]
+
+
+def dedup_pipeline_cached(
+    df: DataFrame,
+    name_col: str,
+    config: DedupConfig | None = None,
+    order_col: str | None = None,
+    enricher=None,
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """``dedup_pipeline`` plus the intermediate frames it persisted, so a
+    caller can ``unpersist()`` them once its last action has run."""
     config = config or DedupConfig()
     prepared = prepare_names(df, name_col, config, order_col=order_col)
     # Three consumers read `prepared` (distinct-base matching, block members,
@@ -58,11 +71,13 @@ def dedup_pipeline(
     # filters/projections. MEMORY_AND_DISK: spills instead of recomputing at
     # cluster scale.
     prepared = prepared.persist(StorageLevel.MEMORY_AND_DISK)
-    # Entity collapse: Jaro-Winkler scores DISTINCT base pairs per block; the
-    # per-block replay (cluster_exact) then reproduces the reference's full
-    # row-pair scan — including the order-dependent C3 confidence updates —
-    # from that collapsed input. Exactness is pinned by the golden-fixture
-    # tests and a full-vs-collapsed equivalence test.
+    # Entity collapse: Jaro-Winkler scores DISTINCT base pairs per block;
+    # cluster_exact then replays the reference's full row-pair scan —
+    # including the order-dependent C3 confidence updates — from that
+    # collapsed input, in one Python call per shuffle partition holding that
+    # partition's member and match rows (blocks above mega_block_rows route
+    # to cluster_mega_blocks instead). Exactness is pinned by the
+    # golden-fixture tests and a full-vs-collapsed equivalence test.
     matches = group_pair_matches(prepared, config)
     link_identical = (1.0 >= config.soft_threshold) or (1.0 >= config.hard_threshold)
     clustered = cluster_exact(
@@ -73,16 +88,17 @@ def dedup_pipeline(
         cc_backend=config.cc_backend,
     )
     # `elect_canonical` consumes its input twice (per-cluster aggregation +
-    # the final member join); without a persist the cogrouped union-find —
-    # the most expensive stage — would execute once per consumer. Persisting
+    # the final member join); without a persist the cogrouped replay — the
+    # most expensive stage — would execute once per consumer. Persisting
     # here pins the replay to a single execution (tests/test_plans.py asserts
     # exactly one FlatMapCoGroupsInPandas evaluation in the executed plan).
     clustered = clustered.persist(StorageLevel.MEMORY_AND_DISK)
     final = elect_canonical(clustered)
+    cols = CLUSTER_COLUMNS
     if enricher is not None:
         final = enricher.enrich(final)
-        return final.select(*CLUSTER_COLUMNS, "website", "industry")
-    return final.select(*CLUSTER_COLUMNS)
+        cols = [*CLUSTER_COLUMNS, "website", "industry"]
+    return final.select(*cols), (clustered, prepared)
 
 
 def golden_mapping(clusters: DataFrame) -> DataFrame:

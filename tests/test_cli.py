@@ -112,6 +112,29 @@ def test_cli_review_workbook(cli_outputs):
     assert [int(r["row_order"]) for r in recs] == [0, 2]
 
 
+def test_cli_releases_cached_frames(spark, tmp_path):
+    """Every frame the CLI caches for an input is released once its last
+    report is written: repeated runs in one session leave no cached RDDs."""
+    inp = tmp_path / "companies.csv"
+    with open(inp, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["idx", "company_name"])
+        for i, name in enumerate(GOLDEN_INPUT):
+            w.writerow([i, name])
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    rc = main(
+        [str(inp), str(inp), "--column", "company_name", "--order-column", "idx",
+         "--out", str(tmp_path / "o")],
+        spark=spark,
+    )
+    assert rc == 0
+    assert persistent() == before
+
+
 def test_cli_missing_column_skips_with_nonzero_rc(spark, tmp_path):
     inp = tmp_path / "bad.csv"
     inp.write_text("a,b\n1,2\n")

@@ -1,7 +1,11 @@
 """Equivalence of the entity-collapsed cluster replay against the full
 row-pair path: identical clusters, confidences, and reasons — including the
 adversarial shape that breaks naive collapses (an external row smaller than a
-group's min attaching the group's members before its star edges run)."""
+group's min attaching the group's members before its star edges run).
+
+The replay runs one Python call per shuffle partition, so every replay case
+also runs under 1 (one bucket holds every block), 3 (few buckets) and 64
+(more buckets than blocks) shuffle partitions."""
 
 from __future__ import annotations
 
@@ -18,19 +22,47 @@ from datafusion_dedup_ai_spark.operators.matching import group_pair_matches, mat
 
 COLS = ["row_order", "base_name", "cluster_id", "cluster_size",
         "canonical_name", "confidence", "reason"]
+BUCKET_COUNTS = (1, 3, 64)
 
 
-def _run_both(spark, names):
+def _per_bucket_count(spark, run):
+    """{n: run()} under each of BUCKET_COUNTS shuffle partitions, restoring
+    the conf afterwards; ``run`` must both build and collect its plan, since
+    cluster_exact reads the bucket count when the plan is built."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    out = {}
+    try:
+        for n in BUCKET_COUNTS:
+            spark.conf.set(key, str(n))
+            out[n] = run()
+    finally:
+        spark.conf.set(key, saved)
+    return out
+
+
+def _rows(df):
+    return [tuple(r[c] for c in COLS) for r in df.select(COLS).orderBy("row_order").collect()]
+
+
+def _run_both(spark, names, link_identical=True, block_key=None):
+    """The row-pair path's rows and, per bucket count, the replay's rows.
+    Without identical-base linking the row-pair path drops identical-base
+    candidate pairs, the rule the replay applies to its groups. A
+    ``block_key`` Column replaces the blocking key."""
     df = spark.createDataFrame(list(enumerate(names)), ["idx", "name"])
     cfg = DedupConfig()
     prep = prepare_names(df, "name", cfg, order_col="idx")
-    full = elect_canonical(
-        cluster_from_edges(prep, match_pairs(candidate_pairs(prep), cfg))
-    )
-    fast = elect_canonical(cluster_exact(prep, group_pair_matches(prep, cfg)))
-    f = [tuple(r[c] for c in COLS) for r in full.select(COLS).orderBy("row_order").collect()]
-    g = [tuple(r[c] for c in COLS) for r in fast.select(COLS).orderBy("row_order").collect()]
-    return f, g
+    if block_key is not None:
+        prep = prep.withColumn("block_key", block_key)
+    pairs = candidate_pairs(prep)
+    if not link_identical:
+        pairs = pairs.where(F.col("base_a") != F.col("base_b"))
+    f = _rows(elect_canonical(cluster_from_edges(prep, match_pairs(pairs, cfg))))
+    gs = _per_bucket_count(spark, lambda: _rows(elect_canonical(cluster_exact(
+        prep, group_pair_matches(prep, cfg), link_identical=link_identical
+    ))))
+    return f, gs
 
 
 def test_external_attacher_shape(spark):
@@ -38,8 +70,31 @@ def test_external_attacher_shape(spark):
     # (rows 1..3): the full scan attaches rows 1-3 via row 0 before the
     # group's internal star pairs — row 1 must NOT get the 0.98 upgrade.
     names = ["Acme Grp", "Acme Corp", "Acme Corp", "Acme Corp"]
-    f, g = _run_both(spark, names)
-    assert f == g
+    f, gs = _run_both(spark, names)
+    assert gs == {n: f for n in BUCKET_COUNTS}
+
+
+def test_replay_without_identical_links_matches_row_pairs(spark):
+    """link_identical=False: identical bases link only through a fuzzy match
+    to another group, so a group can stay split across components."""
+    names = ["Acme Corp", "Acme Grp", "Acme Corp", "Globex", "Globex",
+             "Acme Corpp", "Initech Ltd", "Initech", "Acme Corp"]
+    f, gs = _run_both(spark, names, link_identical=False)
+    assert gs == {n: f for n in BUCKET_COUNTS}
+    assert len({r[2] for r in f}) < len(f)  # some rows did link
+
+
+def test_replay_keeps_blocks_sharing_a_base_apart(spark):
+    """Blocks whose rows share base names stay apart when one call replays
+    them together: groups are keyed by block and base, not by base alone."""
+    names = ["Acme Corp", "Acme Grp", "Acme Corp", "Acme Grp", "Acme Corp",
+             "Globex", "Globex"]
+    f, gs = _run_both(
+        spark, names,
+        block_key=F.when(F.col("row_order") % 2 == 0, "even").otherwise("odd"),
+    )
+    assert gs == {n: f for n in BUCKET_COUNTS}
+    assert len({r[2] for r in f}) == 4  # even Acme, odd Acme, two Globex
 
 
 def test_mega_block_fallback_partition_matches_exact(spark):
@@ -54,23 +109,25 @@ def test_mega_block_fallback_partition_matches_exact(spark):
     cfg = DedupConfig()
     prep = prepare_names(df, "name", cfg, order_col="idx")
     matches = group_pair_matches(prep, cfg)
-    exact = cluster_exact(prep, matches)
-    routed = cluster_exact(prep, matches, max_block_rows=50)
-
-    def part(df_):
-        return {
-            r["row_order"]: r["cluster_id"]
-            for r in df_.select("row_order", "cluster_id").collect()
-        }
-
-    assert part(exact) == part(routed)
-    # the sub-threshold block must be byte-identical (exact path both times)
     small_cols = ["row_order", "cluster_id", "confidence", "reason"]
-    sm_e = [tuple(r) for r in exact.where(F.col("base_name") == "ZEBRA")
-            .select(small_cols).orderBy("row_order").collect()]
-    sm_r = [tuple(r) for r in routed.where(F.col("base_name") == "ZEBRA")
-            .select(small_cols).orderBy("row_order").collect()]
-    assert sm_e == sm_r and len(sm_e) == 3
+
+    def run(max_block_rows):
+        out = cluster_exact(prep, matches, max_block_rows=max_block_rows)
+        part = {
+            r["row_order"]: r["cluster_id"]
+            for r in out.select("row_order", "cluster_id").collect()
+        }
+        small = [tuple(r) for r in out.where(F.col("base_name") == "ZEBRA")
+                 .select(small_cols).orderBy("row_order").collect()]
+        return part, small
+
+    exact_part, sm_e = run(None)
+    assert len(sm_e) == 3
+    # the partition must equal the exact replay's, and the sub-threshold
+    # block must be byte-identical (exact path both times)
+    assert _per_bucket_count(spark, lambda: run(50)) == {
+        n: (exact_part, sm_e) for n in BUCKET_COUNTS
+    }
     # fallback requires identical-base linking semantics
     with pytest.raises(ValueError, match="link_identical"):
         cluster_exact(prep, matches, link_identical=False, max_block_rows=50)
@@ -87,8 +144,8 @@ def test_random_fuzzy_corpora(spark, seed):
         rng.choice(stems) + rng.choice(sfx)
         for _ in range(rng.randrange(30, 80))
     ]
-    f, g = _run_both(spark, names)
-    assert f == g
+    f, gs = _run_both(spark, names)
+    assert gs == {n: f for n in BUCKET_COUNTS}
 
 
 def _uf_min_labels(edges):

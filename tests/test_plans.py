@@ -109,9 +109,10 @@ def test_embedding_dedup_clusters_no_cartesian(spark, sf_dir):
 
 
 def test_dedup_clusters_single_cogroup_execution(spark, sf_dir):
-    """The per-block union-find replay (FlatMapCoGroupsInPandas) is the most
-    expensive stage of the dedup pipeline; `elect_canonical` consumes its
-    output more than once, so the pipeline persists the clustered frame.
+    """The union-find replay (FlatMapCoGroupsInPandas, one Python call per
+    shuffle partition) is the most expensive stage of the dedup pipeline;
+    `elect_canonical` consumes its output more than once, so the pipeline
+    persists the clustered frame.
     Regression gate: NO cogroup node may be reachable in the executed plan
     without crossing an InMemoryTableScan boundary — i.e. the replay runs
     only while populating the cache, exactly once."""
