@@ -168,6 +168,8 @@ def cluster_label_propagation(edges: DataFrame, max_iters: int = 50) -> DataFram
     connected component. Each iteration is two shuffles (groupBy on each
     endpoint); iterations = O(component diameter), which for name-dedup graphs
     is tiny. Used when a single component/block is too large for one task.
+    Raises RuntimeError when the labels still change after ``max_iters``
+    rounds.
     """
     # Single-scan input discipline (round-6, found by scale_probe): the
     # caller's edge list is often an UNPERSISTED candidate-generation
@@ -225,6 +227,14 @@ def cluster_label_propagation(edges: DataFrame, max_iters: int = 50) -> DataFram
         labels = upd.select("v", "label")
         if changed == 0:
             break
+    else:
+        # A partial labelling splits components silently; fail loudly, as
+        # cluster_components_star and greedy_min_id_dropped do.
+        raise RuntimeError(
+            f"label propagation did not converge in {max_iters} rounds — "
+            "a component is wider than expected; raise max_iters or use "
+            "cluster_components_star"
+        )
     return labels.select(F.col("v").alias("row_order"), F.col("label").alias("cluster_id"))
 
 

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
+
 # MinHash modulus: the largest 32-bit prime (2^32 - 5). The family is
 # h_i(x) = (a_i * x + b_i) mod MINHASH_P with a_i < 2^31, x < 2^32 — products
 # stay under 2^63 (exact in BIGINT in Spark AND DuckDB), while a_i * x wraps
@@ -140,13 +142,11 @@ def band_buckets(
     sig_col: str = "sig",
     bands: int = 16,
     rows_per_band: int = 4,
-    out_id: str | None = None,
 ) -> DataFrame:
-    """(out_id, band, bucket): one row per (doc, band), bucket =
+    """(id, band, bucket): one row per (doc, band), bucket =
     xxhash64(band's signature slice). Pure column work over (id, sig) — no
     shingle or text access, which is what lets the persisted signature index
     serve candidate generation without rescanning the corpus."""
-    out_id = out_id or id_col
     band_cols = []
     for b in range(bands):
         chunk = F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band)
@@ -154,8 +154,8 @@ def band_buckets(
             F.struct(F.lit(b).alias("band"), F.xxhash64(chunk).alias("bucket"))
         )
     return signatures.select(
-        F.col(id_col).alias(out_id), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(out_id, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
+    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
 def lsh_candidate_pairs(
@@ -166,47 +166,13 @@ def lsh_candidate_pairs(
     rows_per_band: int = 4,
 ) -> DataFrame:
     """Banded LSH: docs agreeing on ALL rows of any band become a candidate
-    pair. Emits distinct (id_a < id_b). The band bucket is the shuffle key;
-    hot buckets (boilerplate docs) are the skew to salt/cap at scale.
-
-    Round-13 (the lsh_near_pairs emit-once pattern, guide §2.4): a pair
-    agreeing in several bands used to be emitted once per band and
-    deduplicated by a global `.distinct()` — an exchange of the full
-    collision-incidence mass plus a hash aggregate over every candidate,
-    whose map-side partial agg removes ~nothing (a pair's duplicates live
-    under different (band, bucket) keys). Each exploded row now carries
-    the doc's full per-band bucket array (`bands` longs), and the
-    self-join emits a pair only at its FIRST agreeing band — unique by
-    construction, so the distinct exchange + aggregate are gone and the
-    pair SET is identical (every agreeing pair has a first agreeing
-    band)."""
-    band_hashes = [
-        F.xxhash64(F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band))
-        for b in range(bands)
-    ]
-    withb = signatures.select(
-        F.col(id_col), F.array(*band_hashes).alias("_bkts")
-    )
-    buckets = withb.select(
-        F.col(id_col), "_bkts", F.posexplode("_bkts").alias("band", "bucket")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    first_match = F.array_position(
-        F.zip_with(F.col("a._bkts"), F.col("b._bkts"), lambda x, y: x == y),
-        F.lit(True),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .where(first_match == F.col("a.band").cast("long") + F.lit(1))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+    pair — the distinct (id_a < id_b) pairs sharing a (band, bucket), from
+    ``candidates.bucket_pairs``. Hot buckets (boilerplate docs) are the skew
+    to watch at scale (see drop_hot_shingles)."""
+    return bucket_pairs(
+        band_buckets(signatures, id_col, sig_col, bands, rows_per_band),
+        ["band", "bucket"],
+        id_col,
     )
 
 
@@ -216,14 +182,16 @@ def verify_jaccard(
     id_col: str = "doc_id",
     shingles_col: str = "shingles",
     threshold: float = 0.2,
+    right: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-verify candidate pairs: join shingle sets back and compute true
     Jaccard via array intersection (candidates are few, so the per-pair
-    intersect is cheap and stays JVM-side)."""
+    intersect is cheap and stays JVM-side). ``id_b`` reads its shingles from
+    ``right`` when given (cross-set candidates), else from ``shingled``."""
     sh_a = shingled.select(
         F.col(id_col).alias("id_a"), F.col(shingles_col).alias("sh_a")
     )
-    sh_b = shingled.select(
+    sh_b = (shingled if right is None else right).select(
         F.col(id_col).alias("id_b"), F.col(shingles_col).alias("sh_b")
     )
     joined = candidates.join(sh_a, "id_a").join(sh_b, "id_b")
@@ -496,26 +464,13 @@ def simhash_near_pairs(
             )
         )
     buckets = fingerprints.select(
-        F.col(id_col), F.col(sim_col), F.explode(F.array(*chunk_cols)).alias("cc")
-    ).select(
-        id_col, sim_col, F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
+        F.col(id_col), F.explode(F.array(*chunk_cols)).alias("cc")
+    ).select(id_col, F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val"))
+    sims = fingerprints.select(id_col, sim_col)
     cands = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{sim_col}").alias("sim_a"),
-            F.col(f"b.{sim_col}").alias("sim_b"),
-        )
-        .distinct()
+        bucket_pairs(buckets, ["chunk", "val"], id_col)
+        .join(sims.withColumnsRenamed({id_col: "id_a", sim_col: "sim_a"}), "id_a")
+        .join(sims.withColumnsRenamed({id_col: "id_b", sim_col: "sim_b"}), "id_b")
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
@@ -585,32 +540,20 @@ def incremental_near_dup_matches(
     c_sigs = minhash_signatures(corpus_shingled, id_col, shingles_col, num_hashes, seed)
     b_sigs = minhash_signatures(batch_shingled, id_col, shingles_col, num_hashes, seed)
 
-    cands = (
-        band_buckets(b_sigs, id_col, "sig", bands, rows_per_band, out_id="batch_id")
-        .join(
-            band_buckets(
-                c_sigs, id_col, "sig", bands, rows_per_band, out_id="corpus_id"
-            ),
-            ["band", "bucket"],
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
+    cands = bucket_pairs(
+        band_buckets(b_sigs, id_col, "sig", bands, rows_per_band),
+        ["band", "bucket"],
+        id_col,
+        right=band_buckets(c_sigs, id_col, "sig", bands, rows_per_band),
     )
-    sh_b = batch_shingled.select(
-        F.col(id_col).alias("batch_id"), F.col(shingles_col).alias("sh_a")
-    )
-    sh_c = corpus_shingled.select(
-        F.col(id_col).alias("corpus_id"), F.col(shingles_col).alias("sh_b")
-    )
-    joined = cands.join(sh_b, "batch_id").join(sh_c, "corpus_id")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        joined.withColumn("n_common", inter.cast("bigint"))
-        .withColumn("n_union", union.cast("bigint"))
-        .withColumn("jaccard", inter.cast("double") / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("batch_id", "corpus_id", "n_common", "n_union", "jaccard")
+    return verify_jaccard(
+        cands, batch_shingled, id_col, shingles_col, threshold, right=corpus_shingled
+    ).select(
+        F.col("id_a").alias("batch_id"),
+        F.col("id_b").alias("corpus_id"),
+        "n_common",
+        "n_union",
+        "jaccard",
     )
 
 

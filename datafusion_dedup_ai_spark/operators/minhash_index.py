@@ -35,10 +35,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
 from datafusion_dedup_ai_spark.operators.dedup import (
     MINHASH_P,
     band_buckets,
     minhash_signatures,
+    verify_jaccard,
 )
 
 _META_FILE = "_index_meta.json"
@@ -192,32 +194,20 @@ def incremental_near_dup_matches_indexed(
         batch_shingled = batch_shingled.persist(StorageLevel.MEMORY_AND_DISK)
     b_sigs = minhash_signatures(batch_shingled, id_col, shingles_col, num_hashes, seed)
 
-    cands = (
-        band_buckets(b_sigs, id_col, "sig", bands, rows_per_band, out_id="batch_id")
-        .join(
-            band_buckets(
-                idx, id_col, "sig", bands, rows_per_band, out_id="corpus_id"
-            ),
-            ["band", "bucket"],
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
+    cands = bucket_pairs(
+        band_buckets(b_sigs, id_col, "sig", bands, rows_per_band),
+        ["band", "bucket"],
+        id_col,
+        right=band_buckets(idx, id_col, "sig", bands, rows_per_band),
     )
-    sh_b = batch_shingled.select(
-        F.col(id_col).alias("batch_id"), F.col(shingles_col).alias("sh_a")
-    )
-    sh_c = idx.select(
-        F.col(id_col).alias("corpus_id"), F.col(shingles_col).alias("sh_b")
-    )
-    joined = cands.join(sh_b, "batch_id").join(sh_c, "corpus_id")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        joined.withColumn("n_common", inter.cast("bigint"))
-        .withColumn("n_union", union.cast("bigint"))
-        .withColumn("jaccard", inter.cast("double") / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("batch_id", "corpus_id", "n_common", "n_union", "jaccard")
+    return verify_jaccard(
+        cands, batch_shingled, id_col, shingles_col, threshold, right=idx
+    ).select(
+        F.col("id_a").alias("batch_id"),
+        F.col("id_b").alias("corpus_id"),
+        "n_common",
+        "n_union",
+        "jaccard",
     )
 
 

@@ -412,6 +412,7 @@ def ivfpq_topk(
     to reuse one model per process — _ann_tier_frames shares them with the
     pq and ivf tiers so the five-tier report trains each driver-side model
     once."""
+    from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
     from datafusion_dedup_ai_spark.operators.similarity_search import (
         ivf_assign_cells,
         train_spherical_centroids,
@@ -426,17 +427,9 @@ def ivfpq_topk(
     )
     q_cells = ivf_assign_cells(queries, centroids, id_col, vec_col, nprobe=nprobe)
     cand = (
-        q_cells.alias("q")
-        .join(
-            c_cells.alias("c"),
-            (F.col("q.cell") == F.col("c.cell"))
-            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-        )
-        .distinct()
+        bucket_pairs(q_cells, ["cell"], id_col, right=c_cells)
+        .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"))
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
 
     books = (

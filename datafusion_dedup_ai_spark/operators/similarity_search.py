@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
+
 
 def as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -402,18 +404,9 @@ def lsh_topk(
         extra_probes=extra_probes,
     )
     cand = (
-        qb.alias("q")
-        .join(
-            cb.alias("c"),
-            (F.col("q.table") == F.col("c.table"))
-            & (F.col("q.bucket") == F.col("c.bucket"))
-            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-        )
-        .distinct()
+        bucket_pairs(qb, ["table", "bucket"], id_col, right=cb)
+        .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"))
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"),
@@ -513,155 +506,34 @@ def lsh_near_pairs(
     screen: bool | None = None,
     corpus_rows: int | None = None,
 ) -> DataFrame:
-    """Scale-safe near-duplicate pairs: LSH bucket self-join generates
-    candidates, exact cosine verifies them — no crossJoin anywhere.
+    """Scale-safe near-duplicate pairs (id_a, id_b, cosine): bucketize once
+    (one Arrow-batched matmul pass), take the distinct id_a < id_b pairs
+    sharing a (table, bucket) with ``candidates.bucket_pairs``, then verify
+    cosine >= threshold exactly on the candidates only. No crossJoin.
 
-    ``corpus_rows`` (an optional count hint; computed with one cheap
-    single-column job when omitted and needed) drives the VERIFY-JOIN
-    STRATEGY — the round-11 fix for the probe-measured payload wall. The
-    candidate frame is |candidates| skinny (id_a, id_b) rows, but joining
-    it to the vector table twice by shuffle attaches a full double[] per
-    side and re-shuffles the widened rows — at the embconst-100x corpus
-    (147M candidates) that is a ~75 GB shuffle at dim 64 and a ~600 GB
-    ENOSPC at dim 256, and it read as per-candidate cost GROWING 1.59x
-    over a decade (spill pressure), i.e. a 1.3 wall exponent on machinery
-    whose candidate count is linear. When the (id -> vector, self-dot)
-    map fits a broadcast (corpus_rows * dim * 8 bytes <= ~256 MiB), both
-    verify joins become map-side broadcast-hash joins: the candidate
-    frame never carries a payload through an exchange, per-candidate cost
-    is flat, and the verify is spill-free at any candidate volume. Beyond
-    the broadcast budget (billions of vectors at cluster scale) it falls
-    back to the shuffle join — there the SQ8 screen AUTO-ENABLES as the
-    payload lever (round 11; see ``screen``). Plan-asserted in
-    tests/test_plans.py; output identical either way (same join
-    semantics).
-    ``screen`` inserts an SQ8 exact-safe prescreen that bounds the payload
-    the verify join shuffles (see inline note); output is bit-identical
-    with the screen on or off (pinned in tests). The default (None) is
-    REGIME-DRIVEN, set by the round-11 dim-256 measurements
-    (SCALE100.json sq8_prescreen rows): auto-enable exactly when the
-    vector map is beyond the broadcast budget AND dim >= 256. The int8
-    code map's own broadcast gate is deliberately NOT part of the auto
-    rule — even when the code map must shuffle too, it is ~8x lighter
-    per candidate than the double[] payload it replaces, so the screen
-    remains the right default in that regime; the gate only decides
-    whether the phase-1 code joins broadcast or shuffle. Measured basis —
-
-    * vector map fits broadcast (embwide-10x, 60k x dim 256): the verify
-      is already payload-free map-side and the screen only adds fold work
-      (27.3s -> 50.4s at tau 0.35; 27.8s -> 76.7s at tau 0.8) — OFF;
-    * vector map beyond the budget, code map within (embwide-100x, 600k x
-      dim 256, 147M candidates): screen OFF the verify join shuffles two
-      dim-256 double[] per candidate (~600 GB) and died ENOSPC on an
-      80-GB-free box — there is no completable screen-off plan — while
-      screen ON completes (701s / 2.9M pairs at tau 0.35, 371s at tau
-      0.8) with the code joins broadcast — ON;
-    * narrow vectors beyond the budget (dim 64, round-10 embconst-100x):
-      the per-candidate fold CPU dominates and the shuffle fits disk —
-      screen on LOST at tau 0.8 (147s -> 207s) — so the auto rule also
-      requires production width (dim >= 256), where the 8x payload cut
-      dwarfs one extra int8 fold.
-
-    Shape: bucketize once (one Arrow-batched matmul pass), equi-join on
-    (table, bucket) with id_a < id_b, distinct, then exact-verify cosine >=
-    threshold on candidates only. At 100 TB the bucket join is a plain
-    shuffle on (table, bucket); candidate volume is governed by the LSH
-    OR-curve, so cost tracks the true-pair density instead of |corpus|^2.
-
-    Parameter note — THE DEFAULTS ARE FIXTURE-TUNED, NOT 100 TB DEFAULTS.
-    With n_bits=4 each table has only 2^4=16 buckets, so on weakly-clustered
-    data the self-join materializes ~n_tables * N^2 / 2^n_bits candidate
-    rows; n_bits must grow with corpus size (roughly log2(N / target bucket
-    size)) and the per-bucket population is the skew to watch. Two guards:
-
-    * ``max_bucket_size`` (off by default): drop (table, bucket) groups
-      larger than the cap before the self-join — bounds the worst bucket at
-      quadratic-in-cap instead of quadratic-in-N. A RECALL knob like
-      drop_hot_shingles: a pair only needs to co-occur in ONE surviving
-      table, so multi-table redundancy absorbs most of the loss (pinned in
+    * ``max_bucket_size`` (off by default) drops (table, bucket) groups
+      larger than the cap before the join — a recall knob (pinned in
       tests/test_similarity.py).
-    * the measured fixture curve: at threshold 0.35 the planted pairs sit at
-      cosine 0.35-0.55 — barely above the random-pair background — so
-      selectivity is intrinsically weak (16x4 gives recall ~0.93 at a ~0.64
-      candidate rate). Real embedding-model dedup runs at cosine >= 0.8
-      where per-bit collision is ~0.86 and the same operator prunes
-      aggressively; tune (n_bits up, n_tables down) with the threshold.
+    * ``corpus_rows`` (a count hint, counted when omitted) picks the verify
+      join: when the (id -> vector, self-dot) map fits a broadcast
+      (corpus_rows * dim * 8 bytes <= 256 MiB) both verify joins are
+      map-side, so candidates never carry vectors through a shuffle;
+      beyond that they shuffle. Plan-asserted in tests/test_plans.py.
+    * ``screen`` adds an SQ8 exact-safe prescreen before the verify; output
+      is bit-identical on or off (pinned in tests). The default (None)
+      enables it exactly when the vector map is beyond the broadcast budget
+      and dim >= 256.
+
+    THE DEFAULTS ARE FIXTURE-TUNED: with n_bits=4 each table has 16 buckets,
+    so candidates grow as ~n_tables * N^2 / 2^n_bits. At scale pass
+    ``lsh_bits_schedule(N)``. The measurements behind these rules are in
+    SCALE.md (rounds 6-11), SCALE100.json (sq8_prescreen rows) and
+    OPTIMIZATION_r12.md.
     """
-    if max_bucket_size is None:
-        # EMIT-ONCE candidates (round-13, round-12 verdict #3): a pair
-        # colliding in several tables used to be emitted once per collision
-        # and deduplicated by a global `distinct()` — a full exchange of the
-        # INCIDENCE mass plus a final hash aggregate over every candidate,
-        # and the map-side partial aggregate below that exchange removed
-        # ~nothing (duplicates of a pair live in different (table, bucket)
-        # groups, hence different map partitions). The bucketized rows now
-        # carry their full per-table code SIGNATURE (the `codes` array the
-        # explode already derives from — n_tables longs/row), and the
-        # self-join emits a pair ONLY at its first signature-matching
-        # table: output rows are unique by construction, so the distinct
-        # exchange + aggregate disappear outright (guide §2.4). The pair
-        # SET is identical — every colliding pair has a first matching
-        # table, and it is emitted exactly there.
-        codes = lsh_codes(corpus, id_col, vec_col, n_tables, n_bits, dim, seed)
-        b = codes.select(
-            F.col(id_col), "codes", F.posexplode("codes").alias("pos", "bucket")
-        ).select(
-            F.col(id_col), "codes", F.col("pos").cast("int").alias("table"), "bucket"
-        )
-        first_match = F.array_position(
-            F.zip_with(
-                F.col("a.codes"), F.col("b.codes"), lambda x, y: x == y
-            ),
-            F.lit(True),
-        )
-        cand = (
-            b.alias("a")
-            .join(
-                b.alias("b"),
-                (F.col("a.table") == F.col("b.table"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .where(first_match == F.col("a.table").cast("long") + F.lit(1))
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-        )
-    else:
-        # Bucket-size cap path keeps the incidence-join + distinct shape:
-        # the cap drops whole (table, bucket) groups BEFORE the join, so a
-        # pair's first SIGNATURE match may sit in a dropped bucket and the
-        # emit-once rule above would lose the pair a surviving table still
-        # vouches for. Cap semantics (recall knob, multi-table redundancy)
-        # are pinned in tests/test_similarity.py.
-        b = lsh_bucketize(corpus, id_col, vec_col, n_tables, n_bits, dim, seed)
-        # Bucket-size cap as an unbounded window count over (table, bucket):
-        # ONE pass, no separate size-aggregate job — the earlier persist +
-        # broadcast-anti-join formulation pinned the bucketized frame in
-        # executor storage for the session (never unpersisted). The window's
-        # shuffle is on the same (table, bucket) key the self-join below
-        # needs anyway, so the exchange is reused, not added.
-        w = Window.partitionBy("table", "bucket")
-        b = (
-            b.withColumn("_n", F.count("*").over(w))
-            .where(F.col("_n") <= max_bucket_size)
-            .drop("_n")
-        )
-        cand = (
-            b.alias("a")
-            .join(
-                b.alias("b"),
-                (F.col("a.table") == F.col("b.table"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
+    b = lsh_bucketize(corpus, id_col, vec_col, n_tables, n_bits, dim, seed)
+    cand = bucket_pairs(
+        b, ["table", "bucket"], id_col, max_bucket_size=max_bucket_size
+    )
     # Verify-join strategy (round-11, see docstring): broadcast the vector
     # map when it fits so candidates never carry payloads through a shuffle.
     if corpus_rows is None:
@@ -932,17 +804,9 @@ def ivf_topk(
     )
     q_cells = ivf_assign_cells(queries, centroids, id_col, vec_col, nprobe=nprobe)
     cand = (
-        q_cells.alias("q")
-        .join(
-            c_cells.alias("c"),
-            (F.col("q.cell") == F.col("c.cell"))
-            & (F.col(f"q.{id_col}") != F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"q.{id_col}").alias("query_id"),
-            F.col(f"c.{id_col}").alias("neighbor_id"),
-        )
-        .distinct()
+        bucket_pairs(q_cells, ["cell"], id_col, right=c_cells)
+        .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"))
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"),

@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
 from datafusion_dedup_ai_spark.operators.similarity_search import (
     cosine_with_norms,
     explode_codes,
@@ -224,19 +225,9 @@ def incremental_semantic_matches_indexed(
     c_buckets = explode_codes(
         idx.select(id_col, "codes"), id_col, "codes", 0, n_bits
     )
-    cands = (
-        b_buckets.alias("b")
-        .join(
-            c_buckets.alias("c"),
-            (F.col("b.table") == F.col("c.table"))
-            & (F.col("b.bucket") == F.col("c.bucket")),
-        )
-        .select(
-            F.col(f"b.{id_col}").alias("batch_id"),
-            F.col(f"c.{id_col}").alias("corpus_id"),
-        )
-        .distinct()
-    )
+    cands = bucket_pairs(
+        b_buckets, ["table", "bucket"], id_col, right=c_buckets
+    ).select(F.col("id_a").alias("batch_id"), F.col("id_b").alias("corpus_id"))
     # Self-dots precomputed per side (self_dot / cosine_with_norms, the
     # lsh_near_pairs verify pattern): bit-identical cosine, a third of the
     # per-candidate fold work.

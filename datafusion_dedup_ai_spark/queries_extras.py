@@ -4001,6 +4001,7 @@ def q_fuzzy_benchmark_contamination(
     cross-set candidates, and verification in SQL; the same residual
     2^-64 band-bucket collision caveat as minhash_near_dup_pairs."""
     from datafusion_dedup_ai_spark.operators import dedup as D
+    from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
     from datafusion_dedup_ai_spark.queries_curation import BENCHMARK_MOD
     from datafusion_dedup_ai_spark.queries_dedup_ext import (
         _JACCARD_T,
@@ -4022,18 +4023,8 @@ def q_fuzzy_benchmark_contamination(
     is_bench = F.col("doc_id") % BENCHMARK_MOD == 0
     bench_b = buckets.where(is_bench)
     train_b = buckets.where(~is_bench)
-    cand = (
-        train_b.alias("t")
-        .join(
-            F.broadcast(bench_b.alias("e")),
-            (F.col("t.band") == F.col("e.band"))
-            & (F.col("t.bucket") == F.col("e.bucket")),
-        )
-        .select(
-            F.col("t.doc_id").alias("id_a"),
-            F.col("e.doc_id").alias("id_b"),
-        )
-        .distinct()
+    cand = bucket_pairs(
+        train_b, ["band", "bucket"], "doc_id", right=F.broadcast(bench_b)
     )
     verified = D.verify_jaccard(
         cand, shingled, threshold=_JACCARD_T

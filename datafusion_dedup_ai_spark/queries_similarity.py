@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_dedup_ai_spark.operators import similarity_search as S
+from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
 from datafusion_dedup_ai_spark.registry import register
 from datafusion_dedup_ai_spark.sources.readers import load_spread, load_table
 
@@ -441,49 +442,11 @@ def q_lsh_width_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for mode, bits in (("fixed", 4), ("adaptive", S.lsh_bits_schedule(n))):
         b = S.lsh_bucketize(emb, n_tables=16, n_bits=bits, seed=7)
-        cand = (
-            b.alias("a")
-            .join(
-                b.alias("b"),
-                (F.col("a.table") == F.col("b.table"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-            )
-            .distinct()
-            .persist()
-        )
-        va = emb.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("embedding").alias("va"),
-            S.self_dot(F.col("embedding")).alias("naa"),
-        )
-        vb = emb.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("embedding").alias("vb"),
-            S.self_dot(F.col("embedding")).alias("nbb"),
-        )
-        verified = (
-            cand.join(va, "id_a")
-            .join(vb, "id_b")
-            .where(
-                S.cosine_with_norms(
-                    F.col("va"), F.col("vb"), F.col("naa"), F.col("nbb")
-                )
-                >= NEAR_DUP_THRESHOLD
-            )
-        )
-        # Fold the two scalars eagerly so cand (the 1.28M-row fixed-width
-        # frame at sf0.1) can be unpersisted HERE — a lazy plan would pin
-        # both candidate sets in cache for the session lifetime (round-6
-        # advice). Two scalar counts per mode is the documented-acceptable
-        # collect pattern.
-        n_candidates = cand.count()
-        n_pairs = verified.count()
-        cand.unpersist()
+        n_candidates = bucket_pairs(b, ["table", "bucket"], "vec_id").count()
+        n_pairs = S.lsh_near_pairs(
+            emb, threshold=NEAR_DUP_THRESHOLD, n_tables=16, n_bits=bits,
+            seed=7, corpus_rows=n,
+        ).count()
         rows.append((mode, n_candidates, n_pairs))
     return spark.createDataFrame(
         rows, "width_mode string, n_candidates bigint, n_pairs bigint"

@@ -1203,22 +1203,14 @@ def main_x100(only: set | None = None) -> None:
             from datafusion_dedup_ai_spark.operators import (
                 similarity_search as SS2,
             )
+            from datafusion_dedup_ai_spark.operators.candidates import (
+                bucket_pairs,
+            )
 
             emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
             bits = SS2.lsh_bits_schedule(emb.count())
             b = SS2.lsh_bucketize(emb, "vec_id", "embedding", 16, bits, 64, 7)
-            return (
-                b.alias("a")
-                .join(
-                    b.alias("b"),
-                    (F.col("a.table") == F.col("b.table"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col("a.vec_id") < F.col("b.vec_id")),
-                )
-                .select("a.vec_id", "b.vec_id")
-                .distinct()
-                .count()
-            )
+            return bucket_pairs(b, ["table", "bucket"], "vec_id").count()
 
         # Round-12 (round-11 verdict #4): the 2-point exponent on a ~10s
         # base is denominator noise — the two committed runs read 1.027 and

@@ -5,6 +5,9 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # lighter JVM for unit tests
+# The session's 32g default heap lets the suite's one long-lived driver grow
+# past a small host's physical memory before a full GC; the fixtures are tiny.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 # Pin the oracle-side sf so the materialized-snapshot oracle paths
 # (datafusion_dedup_ai_spark/materialize.py) agree with the sf_dir fixture.
 os.environ.setdefault("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

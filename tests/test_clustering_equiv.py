@@ -135,15 +135,25 @@ def test_mega_block_fallback_partition_matches_exact(spark):
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_fuzzy_corpora(spark, seed):
+    """Random names over stems that also fuzzy-match other stems of their
+    block (acme corp ~ acme grp, globex intl ~ globex intel, ...), so the
+    replay links distinct base names, not only identical ones."""
     rng = random.Random(seed)
-    stems = ["acme", "acme corp", "acmecorp", "globex", "globex intl",
-             "initech", "initech inc", "umbrella", "umbrela", "stark",
-             "starrk", "wayne", "wayne bros"]
+    stems = ["acme", "acme corp", "acme grp", "acmecorp", "globex",
+             "globex intl", "globex intel", "initech", "initech inc",
+             "initech intl", "umbrella", "umbrela", "stark", "starrk",
+             "stark indus", "stark indust", "wayne", "wayne bro", "wayne bros"]
     sfx = ["", " ltd", " llc", " pvt ltd", " india", " co"]
     names = [
         rng.choice(stems) + rng.choice(sfx)
         for _ in range(rng.randrange(30, 80))
     ]
+    df = spark.createDataFrame(list(enumerate(names)), ["idx", "name"])
+    prep = prepare_names(df, "name", DedupConfig(), order_col="idx")
+    cross = group_pair_matches(prep, DedupConfig()).where(
+        F.col("base_a") != F.col("base_b")
+    )
+    assert cross.count() >= 1
     f, gs = _run_both(spark, names)
     assert gs == {n: f for n in BUCKET_COUNTS}
 
@@ -216,6 +226,24 @@ def test_star_contraction_agrees_with_label_propagation(spark):
         for r in cluster_label_propagation(df).collect()
     }
     assert star == lp
+
+
+def test_label_propagation_fails_loudly_without_convergence(spark):
+    """A 9-vertex chain needs more than 3 rounds: LP raises instead of
+    returning a partial labelling, and converges under the default."""
+    from datafusion_dedup_ai_spark.operators.clustering import (
+        cluster_label_propagation,
+    )
+
+    edges = [(i, i + 1) for i in range(8)]
+    df = spark.createDataFrame(edges, ["row_order_a", "row_order_b"])
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        cluster_label_propagation(df, max_iters=3)
+    got = {
+        r["row_order"]: r["cluster_id"]
+        for r in cluster_label_propagation(df).collect()
+    }
+    assert got == {v: 0 for v in range(9)}
 
 
 def test_mega_block_star_backend_matches_exact(spark):
