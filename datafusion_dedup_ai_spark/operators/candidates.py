@@ -5,7 +5,8 @@ share a bucket key are candidates".
 ``bucket_pairs`` is that one equi-join. Each site builds its own
 ``(id, key...)`` incidence frame (``dedup.band_buckets``,
 ``similarity_search.lsh_bucketize``, ...) and hands it here; the site then
-verifies the candidates with its own exact measure.
+verifies the candidates with its exact measure (every embedding tier with
+``similarity_search.verify_cosine``).
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_dedup_ai_spark.functions import text as T
@@ -128,14 +128,6 @@ def shingle_hashes_glob() -> str:
 
 def token_hashes_glob() -> str:
     return _glob(materialize_token_hashes, token_hashes_path)
-
-
-def load_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(materialize_shingle_hashes(spark, sf_dir))
-
-
-def load_token_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(materialize_token_hashes(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -17,12 +17,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_dedup_ai_spark.operators.similarity_search import (
-    cosine_with_norms,
-    self_dot,
+    rerank_topk,
+    top_k,
 )
 
 Q_LEVELS = 127  # symmetric int8: codes in [-127, 127]
@@ -84,10 +84,7 @@ def quantized_topk(
     tiers: (query_id, neighbor_id, cosine, rk)."""
     # approx cosine: (int_dot * sa * sb) / (|a| * |b|) with norms also taken
     # from the codes — stage 1 never touches the float column. The code
-    # norms are precomputed per SIDE below the join (the self_dot pattern):
-    # inline, the pair stage folded int_dot(qvec,qvec) once per (corpus,
-    # query) pair instead of once per corpus row — same expression over the
-    # same array, so the selected candidates are bit-identical.
+    # norms are precomputed per side, as verify_cosine does with self-dots.
     qnorm = lambda qv, s: F.sqrt(int_dot(qv, qv).cast("double")) * s  # noqa: E731
     cq = quantize_int8(corpus, id_col, vec_col, out_id="neighbor_id").withColumn(
         "_cn", qnorm(F.col("qvec"), F.col("scale"))
@@ -111,43 +108,10 @@ def quantized_topk(
             / (F.col("_cn") * F.col("_qn")),
         )
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("crk", F.row_number().over(w1))
-        .where(F.col("crk") <= k * oversample)
-        .select("query_id", "neighbor_id")
-    )
-
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        self_dot(F.col(vec_col)).alias("_nqq"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        self_dot(F.col(vec_col)).alias("_ncc"),
-    )
-    rescored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("_nqq"), F.col("_ncc")
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w2).cast("bigint"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    cand = top_k(
+        scored, k * oversample, score="approx_cosine", rank="crk"
+    ).select("query_id", "neighbor_id")
+    return rerank_topk(cand, queries, corpus, id_col, vec_col, k)
 
 
 # ---------------------------------------------------------------------------
@@ -280,56 +244,6 @@ def make_adc_udf(codebooks):
     return adc_udf
 
 
-def _adc_rerank(
-    scored: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    oversample: int,
-) -> DataFrame:
-    """Shared tail of the PQ tiers: keep the top k*oversample candidates by
-    adc_score per query, then exact-re-rank them against the float vectors.
-    ``scored`` must carry (query_id, neighbor_id, adc_score)."""
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("crk", F.row_number().over(w1))
-        .where(F.col("crk") <= k * oversample)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        self_dot(F.col(vec_col)).alias("_nqq"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        self_dot(F.col(vec_col)).alias("_ncc"),
-    )
-    rescored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("_nqq"), F.col("_ncc")
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w2).cast("bigint"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
-
-
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -374,7 +288,10 @@ def pq_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc_score", adc_udf(F.col("q_vec"), F.col("codes")))
     )
-    return _adc_rerank(scored, corpus, queries, id_col, vec_col, k, oversample)
+    cand = top_k(
+        scored, k * oversample, score="adc_score", rank="crk"
+    ).select("query_id", "neighbor_id")
+    return rerank_topk(cand, queries, corpus, id_col, vec_col, k)
 
 
 def ivfpq_topk(
@@ -449,4 +366,7 @@ def ivfpq_topk(
         .join(F.broadcast(qv), "query_id")
         .withColumn("adc_score", adc_udf(F.col("q_vec"), F.col("codes")))
     )
-    return _adc_rerank(scored, corpus, queries, id_col, vec_col, k, oversample)
+    cand = top_k(
+        scored, k * oversample, score="adc_score", rank="crk"
+    ).select("query_id", "neighbor_id")
+    return rerank_topk(cand, queries, corpus, id_col, vec_col, k)

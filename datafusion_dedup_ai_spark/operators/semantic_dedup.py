@@ -128,11 +128,7 @@ def semantic_dedup(
     v = corpus.select(F.col(id_col), F.col(vec_col).alias("_v")).join(
         cells, id_col
     )
-    # Per-vector self-dots precomputed in the projections (self_dot /
-    # cosine_with_norms, the lsh_near_pairs verify pattern): the within-cell
-    # pair scan otherwise folds dot(a,a) and dot(b,b) once per PAIR
-    # (quadratic-per-cell) instead of once per vector — a third of the fold
-    # work for bit-identical cosines, so the oracle mirror is unchanged.
+    # Self-dots precomputed per side, as in verify_cosine.
     a = v.select(
         F.col("cell"),
         F.col(id_col).alias("id_a"),

@@ -56,10 +56,85 @@ def self_dot(a: Column) -> Column:
 
 def cosine_with_norms(a: Column, b: Column, aa: Column, bb: Column) -> Column:
     """``cosine`` with the two self-dots supplied from precomputed columns
-    (see self_dot). Round-6: the verify stage of lsh_near_pairs folded
-    dot(a,a)/dot(b,b) once PER CANDIDATE PAIR (815k pairs at sf0.1) rather
-    than per corpus vector (2k) — 3x the fold work for identical bits."""
+    (see self_dot): the pair stage folds only dot(a, b)."""
     return dot_fold(as_double(a), as_double(b)) / (F.sqrt(aa) * F.sqrt(bb))
+
+
+def verify_cosine(
+    pairs: DataFrame,
+    left: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float | None = None,
+    right: DataFrame | None = None,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """(a, b, cosine): the exact cosine of every candidate pair in ``pairs``.
+
+    ``a``'s vector comes from ``left`` and ``b``'s from ``right`` (default
+    ``left``), each keyed by ``id_col``. Each side is projected once with
+    its self_dot, so the pair stage folds only dot(a, b): a third of the
+    per-pair fold work, and the same bits as the inline ``cosine``, so the
+    oracle mirrors match bitwise. Pairs below ``threshold`` are dropped
+    when it is given. Pass ``F.broadcast(frame)`` as a side to make its
+    join map-side; the hint carries through the projection.
+    """
+
+    def side(df: DataFrame, key: str, v: str, n: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(key),
+            F.col(vec_col).alias(v),
+            self_dot(F.col(vec_col)).alias(n),
+        )
+
+    scored = (
+        pairs.join(side(left, a, "_va", "_naa"), a)
+        .join(side(left if right is None else right, b, "_vb", "_nbb"), b)
+        .withColumn(
+            "cosine",
+            cosine_with_norms(
+                F.col("_va"), F.col("_vb"), F.col("_naa"), F.col("_nbb")
+            ),
+        )
+    )
+    if threshold is not None:
+        scored = scored.where(F.col("cosine") >= threshold)
+    return scored.select(a, b, "cosine")
+
+
+def top_k(
+    scored: DataFrame,
+    k: int,
+    score: str = "cosine",
+    key: str = "query_id",
+    tie: str = "neighbor_id",
+    rank: str = "rk",
+) -> DataFrame:
+    """The ``k`` best rows of ``scored`` per ``key``, ranked by (``score``
+    desc, ``tie`` asc), with the bigint 1-based ``rank`` column appended."""
+    w = Window.partitionBy(key).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return scored.withColumn(rank, F.row_number().over(w).cast("bigint")).where(
+        F.col(rank) <= k
+    )
+
+
+def rerank_topk(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rk): the exact re-rank every ANN tier
+    ends with. ``cand`` holds (query_id, neighbor_id); the query side is
+    broadcast, since the query set is small at any corpus size."""
+    scored = verify_cosine(
+        cand, F.broadcast(queries), id_col, vec_col,
+        right=corpus, a="query_id", b="neighbor_id",
+    )
+    return top_k(scored, k)
 
 
 def brute_force_topk(
@@ -71,13 +146,8 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query: broadcast the (small) query set,
     score every corpus vector, keep k by (cosine desc, id asc). At cluster
-    scale the corpus stays partitioned; only queries move.
-
-    Self-dots are precomputed per SIDE in the projections below the join
-    (self_dot / cosine_with_norms): the pair stage otherwise folds
-    dot(q,q) and dot(c,c) once per (query, corpus) PAIR — |queries| x the
-    necessary fold work on the corpus side. Bit-identical cosine, so the
-    oracle mirrors are unchanged."""
+    scale the corpus stays partitioned; only queries move. Self-dots are
+    precomputed per side, as in verify_cosine."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -98,14 +168,7 @@ def brute_force_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return top_k(scored, k).select("query_id", "neighbor_id", "cosine", "rk")
 
 
 def _hyperplanes(n_tables: int, n_bits: int, dim: int, seed: int) -> np.ndarray:
@@ -408,34 +471,7 @@ def lsh_topk(
         .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"))
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        self_dot(F.col(vec_col)).alias("_nqq"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        self_dot(F.col(vec_col)).alias("_ncc"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("_nqq"), F.col("_ncc")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return rerank_topk(cand, queries, corpus, id_col, vec_col, k)
 
 
 def near_duplicate_embeddings(
@@ -463,12 +499,11 @@ def near_duplicate_embeddings(
                 "+ exact verify) at this scale, or raise max_rows explicitly "
                 "if a quadratic baseline on this corpus is intended"
             )
-    # Per-vector self-dots precomputed (see cosine_with_norms): the N^2
-    # pair stage folds only dot(a,b) — a third of the fold work, same bits.
-    # The stream side is repartitioned to the session's parallelism: a
-    # bounded-fixture corpus is one or two parquet splits, so the
-    # nested-loop pair evaluation otherwise runs on 1-2 cores (measured
-    # 20s -> ~2s at sf0.1 on local[32]).
+    # Self-dots precomputed per side, as in verify_cosine. The stream side
+    # is repartitioned to the session's parallelism: a bounded-fixture
+    # corpus is one or two parquet splits, so the nested-loop pair
+    # evaluation otherwise runs on 1-2 cores (measured 20s -> ~2s at sf0.1
+    # on local[32]).
     a = corpus.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
@@ -534,14 +569,11 @@ def lsh_near_pairs(
     cand = bucket_pairs(
         b, ["table", "bucket"], id_col, max_bucket_size=max_bucket_size
     )
-    # Verify-join strategy (round-11, see docstring): broadcast the vector
-    # map when it fits so candidates never carry payloads through a shuffle.
+    # Verify-join strategy (see docstring): broadcast the vector map when it
+    # fits so candidates never carry payloads through a shuffle.
     if corpus_rows is None:
         corpus_rows = corpus.select(id_col).count()
     bcast = corpus_rows * dim * 8 <= 256 * 1024 * 1024
-
-    def _vec_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast else df
 
     # The SCREEN's phase-1 joins carry int8 CODES (1 B/dim + ~48 B of
     # scale/asum/norm meta), not double[] vectors — an ~8x smaller map that
@@ -642,30 +674,8 @@ def lsh_near_pairs(
             )
             .select("id_a", "id_b")
         )
-    # Self-dots precomputed per corpus VECTOR (see cosine_with_norms):
-    # bit-identical cosine, a third of the per-pair fold work.
-    va = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        self_dot(F.col(vec_col)).alias("naa"),
-    )
-    vb = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        self_dot(F.col(vec_col)).alias("nbb"),
-    )
-    return (
-        cand.join(_vec_side(va), "id_a")
-        .join(_vec_side(vb), "id_b")
-        .withColumn(
-            "cosine",
-            cosine_with_norms(
-                F.col("va"), F.col("vb"), F.col("naa"), F.col("nbb")
-            ),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    vecs = F.broadcast(corpus) if bcast else corpus
+    return verify_cosine(cand, vecs, id_col, vec_col, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -808,31 +818,4 @@ def ivf_topk(
         .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"))
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        self_dot(F.col(vec_col)).alias("_nqq"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        self_dot(F.col(vec_col)).alias("_ncc"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("_nqq"), F.col("_ncc")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return rerank_topk(cand, queries, corpus, id_col, vec_col, k)

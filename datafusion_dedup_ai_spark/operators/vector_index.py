@@ -40,10 +40,9 @@ from pyspark.sql import functions as F
 
 from datafusion_dedup_ai_spark.operators.candidates import bucket_pairs
 from datafusion_dedup_ai_spark.operators.similarity_search import (
-    cosine_with_norms,
     explode_codes,
     lsh_codes,
-    self_dot,
+    verify_cosine,
 )
 
 _META_FILE = "_index_meta.json"
@@ -228,30 +227,9 @@ def incremental_semantic_matches_indexed(
     cands = bucket_pairs(
         b_buckets, ["table", "bucket"], id_col, right=c_buckets
     ).select(F.col("id_a").alias("batch_id"), F.col("id_b").alias("corpus_id"))
-    # Self-dots precomputed per side (self_dot / cosine_with_norms, the
-    # lsh_near_pairs verify pattern): bit-identical cosine, a third of the
-    # per-candidate fold work.
-    bv = batch_emb.select(
-        F.col(id_col).alias("batch_id"),
-        F.col(vec_col).alias("bv"),
-        self_dot(F.col(vec_col)).alias("_nbb"),
-    )
-    cv = idx.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("cv"),
-        self_dot(F.col(vec_col)).alias("_ncc"),
-    )
-    return (
-        cands.join(bv, "batch_id")
-        .join(cv, "corpus_id")
-        .withColumn(
-            "cosine",
-            cosine_with_norms(
-                F.col("bv"), F.col("cv"), F.col("_nbb"), F.col("_ncc")
-            ),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("batch_id", "corpus_id", "cosine")
+    return verify_cosine(
+        cands, batch_emb, id_col, vec_col, threshold,
+        right=idx, a="batch_id", b="corpus_id",
     )
 
 

@@ -1804,9 +1804,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical plan surgery as cosine_topk -> ann_topk_tiers, so the exact
     query stays the graded baseline."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # Self-dots precomputed per side (self_dot / cosine_with_norms):
-    # bit-identical cosine, a third of the per-pair fold work on the
-    # corpus-x-queries scoring scan.
+    # Self-dots precomputed per side, as in S.verify_cosine.
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
@@ -1819,8 +1817,6 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cv"),
         S.self_dot(F.col("embedding")).alias("_ncc"),
     )
-    from pyspark.sql import Window
-
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("negative_label") != F.col("q_label"))
@@ -1831,12 +1827,8 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id").asc()
-    )
     return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= HARD_NEG_K)
+        S.top_k(scored, HARD_NEG_K, tie="negative_id")
         .select(
             "query_id",
             "negative_id",

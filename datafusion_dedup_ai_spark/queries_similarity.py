@@ -337,25 +337,17 @@ def q_embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup composite, scale-safe: LSH-candidate near-pairs
     (bucket equi-join + exact cosine >= 0.35 verify, operators/
     similarity_search.lsh_near_pairs — no crossJoin in the plan, asserted in
-    tests/test_plans.py) -> hash-min label propagation -> (vec_id,
-    cluster_id, cluster_size). Singletons keep their own id with size 1.
-    Hash-gated since round 5: the oracle replays bucket-join candidates +
-    the bitwise-mirrored cosine verify + recursive-CTE connected components
-    from the materialized hyperplane-bucket fixture; edge recall vs the
-    exact quadratic reference and component equivalence vs driver-side
-    union-find stay pinned in tests/test_similarity.py.
-
-    Round-12: components route through the SIZE ROUTER
-    (cluster_components_auto — the incremental_cluster_update pattern)
-    instead of unconditional label propagation: near-dup edge lists are
-    pair-density-bounded, and at bench scale (3,270 edges at sf0.1) LP's
-    per-iteration shuffle rounds + convergence count jobs were ~5s of the
-    10s query for a graph one task labels in milliseconds. Beyond the
-    2M-edge threshold the router still takes the LP scale path, so the
-    100 TB story is unchanged; both backends emit cluster_id =
-    min(vec_id) per component, so the hash gate is untouched (measured
-    identical; backend equivalence pinned in
-    tests/test_clustering_equiv.py)."""
+    tests/test_plans.py) -> connected components by the size router
+    (clustering.cluster_components_auto: single-task union-find up to 2M
+    edges, label propagation beyond) -> (vec_id, cluster_id = component
+    min vec_id, cluster_size). Singletons keep their own id with size 1.
+    The oracle replays bucket-join candidates + the bitwise-mirrored cosine
+    verify + recursive-CTE connected components from the materialized
+    hyperplane-bucket fixture; edge recall vs the exact quadratic reference
+    and component equivalence vs driver-side union-find are pinned in
+    tests/test_similarity.py, backend equivalence in
+    tests/test_clustering_equiv.py. Router measurements: OPTIMIZATION_r12.md
+    §1."""
     from datafusion_dedup_ai_spark.operators.clustering import (
         cluster_components_auto,
     )

@@ -74,11 +74,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_input(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
     """S1/S2 dispatch by extension (reference app.py:85-88)."""
     lower = path.lower()

@@ -18,10 +18,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
-
-
 def write_reports_parquet(reports: dict[str, DataFrame], out_dir: str) -> dict[str, str]:
     """The O7 multi-report sink, scalable form: one parquet dataset per report
     (clusters / canonical_summary / golden_mapping / review / stats)."""

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -538,3 +541,147 @@ def test_lsh_near_pairs_auto_screen_policy(spark, emb):
     wide.unpersist()
     assert auto == off
     assert auto, "widened fixture should still have pairs at tau=0.35"
+
+
+# ---------------------------------------------------------------------------
+# verify_cosine / top_k: the one verify and the one ranker of every tier
+# ---------------------------------------------------------------------------
+
+
+def _f32_vectors(rng, ids, dim=8):
+    """id -> vector of float32-representable values, so the Python floats
+    are exactly what an array<float> column holds."""
+    return {
+        i: [float(np.float32(rng.gauss(0.0, 1.0))) for _ in range(dim)]
+        for i in ids
+    }
+
+
+def _ref_cosine(u, v):
+    """Left-fold reference in the order the Spark fold evaluates."""
+    dot = aa = bb = 0.0
+    for x, y in zip(u, v):
+        dot = dot + x * y
+    for x in u:
+        aa = aa + x * x
+    for y in v:
+        bb = bb + y * y
+    return dot / (math.sqrt(aa) * math.sqrt(bb))
+
+
+def _vec_frame(spark, vecs, id_col="vec_id"):
+    return spark.createDataFrame(
+        sorted(vecs.items()), f"{id_col} bigint, embedding array<float>"
+    )
+
+
+def _verified(df, a="id_a", b="id_b"):
+    rows = [(r[a], r[b], r["cosine"]) for r in df.collect()]
+    assert len(rows) == len({(x, y) for x, y, _ in rows})
+    return {(x, y): c for x, y, c in rows}
+
+
+def test_verify_cosine_self_mode_is_bit_exact(spark):
+    rng = random.Random(5)
+    vecs = _f32_vectors(rng, range(12))
+    pairs = [(i, j) for i in range(12) for j in range(12) if i != j and rng.random() < 0.4]
+    want = {(i, j): _ref_cosine(vecs[i], vecs[j]) for i, j in pairs}
+    got = _verified(
+        S.verify_cosine(
+            spark.createDataFrame(pairs, "id_a bigint, id_b bigint"),
+            _vec_frame(spark, vecs),
+            "vec_id",
+            "embedding",
+        )
+    )
+    assert got == want
+
+
+def test_verify_cosine_cross_mode_takes_each_side_from_its_frame(spark):
+    """batch and corpus ids are separate id spaces: the same id names
+    different vectors on the two sides, and a's vector must come from the
+    left frame, b's from the right."""
+    rng = random.Random(6)
+    batch = _f32_vectors(rng, range(5))
+    corpus = _f32_vectors(rng, range(3, 15))
+    pairs = [(i, j) for i in batch for j in corpus if rng.random() < 0.5]
+    assert any(i == j for i, j in pairs)
+    want = {(i, j): _ref_cosine(batch[i], corpus[j]) for i, j in pairs}
+    got = _verified(
+        S.verify_cosine(
+            spark.createDataFrame(pairs, "batch_id bigint, corpus_id bigint"),
+            _vec_frame(spark, batch),
+            "vec_id",
+            "embedding",
+            right=_vec_frame(spark, corpus),
+            a="batch_id",
+            b="corpus_id",
+        ),
+        "batch_id",
+        "corpus_id",
+    )
+    assert got == want
+
+
+def test_verify_cosine_keeps_a_pair_exactly_at_threshold(spark):
+    rng = random.Random(7)
+    vecs = _f32_vectors(rng, range(10))
+    pairs = [(i, j) for i in range(10) for j in range(i + 1, 10)]
+    cos = {p: _ref_cosine(vecs[p[0]], vecs[p[1]]) for p in pairs}
+    at = sorted(cos.values())[len(cos) // 2]
+    got = _verified(
+        S.verify_cosine(
+            spark.createDataFrame(pairs, "id_a bigint, id_b bigint"),
+            _vec_frame(spark, vecs),
+            "vec_id",
+            "embedding",
+            threshold=at,
+        )
+    )
+    assert at in got.values()
+    assert got == {p: c for p, c in cos.items() if c >= at}
+
+
+def test_verify_cosine_broadcast_hint_carries_through(spark):
+    """With size-based broadcasting off, only the hint on the passed side
+    can make the verify joins broadcasts."""
+    rng = random.Random(8)
+    vecs = _f32_vectors(rng, range(8))
+    pairs = spark.createDataFrame(
+        [(i, j) for i in range(8) for j in range(i + 1, 8)],
+        "id_a bigint, id_b bigint",
+    )
+    left = _vec_frame(spark, vecs)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plans = {}
+        for hinted in (False, True):
+            out = S.verify_cosine(
+                pairs, F.broadcast(left) if hinted else left, "vec_id", "embedding"
+            )
+            assert len(_verified(out)) == 28
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            plans[hinted] = plan.split("== Initial Plan ==")[0]
+    finally:
+        spark.conf.set(key, saved)
+    assert "BroadcastHashJoin" not in plans[False]
+    assert plans[True].count("BroadcastHashJoin") == 2  # both sides
+
+
+def test_top_k_breaks_ties_by_id_and_keeps_small_groups(spark):
+    scored = spark.createDataFrame(
+        [
+            (1, 9, 0.5), (1, 3, 0.5), (1, 7, 0.9), (1, 5, 0.5), (1, 4, 0.1),
+            (2, 8, 0.2), (2, 6, 0.2),
+        ],
+        "query_id bigint, neighbor_id bigint, cosine double",
+    )
+    out = S.top_k(scored, 3)
+    assert dict(out.dtypes)["rk"] == "bigint"
+    got = {(r["query_id"], r["neighbor_id"]): r["rk"] for r in out.collect()}
+    # query 1: the 0.5 tie resolves by ascending id, 9 and 4 fall past k;
+    # query 2 has fewer rows than k and keeps them all
+    assert got == {(1, 7): 1, (1, 3): 2, (1, 5): 3, (2, 6): 1, (2, 8): 2}
+
