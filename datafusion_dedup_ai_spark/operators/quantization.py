@@ -108,9 +108,9 @@ def quantized_topk(
             / (F.col("_cn") * F.col("_qn")),
         )
     )
-    cand = top_k(
-        scored, k * oversample, score="approx_cosine", rank="crk"
-    ).select("query_id", "neighbor_id")
+    cand = top_k(scored, k * oversample, score="approx_cosine").select(
+        "query_id", "neighbor_id"
+    )
     return rerank_topk(cand, queries, corpus, id_col, vec_col, k)
 
 
@@ -288,9 +288,9 @@ def pq_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc_score", adc_udf(F.col("q_vec"), F.col("codes")))
     )
-    cand = top_k(
-        scored, k * oversample, score="adc_score", rank="crk"
-    ).select("query_id", "neighbor_id")
+    cand = top_k(scored, k * oversample, score="adc_score").select(
+        "query_id", "neighbor_id"
+    )
     return rerank_topk(cand, queries, corpus, id_col, vec_col, k)
 
 
@@ -366,7 +366,7 @@ def ivfpq_topk(
         .join(F.broadcast(qv), "query_id")
         .withColumn("adc_score", adc_udf(F.col("q_vec"), F.col("codes")))
     )
-    cand = top_k(
-        scored, k * oversample, score="adc_score", rank="crk"
-    ).select("query_id", "neighbor_id")
+    cand = top_k(scored, k * oversample, score="adc_score").select(
+        "query_id", "neighbor_id"
+    )
     return rerank_topk(cand, queries, corpus, id_col, vec_col, k)

@@ -107,15 +107,16 @@ def top_k(
     scored: DataFrame,
     k: int,
     score: str = "cosine",
-    key: str = "query_id",
     tie: str = "neighbor_id",
-    rank: str = "rk",
 ) -> DataFrame:
-    """The ``k`` best rows of ``scored`` per ``key``, ranked by (``score``
-    desc, ``tie`` asc), with the bigint 1-based ``rank`` column appended."""
-    w = Window.partitionBy(key).orderBy(F.col(score).desc(), F.col(tie).asc())
-    return scored.withColumn(rank, F.row_number().over(w).cast("bigint")).where(
-        F.col(rank) <= k
+    """The ``k`` best rows of ``scored`` per ``query_id``, ranked by
+    (``score`` desc, ``tie`` asc), with the bigint 1-based ``rk`` column
+    appended."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col(tie).asc()
+    )
+    return scored.withColumn("rk", F.row_number().over(w).cast("bigint")).where(
+        F.col("rk") <= k
     )
 
 
