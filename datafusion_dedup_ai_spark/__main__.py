@@ -13,13 +13,19 @@ Per input file (csv/xlsx, format-dispatched like the reference):
    engine_test.py:14-16); a file missing the requested column is warned
    about and skipped, not fatal (app.py:91-92);
 2. run the full dedup pipeline (plans.pipeline.dedup_pipeline);
-3. write the reference's three workbooks (outputs.py:22-59) into --out
+3. pull the clusters sheet to the driver with ONE ``toPandas`` — the only
+   action on the pipeline's result — and derive the other sheets from it
+   in pandas, as the reference does from its one result frame
+   (outputs.py:22-66); write the reference's three workbooks into --out
    (default: the input file's directory, engine_test.py:21-22):
    company_duplicates_final.xlsx (clusters + canonical_summary + settings
    sheets), golden_mapping.xlsx (mapping), high_confidence_review.xlsx
    (review) — with one input the reference's exact filenames, with several
    the per-file names app.py uses (dedup_final_<name>.xlsx, ...);
-4. print the stats quadruple (engine_test.py:25-28).
+4. print the stats quadruple (engine_test.py:25-28), derived from the same
+   pulled frame.
+
+Each input's Spark jobs carry the description ``dedup <file name>``.
 
 ``--order-column``: a unique numeric key making row_order deterministic
 without a global sort (mandatory at scale — see operators/blocking.py
@@ -41,6 +47,9 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+
+# the Spark local property setJobDescription writes
+_JOB_DESCRIPTION = "spark.job.description"
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -202,53 +211,69 @@ def curate_main(argv: list[str], spark=None) -> int:
             spark.stop()
 
 
-def _write_reports(spark, clusters, config, out_dir: str, names) -> None:
-    """Write the three workbooks for one input and print its stats."""
-    from datafusion_dedup_ai_spark.plans.pipeline import (
-        canonical_summary,
-        golden_mapping,
-        high_confidence_review,
-        run_stats,
-    )
+# Reference clusters-sheet projection (outputs.py:23-24) — block_key is
+# internal and stays out of the workbook.
+SHEET_COLUMNS = [
+    "row_order",
+    "original_name",
+    "normalized_name",
+    "base_name",
+    "cluster_id",
+    "cluster_size",
+    "canonical_name",
+    "confidence",
+    "reason",
+]
+
+
+def _write_reports(clusters, config, out_dir: str, names) -> None:
+    """Write the three workbooks for one input and print its stats.
+
+    The clusters sheet is pulled once; every other sheet and the stats are
+    pandas derivations of it, each equal to its Spark form in
+    plans/pipeline.py (canonical_summary, golden_mapping,
+    high_confidence_review, run_stats — pinned by tests/test_cli.py)."""
+    import pandas as pd
+
     from datafusion_dedup_ai_spark.sources.sinks import (
-        settings_sheet,
+        SETTINGS_COLUMNS,
+        settings_rows,
         write_xlsx_bytes,
     )
 
-    # Reference clusters-sheet projection (outputs.py:23-24) —
-    # block_key is internal and stays out of the workbook.
-    sheet_cols = [
-        "row_order",
-        "original_name",
-        "normalized_name",
-        "base_name",
-        "cluster_id",
-        "cluster_size",
-        "canonical_name",
-        "confidence",
-        "reason",
-    ]
+    sheet = clusters.select(*SHEET_COLUMNS).toPandas()
+    # dropna=False keeps a null canonical_name group, as Spark's groupBy does
+    summary = (
+        sheet.groupby(["cluster_id", "canonical_name"], sort=False, dropna=False)
+        .size()
+        .reset_index(name="count")
+    )
+    # pandas turns a null group key into NaN; the sheet writes None as empty
+    canon = summary["canonical_name"]
+    summary["canonical_name"] = canon.where(canon.notna(), None)
+    multi = sheet["cluster_size"] >= 2
+    review = multi & (sheet["confidence"] >= 0.95)
     write_xlsx_bytes(
         {
-            "clusters": clusters.select(*sheet_cols),
-            "canonical_summary": canonical_summary(clusters),
-            "settings": settings_sheet(config, spark),
+            "clusters": sheet,
+            "canonical_summary": summary,
+            "settings": pd.DataFrame(settings_rows(config), columns=SETTINGS_COLUMNS),
         },
         out_dir,
         names[0],
     )
-    write_xlsx_bytes({"mapping": golden_mapping(clusters)}, out_dir, names[1])
     write_xlsx_bytes(
-        {"review": high_confidence_review(clusters).select(*sheet_cols)},
-        out_dir,
-        names[2],
+        {"mapping": sheet[["original_name", "canonical_name"]]}, out_dir, names[1]
     )
-    s = run_stats(clusters).collect()[0]
+    write_xlsx_bytes(
+        {"review": sheet[review].sort_values("row_order")}, out_dir, names[2]
+    )
     print("\nProcessing Complete!")
-    print(f"Total Rows: {s['total_rows']}")
-    print(f"Total Clusters: {s['total_clusters']}")
-    print(f"Multi-record Clusters: {s['multi_record_clusters']}")
-    print(f"High-confidence Review Rows: {s['high_confidence_review_rows']}")
+    print(f"Total Rows: {len(sheet)}")
+    print(f"Total Clusters: {sheet['cluster_id'].nunique()}")
+    # counts ROWS in size>=2 clusters, the reference's misnomer (run_stats)
+    print(f"Multi-record Clusters: {int(multi.sum())}")
+    print(f"High-confidence Review Rows: {int(review.sum())}")
     print(f"Reports written to: {out_dir}")
 
 
@@ -259,8 +284,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     if argv and argv[0] == "curate":
         return curate_main(argv[1:], spark)
     args = _build_parser().parse_args(argv)
-
-    from pyspark import StorageLevel
 
     from datafusion_dedup_ai_spark.config import DedupConfig
     from datafusion_dedup_ai_spark.plans.pipeline import dedup_pipeline_cached
@@ -278,42 +301,46 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     owns_session = spark is None
     if owns_session:
         spark = build_session(app_name="dedup-cli")
+    sc = spark.sparkContext
     single = len(args.inputs) == 1
     rc = 0
     try:
         for path in args.inputs:
-            print(f"Loading file: {path}")
-            df = read_input(spark, path)
-            column = args.column or first_string_column(df)
-            if column not in df.columns:
-                print(
-                    f"Skipping {path}: column {column!r} not found.",
-                    file=sys.stderr,
-                )
-                rc = 1
-                continue
-            out_dir = args.out or os.path.dirname(os.path.abspath(path))
-            os.makedirs(out_dir, exist_ok=True)
             stem = os.path.basename(path)
-            names = (
-                ("company_duplicates_final.xlsx", "golden_mapping.xlsx",
-                 "high_confidence_review.xlsx")
-                if single
-                else (f"dedup_final_{stem}.xlsx", f"golden_{stem}.xlsx",
-                      f"review_{stem}.xlsx")
-            )
-            clusters, cached = dedup_pipeline_cached(
-                df, column, config, order_col=args.order_column
-            )
-            # Every sheet and the stats read `clusters`; persisting it runs
-            # the pipeline once. It and the pipeline's own cached frames are
-            # released after the last action.
-            clusters = clusters.persist(StorageLevel.MEMORY_AND_DISK)
+            prev_description = sc.getLocalProperty(_JOB_DESCRIPTION)
+            sc.setJobDescription(f"dedup {stem}")
             try:
-                _write_reports(spark, clusters, config, out_dir, names)
+                print(f"Loading file: {path}")
+                df = read_input(spark, path)
+                column = args.column or first_string_column(df)
+                if column not in df.columns:
+                    print(
+                        f"Skipping {path}: column {column!r} not found.",
+                        file=sys.stderr,
+                    )
+                    rc = 1
+                    continue
+                out_dir = args.out or os.path.dirname(os.path.abspath(path))
+                os.makedirs(out_dir, exist_ok=True)
+                names = (
+                    ("company_duplicates_final.xlsx", "golden_mapping.xlsx",
+                     "high_confidence_review.xlsx")
+                    if single
+                    else (f"dedup_final_{stem}.xlsx", f"golden_{stem}.xlsx",
+                          f"review_{stem}.xlsx")
+                )
+                clusters, cached = dedup_pipeline_cached(
+                    df, column, config, order_col=args.order_column
+                )
+                # the one pull in _write_reports is the last action on the
+                # frames the pipeline cached
+                try:
+                    _write_reports(clusters, config, out_dir, names)
+                finally:
+                    for d in cached:
+                        d.unpersist()
             finally:
-                for d in (clusters, *cached):
-                    d.unpersist()
+                sc.setLocalProperty(_JOB_DESCRIPTION, prev_description)
     finally:
         if owns_session:
             spark.stop()

@@ -1,7 +1,8 @@
 """Sinks (O7 + friends). The reference writes three xlsx workbooks via
 openpyxl (outputs.py:9-20, 44-58); here the scalable sinks are native
 partitioned parquet/CSV writers, with xlsx kept as a driver-side convenience
-for config-sized results (gated on openpyxl, absent in this container).
+for config-sized results: pandas/openpyxl when openpyxl is installed, else
+the stdlib OOXML writer (sources/xlsx_lite.py).
 """
 
 from __future__ import annotations
@@ -29,27 +30,31 @@ def write_reports_parquet(reports: dict[str, DataFrame], out_dir: str) -> dict[s
     return paths
 
 
-def write_xlsx_driver_side(reports: dict[str, DataFrame], path) -> None:
+def write_xlsx_driver_side(reports: dict, path) -> None:
     """O7: reference-parity multi-sheet xlsx sink (outputs.py:44-58),
     driver-side — results after dedup are config-sized; the scalable sink is
-    write_reports_parquet. Uses pandas/openpyxl when available, else the
+    write_reports_parquet. Each sheet is a pandas frame or a Spark frame
+    (pulled with ``toPandas``). Uses pandas/openpyxl when available, else the
     stdlib OOXML writer (sources/xlsx_lite.py) — no environment gate.
     ``path`` may be a filesystem path OR any binary file-like object (both
     pd.ExcelWriter and the zipfile-backed lite writer accept either)."""
     import pandas as pd
+
+    def as_pandas(df) -> pd.DataFrame:
+        return df if isinstance(df, pd.DataFrame) else df.toPandas()
 
     try:
         import openpyxl  # noqa: F401
 
         with pd.ExcelWriter(path, engine="openpyxl") as writer:
             for sheet, df in reports.items():
-                df.toPandas().to_excel(writer, sheet_name=sheet[:31], index=False)
+                as_pandas(df).to_excel(writer, sheet_name=sheet[:31], index=False)
     except ImportError:
         from datafusion_dedup_ai_spark.sources.xlsx_lite import write_xlsx
 
         sheets: dict[str, list[list]] = {}
         for sheet, df in reports.items():
-            pdf = df.toPandas()
+            pdf = as_pandas(df)
             rows: list[list] = [list(map(str, pdf.columns))]
             for rec in pdf.itertuples(index=False):
                 rows.append([None if v is None else v for v in rec])
@@ -57,7 +62,7 @@ def write_xlsx_driver_side(reports: dict[str, DataFrame], path) -> None:
         write_xlsx(path, sheets)
 
 
-def write_xlsx_bytes(reports: dict[str, DataFrame], out_dir: str | None = None, filename: str = "report.xlsx"):
+def write_xlsx_bytes(reports: dict, out_dir: str | None = None, filename: str = "report.xlsx"):
     """O7 in-memory form (reference outputs.py:9-20: save_xlsx renders each
     workbook into a BytesIO FIRST — the UI serves downloads from the buffer —
     and only optionally copies it to disk). Returns the rewound buffer;
@@ -75,11 +80,15 @@ def write_xlsx_bytes(reports: dict[str, DataFrame], out_dir: str | None = None, 
     return buf
 
 
-def settings_sheet(config, spark) -> DataFrame:
-    """O3: audit sheet of the run configuration (outputs.py:32-42)."""
+SETTINGS_COLUMNS = ["Setting", "Value"]
+
+
+def settings_rows(config) -> list[tuple[str, str]]:
+    """O3: the (Setting, Value) rows auditing the run configuration
+    (outputs.py:32-42)."""
     from datafusion_dedup_ai_spark.config import COUNTRY_TOKENS, LEGAL_SUFFIXES
 
-    rows = [
+    return [
         ("hard_threshold", str(config.hard_threshold)),
         ("soft_threshold", str(config.soft_threshold)),
         ("no_subsidiary_fold", str(config.no_subsidiary_fold)),
@@ -90,4 +99,8 @@ def settings_sheet(config, spark) -> DataFrame:
         ("acronym_map_size", str(len(config.acronym_map))),
         ("max_block_size", str(config.max_block_size)),
     ]
-    return spark.createDataFrame(rows, ["Setting", "Value"])
+
+
+def settings_sheet(config, spark) -> DataFrame:
+    """O3: the settings_rows audit sheet as a Spark frame."""
+    return spark.createDataFrame(settings_rows(config), SETTINGS_COLUMNS)

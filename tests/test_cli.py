@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import csv
 import os
+from collections import Counter
 
 import pytest
 
@@ -16,15 +17,19 @@ from datafusion_dedup_ai_spark.sources.xlsx_lite import read_xlsx
 from tests.test_pipeline_golden import GOLDEN, GOLDEN_INPUT
 
 
+def _write_names_csv(path, names) -> None:
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["idx", "company_name"])
+        for i, name in enumerate(names):
+            w.writerow([i, name])
+
+
 @pytest.fixture(scope="module")
 def cli_outputs(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("cli")
     inp = tmp / "companies.csv"
-    with open(inp, "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["idx", "company_name"])
-        for i, name in enumerate(GOLDEN_INPUT):
-            w.writerow([i, name])
+    _write_names_csv(inp, GOLDEN_INPUT)
     out_dir = tmp / "reports"
     rc = main(
         [
@@ -133,6 +138,143 @@ def test_cli_releases_cached_frames(spark, tmp_path):
     )
     assert rc == 0
     assert persistent() == before
+
+
+def test_cli_sheets_and_stats_equal_spark_forms(spark, tmp_path, monkeypatch, capsys):
+    """The CLI derives canonical_summary, mapping, review and the stats on
+    the driver from its one pulled clusters frame; each must equal its Spark
+    form in plans/pipeline.py over the same clusters — as multisets, and
+    review in order. The input adds an empty name cell and a name with an
+    empty base to the golden fixture. normalize_name maps a null name to
+    '', so the pipeline never yields a null canonical_name; one copy of a
+    review row with a null canonical_name and its own cluster is appended
+    to the pipeline's result, so the null summary group is pinned too."""
+    from pyspark.sql import functions as F
+
+    from datafusion_dedup_ai_spark.__main__ import SHEET_COLUMNS
+    from datafusion_dedup_ai_spark.plans import pipeline
+    from datafusion_dedup_ai_spark.sources import sinks
+
+    inp = tmp_path / "companies.csv"
+    _write_names_csv(inp, [*GOLDEN_INPUT, "", "Pvt Ltd"])
+    seen: dict = {}
+    dedup_pipeline_cached = pipeline.dedup_pipeline_cached
+
+    def with_null_canonical(*args, **kwargs):
+        clusters, cached = dedup_pipeline_cached(*args, **kwargs)
+        cid = clusters.schema["cluster_id"].dataType
+        extra = clusters.where(F.col("row_order") == 0).select(
+            *[
+                F.lit(99).cast(cid).alias(c) if c in ("row_order", "cluster_id")
+                else F.lit(None).cast("string").alias(c) if c == "canonical_name"
+                else F.col(c)
+                for c in clusters.columns
+            ]
+        )
+        seen["frame"] = clusters.unionByName(extra)
+        return seen["frame"], cached
+
+    write_xlsx_bytes = sinks.write_xlsx_bytes
+
+    def capture(reports, *args, **kwargs):
+        seen.update(reports)
+        return write_xlsx_bytes(reports, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "dedup_pipeline_cached", with_null_canonical)
+    monkeypatch.setattr(sinks, "write_xlsx_bytes", capture)
+    rc = main(
+        [str(inp), "--column", "company_name", "--order-column", "idx",
+         "--out", str(tmp_path / "o")],
+        spark=spark,
+    )
+    assert rc == 0
+    clusters = seen["frame"]
+
+    def rows(pdf):
+        return [tuple(r) for r in pdf.itertuples(index=False)]
+
+    def spark_rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    summary = spark_rows(pipeline.canonical_summary(clusters))
+    assert (99, None, 1) in summary
+    assert Counter(rows(seen["canonical_summary"])) == Counter(summary)
+    assert Counter(rows(seen["mapping"])) == Counter(
+        spark_rows(pipeline.golden_mapping(clusters))
+    )
+    review = spark_rows(
+        pipeline.high_confidence_review(clusters).select(*SHEET_COLUMNS)
+    )
+    assert [r[0] for r in review] == [0, 2, 99]
+    assert rows(seen["review"]) == review
+
+    out = capsys.readouterr().out
+    printed = {
+        label: int(out.split(f"{label}: ")[1].split("\n")[0])
+        for label in ("Total Rows", "Total Clusters", "Multi-record Clusters",
+                      "High-confidence Review Rows")
+    }
+    stats = pipeline.run_stats(clusters).collect()[0]
+    assert printed == {
+        "Total Rows": stats["total_rows"],
+        "Total Clusters": stats["total_clusters"],
+        "Multi-record Clusters": stats["multi_record_clusters"],
+        "High-confidence Review Rows": stats["high_confidence_review_rows"],
+    }
+
+
+def test_cli_pulls_each_input_once(spark, tmp_path, monkeypatch):
+    """Every sheet and the stats come from one driver pull per input: one
+    toPandas and no collect."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = Counter()
+    for method in ("toPandas", "collect"):
+        original = getattr(DataFrame, method)
+
+        def counted(self, *args, _method=method, _original=original, **kwargs):
+            calls[_method] += 1
+            return _original(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, method, counted)
+    inp = tmp_path / "companies.csv"
+    _write_names_csv(inp, GOLDEN_INPUT)
+    rc = main(
+        [str(inp), str(inp), "--column", "company_name", "--order-column", "idx",
+         "--out", str(tmp_path / "o")],
+        spark=spark,
+    )
+    assert rc == 0
+    assert calls == {"toPandas": 2}
+
+
+def test_cli_describes_jobs_and_restores_description(spark, tmp_path, monkeypatch):
+    """Each input's jobs run under the description 'dedup <file name>', and
+    main puts back whatever description the caller had set."""
+    from datafusion_dedup_ai_spark.sources import sinks
+
+    sc = spark.sparkContext
+    inp = tmp_path / "companies.csv"
+    _write_names_csv(inp, GOLDEN_INPUT)
+    during = []
+    write_xlsx_bytes = sinks.write_xlsx_bytes
+
+    def capture(*args, **kwargs):
+        during.append(sc.getLocalProperty("spark.job.description"))
+        return write_xlsx_bytes(*args, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_xlsx_bytes", capture)
+    argv = [str(inp), "--column", "company_name", "--order-column", "idx",
+            "--out", str(tmp_path / "o")]
+    try:
+        for outer in (None, "outer"):
+            sc.setJobDescription(outer)
+            during.clear()
+            assert main(argv, spark=spark) == 0
+            assert during == ["dedup companies.csv"] * 3
+            assert sc.getLocalProperty("spark.job.description") == outer
+    finally:
+        sc.setJobDescription(None)
 
 
 def test_cli_missing_column_skips_with_nonzero_rc(spark, tmp_path):
