@@ -14,9 +14,9 @@ identical plan), and the median absorbs the outliers.
 Before timing, every query shape runs once at sf0.001 so whole-stage-codegen
 compilation (shape-keyed, volume-independent) is excluded from the numbers.
 Per-run samples are emitted under "runs" for spread inspection. The cache is
-cleared between runs because dedup_pipeline persists its prepared subtree per
-call — without the clear, repeats accumulate cache copies and manufacture
-memory pressure the real engine wouldn't have."""
+cleared between runs so that a query which persists an intermediate frame
+cannot accumulate cache copies across repeats and manufacture memory
+pressure the real engine wouldn't have."""
 
 from __future__ import annotations
 

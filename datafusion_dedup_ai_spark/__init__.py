@@ -8,9 +8,9 @@ dedup, similarity search, text analysis, multimodal plumbing, streaming windows)
 
 Everything is expressed against the DataFrame API so Catalyst owns physical
 planning (pushdown, pruning, join selection, AQE); Python appears only where the
-semantics genuinely require it (Jaro-Winkler pandas_udf, union-find replay via
-one applyInPandas call per shuffle partition, pluggable enrichment via
-mapInPandas).
+semantics genuinely require it (Jaro-Winkler pandas_udf, the dedup block pass
+that scores, replays union-find and elects in one applyInPandas call per hash
+bucket, pluggable enrichment via mapInPandas).
 """
 
 from datafusion_dedup_ai_spark.config import DedupConfig

@@ -12,9 +12,11 @@ Per input file (csv/xlsx, format-dispatched like the reference):
    the first string column when --column is omitted (reference
    engine_test.py:14-16); a file missing the requested column is warned
    about and skipped, not fatal (app.py:91-92);
-2. run the full dedup pipeline (plans.pipeline.dedup_pipeline);
+2. run the full dedup pipeline (plans.pipeline.dedup_pipeline), which
+   caches nothing;
 3. pull the clusters sheet to the driver with ONE ``toPandas`` — the only
-   action on the pipeline's result — and derive the other sheets from it
+   action on the pipeline's result, a single pass that resolves every
+   block — and derive the other sheets from it
    in pandas, as the reference does from its one result frame
    (outputs.py:22-66); write the reference's three workbooks into --out
    (default: the input file's directory, engine_test.py:21-22):
@@ -286,7 +288,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     args = _build_parser().parse_args(argv)
 
     from datafusion_dedup_ai_spark.config import DedupConfig
-    from datafusion_dedup_ai_spark.plans.pipeline import dedup_pipeline_cached
+    from datafusion_dedup_ai_spark.plans.pipeline import dedup_pipeline
     from datafusion_dedup_ai_spark.session import build_session
     from datafusion_dedup_ai_spark.sources.readers import (
         first_string_column,
@@ -329,16 +331,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     else (f"dedup_final_{stem}.xlsx", f"golden_{stem}.xlsx",
                           f"review_{stem}.xlsx")
                 )
-                clusters, cached = dedup_pipeline_cached(
+                clusters = dedup_pipeline(
                     df, column, config, order_col=args.order_column
                 )
-                # the one pull in _write_reports is the last action on the
-                # frames the pipeline cached
-                try:
-                    _write_reports(clusters, config, out_dir, names)
-                finally:
-                    for d in cached:
-                        d.unpersist()
+                _write_reports(clusters, config, out_dir, names)
             finally:
                 sc.setLocalProperty(_JOB_DESCRIPTION, prev_description)
     finally:

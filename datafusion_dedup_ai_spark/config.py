@@ -90,8 +90,8 @@ class DedupConfig:
     max_block_size: int | None = None
     # Blocks with more member rows than this route to the connected-
     # components mega-block fallback in clustering (identical partitions,
-    # order-independent upper-bound confidences) instead of one cogroup
-    # task. ``None`` keeps exact reference semantics for every block.
+    # order-independent upper-bound confidences) instead of the one-task
+    # block pass. ``None`` keeps exact reference semantics for every block.
     mega_block_rows: int | None = None
     # Component algorithm for that fallback: "lp" (hash-min label
     # propagation, O(diameter) rounds) or "star" (large-star/small-star

@@ -2,19 +2,32 @@
 
 Backends:
 
-* ``cluster_exact`` (the pipeline's path, exact): replays the reference's
-  sorted row-pair scan from the entity-collapsed inputs (block members and
-  distinct-base-pair matches). Pairs exist only *within* a block
-  (engine.py:251-255), so components never span blocks and the replay needs
-  no global iteration. Both inputs cogroup on a hash bucket of
-  ``block_key`` with ``spark.sql.shuffle.partitions`` buckets: one Python
-  call per shuffle partition, holding that partition's member and match
-  rows. Blocks above ``max_block_rows`` route to ``cluster_mega_blocks``.
-  Replicates the reference's order-dependent confidence quirk (C3,
-  engine.py:235-243): on each root-merging union, only the *first* row of
-  the pair takes ``max(conf, pair_conf)`` and has its reason overwritten.
-  Iterative union-find (no recursion — the reference's recursive ``find``
-  overflows on deep chains, SURVEY.md §4).
+* ``resolve_blocks`` (the pipeline's path, exact): one grouped Python pass
+  over every prepared row that resolves each block the way the reference's
+  per-block loop does (engine.py:246-338): it scores the block's distinct
+  base pairs with Jaro-Winkler (``matching.block_base_matches``), replays
+  the sorted row-pair scan from them (``_replay_block``) and elects the
+  canonical name and cluster size (the ``canonical.elect_canonical``
+  rule). Rows group on a hash bucket of ``block_key`` (of ``row_order``
+  for empty bases) with ``spark.sql.shuffle.partitions`` buckets, so the
+  plan is one exchange and one Python call per bucket, with no join back
+  and nothing cached. Blocks above ``DedupConfig.mega_block_rows`` take
+  the mega route below instead.
+
+* ``cluster_exact`` (the layered reference and the mega route, exact): the
+  same replay as separate operators — ``matching.group_pair_matches``
+  feeds a cogroup of members and matches on the hash bucket of
+  ``block_key``, whose labels join back to every row. Pairs exist only
+  *within* a block (engine.py:251-255), so components never span blocks
+  and the replay needs no global iteration. Blocks above
+  ``max_block_rows`` route to ``cluster_mega_blocks``. The traced benchmark
+  and the equivalence tests compose it with ``elect_canonical``.
+
+Both replays reproduce the reference's order-dependent confidence quirk
+(C3, engine.py:235-243): on each root-merging union, only the *first* row
+of the pair takes ``max(conf, pair_conf)`` and has its reason overwritten.
+Iterative union-find (no recursion — the reference's recursive ``find``
+overflows on deep chains, SURVEY.md §4).
 
 * ``cluster_from_edges`` (reference): per-block ``applyInPandas``
   union-find over the full row-pair edge list, the same C3 rule. The
@@ -50,6 +63,8 @@ canonical names, sizes, confidences) are unaffected.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,9 +79,31 @@ from pyspark.sql.types import (
 from datafusion_dedup_ai_spark.config import (
     CONF_DEFAULT,
     CONF_EMPTY_BASE,
+    CONF_TOKEN_AND_HARD,
     REASON_DEFAULT,
     REASON_EMPTY_BASE,
+    REASON_TOKEN_AND_HARD,
+    DedupConfig,
 )
+from datafusion_dedup_ai_spark.operators.canonical import elect_canonical
+from datafusion_dedup_ai_spark.operators.matching import (
+    block_base_matches,
+    group_pair_matches,
+)
+
+# The `clusters` report schema (FIXTURES.md §2).
+CLUSTER_COLUMNS = [
+    "row_order",
+    "original_name",
+    "normalized_name",
+    "base_name",
+    "block_key",
+    "cluster_id",
+    "cluster_size",
+    "canonical_name",
+    "confidence",
+    "reason",
+]
 
 _MEMBER_SCHEMA = StructType(
     [
@@ -463,7 +500,8 @@ def cluster_exact(
     max_block_rows: int | None = None,
     cc_backend: str = "lp",
 ) -> DataFrame:
-    """C1/C3/C4 via cogrouped replay of the collapsed inputs.
+    """C1/C3/C4 via cogrouped replay of the collapsed inputs: the layered
+    reference for ``resolve_blocks`` and its mega route.
 
     Members and matches cogroup on ``pmod(xxhash64(block_key), n)`` with
     ``n`` = ``spark.sql.shuffle.partitions``, so there is one Python call
@@ -482,11 +520,6 @@ def cluster_exact(
     chain-heavy graphs); both return identical partitions (pinned in
     tests/test_clustering_equiv.py).
     """
-    from datafusion_dedup_ai_spark.config import (
-        CONF_TOKEN_AND_HARD,
-        REASON_TOKEN_AND_HARD,
-    )
-
     members = prepared.where(F.col("base_name") != "").select(
         "block_key", "row_order", "base_name"
     )
@@ -566,6 +599,118 @@ def cluster_exact(
         )
         .drop("m_cluster_id", "m_confidence", "m_reason")
     )
+
+
+def _resolve_bucket(
+    pdf: pd.DataFrame, config: DedupConfig, link_identical: bool
+) -> pd.DataFrame:
+    """Every block of one bucket: score, replay, elect. Returns the
+    ``CLUSTER_COLUMNS`` rows ordered by (cluster_id, row_order)."""
+    based = pdf[pdf["base_name"] != ""].sort_values("row_order")
+    labels = _replay_block(
+        based, block_base_matches(based, config), link_identical,
+        CONF_TOKEN_AND_HARD, REASON_TOKEN_AND_HARD,
+    )
+    # _replay_block returns its rows in row_order, aligned with `based`
+    based = based.assign(
+        cluster_id=labels["cluster_id"].to_numpy(),
+        confidence=labels["confidence"].to_numpy(),
+        reason=labels["reason"].to_numpy(),
+    )
+    # elect_canonical's rule: most frequent base, then the shortest, then
+    # the smallest (code-point length and order, as Spark's length and
+    # binary string order)
+    size: dict[int, int] = {}
+    best: dict[int, tuple[int, int, str]] = {}
+    for (cid, base), n in Counter(zip(based["cluster_id"], based["base_name"])).items():
+        size[cid] = size.get(cid, 0) + n
+        key = (-n, len(base), base)
+        if cid not in best or key < best[cid]:
+            best[cid] = key
+    based["cluster_size"] = based["cluster_id"].map(size)
+    based["canonical_name"] = based["cluster_id"].map({c: k[2] for c, k in best.items()})
+    # C4: empty-base rows stay singletons named by their normalized_name
+    empty = pdf[pdf["base_name"] == ""]
+    empty = empty.assign(
+        cluster_id=empty["row_order"],
+        cluster_size=1,
+        canonical_name=empty["normalized_name"],
+        confidence=CONF_EMPTY_BASE,
+        reason=REASON_EMPTY_BASE,
+    )
+    out = pd.concat([f for f in (based, empty) if len(f)])
+    return out.sort_values(["cluster_id", "row_order"])[CLUSTER_COLUMNS]
+
+
+def resolve_blocks(prepared: DataFrame, config: DedupConfig) -> DataFrame:
+    """C1-C6 for every prepared row in one grouped Python pass: the
+    ``CLUSTER_COLUMNS`` rows, equal to ``group_pair_matches`` ->
+    ``cluster_exact`` -> ``elect_canonical`` (pinned by
+    tests/test_clustering_equiv.py).
+
+    Rows group on ``pmod(xxhash64(block_key), n)`` — ``pmod(xxhash64(
+    row_order), n)`` for empty bases, so all-empty names spread over the
+    buckets — with ``n`` = ``spark.sql.shuffle.partitions``. Each call
+    scores its blocks' distinct base pairs, replays them and elects the
+    canonical name and cluster size. One block is scored in one task.
+
+    With ``config.mega_block_rows`` set, blocks with more non-empty rows
+    than the cap take the layered mega route instead (``cluster_exact``
+    routing them to ``cluster_mega_blocks``, then ``elect_canonical``).
+    """
+    link_identical = (1.0 >= config.soft_threshold) or (1.0 >= config.hard_threshold)
+    rest, mega = prepared, None
+    if config.mega_block_rows is not None:
+        mega_keys = F.broadcast(
+            prepared.where(F.col("base_name") != "")
+            .groupBy("block_key")
+            .agg(F.count("*").alias("_n"))
+            .where(F.col("_n") > config.mega_block_rows)
+            .select("block_key")
+        )
+        mega_rows = prepared.join(mega_keys, "block_key", "left_semi")
+        rest = prepared.join(mega_keys, "block_key", "left_anti")
+        mega = elect_canonical(
+            cluster_exact(
+                mega_rows,
+                group_pair_matches(mega_rows, config),
+                link_identical=link_identical,
+                max_block_rows=config.mega_block_rows,
+                cc_backend=config.cc_backend,
+            )
+        ).select(*CLUSTER_COLUMNS)
+
+    types = {f.name: f.dataType for f in prepared.schema.fields}
+    derived = {
+        "cluster_id": LongType(),
+        "cluster_size": LongType(),
+        "canonical_name": StringType(),
+        "confidence": DoubleType(),
+        "reason": StringType(),
+    }
+    schema = StructType(
+        [StructField(c, derived.get(c) or types[c]) for c in CLUSTER_COLUMNS]
+    )
+    n_buckets = int(prepared.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bucket = F.pmod(
+        F.when(F.col("base_name") != "", F.xxhash64("block_key")).otherwise(
+            F.xxhash64("row_order")
+        ),
+        F.lit(n_buckets),
+    )
+    resolved = (
+        rest.select(
+            "row_order", "original_name", "normalized_name", "base_name",
+            "block_key", "token_key",
+        )
+        .groupBy(bucket)
+        .applyInPandas(
+            lambda pdf: _resolve_bucket(pdf, config, link_identical), schema=schema
+        )
+    )
+    if mega is not None:
+        resolved = resolved.unionByName(mega)
+    return resolved
 
 
 def cluster_components_star(edges: DataFrame, max_iters: int = 60) -> DataFrame:

@@ -417,7 +417,8 @@ def _dedup_cluster_partition_oracle() -> str:
     C5 canonical election (freq DESC, length ASC, name ASC; all-empty
     fallback = first member's normalized_name) -> C6 sizes. Identical-base
     links are implicit in the self-join (jw = 1.0 clears the hard
-    threshold), matching cluster_exact's link_identical replay."""
+    threshold), matching the block pass's link_identical replay
+    (clustering.resolve_blocks)."""
     from datafusion_dedup_ai_spark.oracles import sql_connected_components
 
     cc = sql_connected_components(

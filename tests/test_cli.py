@@ -158,10 +158,10 @@ def test_cli_sheets_and_stats_equal_spark_forms(spark, tmp_path, monkeypatch, ca
     inp = tmp_path / "companies.csv"
     _write_names_csv(inp, [*GOLDEN_INPUT, "", "Pvt Ltd"])
     seen: dict = {}
-    dedup_pipeline_cached = pipeline.dedup_pipeline_cached
+    dedup_pipeline = pipeline.dedup_pipeline
 
     def with_null_canonical(*args, **kwargs):
-        clusters, cached = dedup_pipeline_cached(*args, **kwargs)
+        clusters = dedup_pipeline(*args, **kwargs)
         cid = clusters.schema["cluster_id"].dataType
         extra = clusters.where(F.col("row_order") == 0).select(
             *[
@@ -172,7 +172,7 @@ def test_cli_sheets_and_stats_equal_spark_forms(spark, tmp_path, monkeypatch, ca
             ]
         )
         seen["frame"] = clusters.unionByName(extra)
-        return seen["frame"], cached
+        return seen["frame"]
 
     write_xlsx_bytes = sinks.write_xlsx_bytes
 
@@ -180,7 +180,7 @@ def test_cli_sheets_and_stats_equal_spark_forms(spark, tmp_path, monkeypatch, ca
         seen.update(reports)
         return write_xlsx_bytes(reports, *args, **kwargs)
 
-    monkeypatch.setattr(pipeline, "dedup_pipeline_cached", with_null_canonical)
+    monkeypatch.setattr(pipeline, "dedup_pipeline", with_null_canonical)
     monkeypatch.setattr(sinks, "write_xlsx_bytes", capture)
     rc = main(
         [str(inp), "--column", "company_name", "--order-column", "idx",

@@ -3,9 +3,11 @@ row-pair path: identical clusters, confidences, and reasons — including the
 adversarial shape that breaks naive collapses (an external row smaller than a
 group's min attaching the group's members before its star edges run).
 
-The replay runs one Python call per shuffle partition, so every replay case
-also runs under 1 (one bucket holds every block), 3 (few buckets) and 64
-(more buckets than blocks) shuffle partitions."""
+Two forms are checked against the row-pair reference: the layered operators
+(group_pair_matches -> cluster_exact -> elect_canonical) and the fused
+block pass (resolve_blocks). Both run one Python call per hash bucket, so
+every case also runs under 1 (one bucket holds every block), 3 (few
+buckets) and 64 (more buckets than blocks) shuffle partitions."""
 
 from __future__ import annotations
 
@@ -17,18 +19,25 @@ from pyspark.sql import functions as F
 from datafusion_dedup_ai_spark.config import DedupConfig
 from datafusion_dedup_ai_spark.operators.blocking import candidate_pairs, prepare_names
 from datafusion_dedup_ai_spark.operators.canonical import elect_canonical
-from datafusion_dedup_ai_spark.operators.clustering import cluster_exact, cluster_from_edges
+from datafusion_dedup_ai_spark.operators.clustering import (
+    cluster_exact,
+    cluster_from_edges,
+    resolve_blocks,
+)
 from datafusion_dedup_ai_spark.operators.matching import group_pair_matches, match_pairs
+from datafusion_dedup_ai_spark.plans.pipeline import dedup_pipeline
 
 COLS = ["row_order", "base_name", "cluster_id", "cluster_size",
         "canonical_name", "confidence", "reason"]
 BUCKET_COUNTS = (1, 3, 64)
+FORMS = ("layered", "fused")
 
 
 def _per_bucket_count(spark, run):
     """{n: run()} under each of BUCKET_COUNTS shuffle partitions, restoring
     the conf afterwards; ``run`` must both build and collect its plan, since
-    cluster_exact reads the bucket count when the plan is built."""
+    cluster_exact and resolve_blocks read the bucket count when the plan is
+    built."""
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     out = {}
@@ -45,12 +54,19 @@ def _rows(df):
     return [tuple(r[c] for c in COLS) for r in df.select(COLS).orderBy("row_order").collect()]
 
 
+def _expected(f, forms=FORMS):
+    return {(form, n): f for form in forms for n in BUCKET_COUNTS}
+
+
 def _run_both(spark, names, link_identical=True, block_key=None):
-    """The row-pair path's rows and, per bucket count, the replay's rows.
-    Without identical-base linking the row-pair path drops identical-base
-    candidate pairs, the rule the replay applies to its groups. A
+    """The row-pair path's rows and, per (form, bucket count), the layered
+    replay's and the fused pass's rows. Without identical-base linking the
+    row-pair path drops identical-base candidate pairs, the rule the replay
+    applies to its groups; the fused pass derives that rule from the
+    thresholds, and no threshold pair both links distinct bases and leaves
+    identical ones apart, so that case runs the layered form only. A
     ``block_key`` Column replaces the blocking key."""
-    df = spark.createDataFrame(list(enumerate(names)), ["idx", "name"])
+    df = spark.createDataFrame(list(enumerate(names)), "idx bigint, name string")
     cfg = DedupConfig()
     prep = prepare_names(df, "name", cfg, order_col="idx")
     if block_key is not None:
@@ -59,9 +75,19 @@ def _run_both(spark, names, link_identical=True, block_key=None):
     if not link_identical:
         pairs = pairs.where(F.col("base_a") != F.col("base_b"))
     f = _rows(elect_canonical(cluster_from_edges(prep, match_pairs(pairs, cfg))))
-    gs = _per_bucket_count(spark, lambda: _rows(elect_canonical(cluster_exact(
-        prep, group_pair_matches(prep, cfg), link_identical=link_identical
-    ))))
+    forms = {
+        "layered": lambda: _rows(elect_canonical(cluster_exact(
+            prep, group_pair_matches(prep, cfg), link_identical=link_identical
+        ))),
+        "fused": lambda: _rows(resolve_blocks(prep, cfg)),
+    }
+    if not link_identical:
+        del forms["fused"]
+    gs = {
+        (form, n): rows
+        for form, run in forms.items()
+        for n, rows in _per_bucket_count(spark, run).items()
+    }
     return f, gs
 
 
@@ -71,7 +97,7 @@ def test_external_attacher_shape(spark):
     # group's internal star pairs — row 1 must NOT get the 0.98 upgrade.
     names = ["Acme Grp", "Acme Corp", "Acme Corp", "Acme Corp"]
     f, gs = _run_both(spark, names)
-    assert gs == {n: f for n in BUCKET_COUNTS}
+    assert gs == _expected(f)
 
 
 def test_replay_without_identical_links_matches_row_pairs(spark):
@@ -80,7 +106,7 @@ def test_replay_without_identical_links_matches_row_pairs(spark):
     names = ["Acme Corp", "Acme Grp", "Acme Corp", "Globex", "Globex",
              "Acme Corpp", "Initech Ltd", "Initech", "Acme Corp"]
     f, gs = _run_both(spark, names, link_identical=False)
-    assert gs == {n: f for n in BUCKET_COUNTS}
+    assert gs == _expected(f, forms=("layered",))
     assert len({r[2] for r in f}) < len(f)  # some rows did link
 
 
@@ -93,7 +119,7 @@ def test_replay_keeps_blocks_sharing_a_base_apart(spark):
         spark, names,
         block_key=F.when(F.col("row_order") % 2 == 0, "even").otherwise("odd"),
     )
-    assert gs == {n: f for n in BUCKET_COUNTS}
+    assert gs == _expected(f)
     assert len({r[2] for r in f}) == 4  # even Acme, odd Acme, two Globex
 
 
@@ -133,6 +159,27 @@ def test_mega_block_fallback_partition_matches_exact(spark):
         cluster_exact(prep, matches, link_identical=False, max_block_rows=50)
 
 
+def test_pipeline_mega_route_partition_matches_default(spark):
+    """dedup_pipeline with mega_block_rows=50 sends the 120-row block down
+    the layered mega route and the small block through the fused pass; the
+    partition, sizes and canonical names equal the default pipeline's. The
+    mega route's upper-bound confidences (0.98 for every row of a repeated
+    base) show that it ran, where the pass keeps the C3 scan-order values."""
+    names = [f"AAACORP {i % 7}" for i in range(120)] + ["Zebra Inc"] * 3
+    df = spark.createDataFrame(list(enumerate(names)), ["idx", "name"])
+    cols = ["row_order", "cluster_id", "cluster_size", "canonical_name"]
+
+    def run(cfg):
+        out = dedup_pipeline(df, "name", cfg, order_col="idx").orderBy("row_order").collect()
+        part = [tuple(r[c] for c in cols) for r in out]
+        return part, {r["confidence"] for r in out if r["row_order"] < 120}
+
+    default, default_conf = run(DedupConfig())
+    assert {r[1] for r in default} == {0, 120}  # the AAACORP variants link
+    assert len(default_conf) > 1
+    assert run(DedupConfig(mega_block_rows=50)) == (default, {0.98})
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_fuzzy_corpora(spark, seed):
     """Random names over stems that also fuzzy-match other stems of their
@@ -155,7 +202,57 @@ def test_random_fuzzy_corpora(spark, seed):
     )
     assert cross.count() >= 1
     f, gs = _run_both(spark, names)
-    assert gs == {n: f for n in BUCKET_COUNTS}
+    assert gs == _expected(f)
+
+
+def test_canonical_tie_on_count_and_length(spark):
+    """Two bases of one cluster tie on count and on length: the smaller one
+    wins, whichever comes first."""
+    names = ["Acme Corq", "Acme Corp", "Acme Corq", "Acme Corp",
+             "Acme Corps", "Globex Intel", "Globex Intl", "Globex Intel",
+             "Globex Intl"]
+    f, gs = _run_both(spark, names)
+    assert gs == _expected(f)
+    canon = {r[1]: r[4] for r in f}
+    assert canon["ACME CORQ"] == "ACME CORP"
+    assert canon["GLOBEX INTEL"] == "GLOBEX INTL"
+
+
+def test_non_ascii_bases(spark):
+    """Non-ASCII bases: code-point length and order decide the election, as
+    Spark's length and binary string order do. U+FF21 sorts before U+1D400
+    in code-point (and UTF-8) order but after it in UTF-16 order."""
+    names = ["Acme \uff21", "Acme \U0001d400", "Acme \U0001d400",
+             "Acme \uff21", "Café Royal", "Café Royale", "Café Royal",
+             "Société Générale", "Société Generale", "Müller GmbH"]
+    f, gs = _run_both(spark, names)
+    assert gs == _expected(f)
+    canon = {r[1]: r[4] for r in f}
+    assert canon["ACME \U0001d400"] == "ACME \uff21"
+    assert canon["CAFÉ ROYALE"] == "CAFÉ ROYAL"
+
+
+def test_empty_base_rows(spark):
+    """Empty-base rows (an empty cell, a null, suffix-only names) stay
+    singletons named by their normalized name, with the empty-base
+    confidence and reason, next to rows that do cluster."""
+    names = ["Pvt Ltd", "Acme Corp", "", None, "Ltd", "Acme Corp", "Pvt Ltd",
+             "Co."]
+    f, gs = _run_both(spark, names)
+    assert gs == _expected(f)
+    empty = [r for r in f if r[1] == ""]
+    assert len(empty) == 6
+    assert all(r[2] == r[0] and r[3] == 1 and r[5] == 0.50 for r in empty)
+    assert {r[4] for r in empty} == {"PVT LTD", "", "LTD", "CO"}
+
+
+def test_block_with_one_distinct_base(spark):
+    """A block whose rows share one base has no pair to score; its rows
+    still form one cluster through identical-base links."""
+    names = ["Globex", "Globex Ltd", "Globex", "Initech"]
+    f, gs = _run_both(spark, names)
+    assert gs == _expected(f)
+    assert [r[2] for r in f] == [0, 0, 0, 3]
 
 
 def _uf_min_labels(edges):

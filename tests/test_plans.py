@@ -108,30 +108,27 @@ def test_embedding_dedup_clusters_no_cartesian(spark, sf_dir):
     )
 
 
-def test_dedup_clusters_single_cogroup_execution(spark, sf_dir):
-    """The union-find replay (FlatMapCoGroupsInPandas, one Python call per
-    shuffle partition) is the most expensive stage of the dedup pipeline;
-    `elect_canonical` consumes its output more than once, so the pipeline
-    persists the clustered frame.
-    Regression gate: NO cogroup node may be reachable in the executed plan
-    without crossing an InMemoryTableScan boundary — i.e. the replay runs
-    only while populating the cache, exactly once."""
+def test_dedup_clusters_single_block_pass(spark, sf_dir):
+    """The dedup pipeline resolves every block in one grouped Python pass
+    (clustering.resolve_blocks): scan -> one exchange -> one
+    FlatMapGroupsInPandas. Regression gate: exactly one grouped pass, and no
+    cogroup, no Jaro-Winkler UDF node and no cached relation — any of them
+    means the layered operators or a persist leaked back into the
+    pipeline."""
     df = entry_mod.queries()["dedup_clusters"](spark, sf_dir)
     root = _unwrap_aqe(df._jdf.queryExecution().executedPlan())
+    names: list[str] = []
 
-    def count_uncached_cogroups(node) -> int:
-        name = node.getClass().getSimpleName()
-        if name.startswith("InMemoryTableScan"):
-            return 0
-        n = 1 if "FlatMapCoGroupsInPandas" in name else 0
+    def walk(node) -> None:
+        names.append(node.getClass().getSimpleName())
         children = node.children()
         for i in range(children.size()):
-            n += count_uncached_cogroups(children.apply(i))
-        return n
+            walk(children.apply(i))
 
-    assert count_uncached_cogroups(root) == 0
-    # and the cogroup must still exist somewhere (inside the cached relation)
-    assert "FlatMapCoGroupsInPandas" in root.toString()
+    walk(root)
+    assert names.count("FlatMapGroupsInPandasExec") == 1
+    for banned in ("FlatMapCoGroupsInPandas", "ArrowEvalPython", "InMemoryTableScan"):
+        assert not [n for n in names if n.startswith(banned)], banned
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
