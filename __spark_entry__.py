@@ -27,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
     # entry() is the driver's first call; snapshotting here guarantees the
     # O-pack oracle paths (materialize.py) exist regardless of the order the
     # driver later runs query/oracle pairs in.
-    materialize.materialize_clusters(spark, materialize.oracle_sf_dir())
+    materialize.CLUSTERS.materialize(spark, materialize.oracle_sf_dir())
     return entry_queries.q_dedup_clusters(spark, "/root/testdata/sf0.001")
 
 

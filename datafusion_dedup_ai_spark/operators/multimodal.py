@@ -1,25 +1,24 @@
 """Multimodal column plumbing (extension scope): image/audio/video as opaque
-``binary`` payloads with typed metadata, decode/feature/frame-sample operators.
+``binary`` payloads with typed metadata, feature/frame-sample operators.
 
-The real decode step needs codec libraries that are not in this environment,
-so it is STUBBED behind NotImplementedError — but everything Spark-side is
-real and tested: the binary schema, deterministic metadata derivation, the
-Arrow batch shape of the mapInPandas feature extractor, and the frame-sample
-explode. Swapping the stub for a real decoder changes one function body, not
-the plumbing.
+Real decoders need codec libraries that are not in this environment, so the
+featurizer runs over raw payload bytes by default — but everything
+Spark-side is real and tested: the binary schema, deterministic metadata
+derivation, the Arrow batch shape of the mapInPandas feature extractor, and
+the frame-sample explode. A codec-present environment passes its decoder as
+``extract_features(decode_fn=)``; the plumbing does not change.
 
 The testdata has no binary column, so a TRUE BinaryType fixture is
-materialized once per process (``materialize_media``): payloads are
-deterministic md5-chain bytes (unhex of chained md5 hex — arbitrary binary,
-NOT utf8 text), media_type cycles by doc_id, duration/width/height derive
-from n_chars. The media queries then scan an actual parquet BINARY column —
-the same read path real image/audio/video payloads take — and their DuckDB
+materialized once per process (``MEDIA``): payloads are deterministic
+md5-chain bytes (unhex of chained md5 hex — arbitrary binary, NOT utf8
+text), media_type cycles by doc_id, duration/width/height derive from
+n_chars. The media queries then scan an actual parquet BINARY column — the
+same read path real image/audio/video payloads take — and their DuckDB
 oracles read the same parquet files.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -36,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from datafusion_dedup_ai_spark.materialize import Fixture
+
 MEDIA_TYPES = ("image", "audio", "video")
 
 # Payload bytes are capped (fixture economy); a real corpus streams payloads
@@ -43,15 +44,11 @@ MEDIA_TYPES = ("image", "audio", "video")
 MEDIA_PAYLOAD_CAP = 1024
 _MD5_CHAIN = MEDIA_PAYLOAD_CAP // 16  # md5 = 16 bytes per chain link
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
 
 def media_table(documents: DataFrame) -> DataFrame:
     """Derive the (doc_id, media_type, payload: binary, meta...) rows from
-    documents. Deterministic plan-side derivation; ``materialize_media``
-    snapshots it to parquet so queries scan a real BINARY column."""
+    documents. Deterministic plan-side derivation; ``MEDIA`` snapshots it
+    to parquet so queries scan a real BINARY column."""
     mt = F.element_at(
         F.array(*[F.lit(t) for t in MEDIA_TYPES]),
         (F.col("doc_id") % 3 + 1).cast("int"),
@@ -71,91 +68,6 @@ def media_table(documents: DataFrame) -> DataFrame:
         ((F.col("n_chars") % 1920) + 16).cast("bigint").alias("width"),
         ((F.col("n_chars") % 1080) + 16).cast("bigint").alias("height"),
         (F.col("n_chars").cast("double") / 10.0).alias("duration_s"),
-    )
-
-
-def media_fixture_path(sf_dir: str) -> str:
-    from datafusion_dedup_ai_spark.materialize import sf_cache_key
-
-    return os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "media.parquet"
-    )
-
-
-_written: set[str] = set()
-
-
-def materialize_media(spark: SparkSession, sf_dir: str) -> str:
-    """Write the binary media fixture once per process; returns its path."""
-    path = media_fixture_path(sf_dir)
-    if path not in _written:
-        from datafusion_dedup_ai_spark.sources.readers import load_table
-
-        from datafusion_dedup_ai_spark.materialize import (
-            atomic_parquet_overwrite,
-        )
-
-        atomic_parquet_overwrite(
-            media_table(load_table(spark, sf_dir, "documents")), path
-        )
-        _written.add(path)
-    return path
-
-
-def load_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The media table as a true parquet BINARY scan (the production read
-    path), materializing the fixture on first use."""
-    return spark.read.parquet(materialize_media(spark, sf_dir))
-
-
-def media_features_fixture_path(sf_dir: str) -> str:
-    from datafusion_dedup_ai_spark.materialize import sf_cache_key
-
-    return os.path.join(
-        _REPO_ROOT,
-        ".materialized",
-        sf_cache_key(sf_dir),
-        "media_features.parquet",
-    )
-
-
-def materialize_media_features(spark: SparkSession, sf_dir: str) -> str:
-    """(doc_id, byte_entropy): the Arrow featurizer's ONE non-SQL column,
-    materialized once per process so the media_feature_histograms oracle
-    can hash-gate the full feature row (round-10 verdict #8). Everything
-    else the featurizer emits — n_bytes, the 16 high-nibble bins, their
-    JSON rendering — is re-derived from the raw payload IN SQL by the
-    oracle (the byte-walk media_nibble_histograms already proves
-    cross-engine); only the Shannon entropy double rides through this
-    fixture, because numpy's pairwise log2-sum has no ULP-stable SQL
-    replay. Same pattern as hash_fixtures (xxhash64) and the hyperplane
-    buckets: the non-SQL step is pinned by its own tests
-    (tests/test_multimodal.py recomputes the entropy in pure Python) and
-    the SQL replays the rest."""
-    path = media_features_fixture_path(sf_dir)
-    if path not in _written:
-        from datafusion_dedup_ai_spark.materialize import (
-            atomic_parquet_overwrite,
-        )
-
-        feats = extract_features(load_media(spark, sf_dir))
-        atomic_parquet_overwrite(
-            feats.select("doc_id", "byte_entropy"), path
-        )
-        _written.add(path)
-    return path
-
-
-def decode_media(payload_bytes: bytes, media_type: str):
-    """Real decoders (PIL/libav/opencv) are unavailable in this container.
-    Codec-present environments do NOT edit this module: pass
-    ``decode_fn=`` to :func:`extract_features` (e.g.
-    ``lambda payload, mt: np.asarray(PIL.Image.open(io.BytesIO(payload)))
-    .ravel()``) and the Arrow featurizer runs over the decoded samples."""
-    raise NotImplementedError(
-        "media decode requires codec libraries not present in this environment; "
-        "pass decode_fn= to extract_features — the surrounding Spark plumbing "
-        "is complete"
     )
 
 
@@ -220,10 +132,35 @@ def extract_features(
     )
 
 
+def _media_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from datafusion_dedup_ai_spark.sources.readers import load_table
+
+    return media_table(load_table(spark, sf_dir, "documents"))
+
+
+def _media_entropy_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, byte_entropy): the Arrow featurizer's ONE non-SQL column,
+    materialized so the media_feature_histograms oracle can hash-gate the
+    full feature row. Everything else the featurizer emits — n_bytes, the
+    16 high-nibble bins, their JSON rendering — is re-derived from the raw
+    payload IN SQL by the oracle (the byte-walk media_nibble_histograms
+    already proves cross-engine); only the Shannon entropy double rides
+    through this fixture, because numpy's pairwise log2-sum has no
+    ULP-stable SQL replay. Same pattern as hash_fixtures (xxhash64) and the
+    hyperplane buckets: the non-SQL step is pinned by its own tests
+    (tests/test_multimodal.py recomputes the entropy in pure Python) and
+    the SQL replays the rest."""
+    feats = extract_features(MEDIA.read(spark, sf_dir))
+    return feats.select("doc_id", "byte_entropy")
+
+
+MEDIA = Fixture("media", _media_rows)
+MEDIA_FEATURES = Fixture("media_features", _media_entropy_rows)
+
+
 def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video rows: explode n_frames evenly-spaced frame
-    indices with byte offsets — pure Column ops (sequence + explode), the
-    decode of each frame being the pluggable stub."""
+    indices with byte offsets — pure Column ops (sequence + explode)."""
     video = media.where(F.col("media_type") == "video")
     # floor(), not cast-truncate: DuckDB's double->int cast rounds half-to-even
     # while Spark's truncates, so oracles mirror floor explicitly.

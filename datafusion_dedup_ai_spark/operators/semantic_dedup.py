@@ -26,12 +26,10 @@ on ~10^4 sampled rows and broadcast them.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+from datafusion_dedup_ai_spark.materialize import Fixture
 from datafusion_dedup_ai_spark.operators.similarity_search import (
     cosine_with_norms,
     ivf_assign_cells,
@@ -168,34 +166,18 @@ def semantic_dedup(
 
 
 # ---------------------------------------------------------------------------
-# Cell-assignment fixture (materialized-snapshot oracle pattern,
-# materialize.py): the k-means assignment is not SQL-expressible, so the
-# hash-gated oracle verifies the WITHIN-CELL prune exactly, given the same
-# (id, cell) parquet both engines read. Cell-assignment determinism itself is
-# pinned in tests (assign twice -> identical).
+# Cell-assignment fixture (materialize.Fixture): the k-means assignment is not
+# SQL-expressible, so the hash-gated oracle verifies the WITHIN-CELL prune
+# exactly, given the same (id, cell) parquet both engines read.
+# Cell-assignment determinism itself is pinned in tests (assign twice ->
+# identical).
 # ---------------------------------------------------------------------------
 
-_written: set[str] = set()
+
+def _semantic_cell_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from datafusion_dedup_ai_spark.sources.readers import load_table
+
+    return assign_semantic_cells(load_table(spark, sf_dir, "embeddings"))
 
 
-def semantic_cells_path(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "semantic_cells.parquet"
-    )
-
-
-def materialize_semantic_cells(spark: SparkSession, sf_dir: str) -> str:
-    """Write the (vec_id, cell) assignment for `embeddings` at ``sf_dir`` to
-    parquet once per process; returns the path."""
-    path = semantic_cells_path(sf_dir)
-    if path not in _written:
-        from datafusion_dedup_ai_spark.sources.readers import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        from datafusion_dedup_ai_spark.materialize import (
-            atomic_parquet_overwrite,
-        )
-
-        atomic_parquet_overwrite(assign_semantic_cells(emb), path)
-        _written.add(path)
-    return path
+SEMANTIC_CELLS = Fixture("semantic_cells", _semantic_cell_rows)

@@ -261,7 +261,7 @@ SPLIT_VAL_HEX = "e666"
                 WHEN substr(md5(CAST(cluster_id AS VARCHAR)), 1, 4)
                      < '{SPLIT_VAL_HEX}' THEN 'val'
                 ELSE 'test' END AS split
-    FROM '{MZ.snapshot_glob()}'
+    FROM '{MZ.CLUSTERS.glob()}'
     """,
 )
 def q_cluster_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +271,7 @@ def q_cluster_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     leak every duplicate pair that crosses the boundary; splitting on the
     cluster key makes leakage structurally impossible. Reads the same
     materialized snapshot as the O-pack; a pure map over it."""
-    clusters = MZ.read_clusters_snapshot(spark, sf_dir)
+    clusters = MZ.CLUSTERS.read(spark, sf_dir)
     prefix = F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 4)
     return clusters.select(
         "row_order",
@@ -662,7 +662,7 @@ def _manifest_bpe_oracle() -> str:
     of per source). All integer arithmetic — hash-gates exactly."""
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
 
-    g = HF.bpe_pieces_glob()
+    g = HF.BPE_PIECES.glob()
     return f"""
     WITH RECURSIVE kept AS (
         SELECT * FROM ({_clean_corpus_sql()})
@@ -723,7 +723,9 @@ def q_training_manifest_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return training_manifest_frame(
         load_spread(spark, sf_dir, "documents"),
-        bpe_pieces=HF.load_bpe_pieces(spark, sf_dir),
+        bpe_pieces=sorted(
+            r["piece"] for r in HF.BPE_PIECES.read(spark, sf_dir).collect()
+        ),
     )
 
 

@@ -492,7 +492,7 @@ def q_dedup_cluster_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side reads the per-process pipeline snapshot (the same frame
     entry() returns), so the driver row compares REAL pipeline output, not
     a re-derivation."""
-    clusters = MZ.read_clusters_snapshot(spark, sf_dir)
+    clusters = MZ.CLUSTERS.read(spark, sf_dir)
     return clusters.select(
         "row_order",
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
@@ -523,12 +523,12 @@ def _named_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "canonical_mapping",
     lambda: f"""
     SELECT original_name, canonical_name
-    FROM '{MZ.snapshot_glob()}'
+    FROM '{MZ.CLUSTERS.glob()}'
     """,
 )
 def q_canonical_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4 golden mapping (original -> canonical), outputs.py:52."""
-    return golden_mapping(MZ.read_clusters_snapshot(spark, sf_dir))
+    return golden_mapping(MZ.CLUSTERS.read(spark, sf_dir))
 
 
 @register(
@@ -536,14 +536,14 @@ def q_canonical_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambda: f"""
     SELECT row_order, original_name, normalized_name, base_name, block_key,
            cluster_id, cluster_size, canonical_name, confidence, reason
-    FROM '{MZ.snapshot_glob()}'
+    FROM '{MZ.CLUSTERS.glob()}'
     WHERE confidence >= 0.95 AND cluster_size >= 2
     """,
 )
 def q_cluster_review(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5 review filter: confidence >= 0.95 AND cluster_size >= 2
     (outputs.py:56-57)."""
-    return high_confidence_review(MZ.read_clusters_snapshot(spark, sf_dir))
+    return high_confidence_review(MZ.CLUSTERS.read(spark, sf_dir))
 
 
 @register(
@@ -556,26 +556,26 @@ def q_cluster_review(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN confidence >= 0.95 AND cluster_size >= 2
                          THEN 1 ELSE 0 END) AS BIGINT)
                AS high_confidence_review_rows
-    FROM '{MZ.snapshot_glob()}'
+    FROM '{MZ.CLUSTERS.glob()}'
     """,
 )
 def q_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6 stats quadruple, incl. the preserved multi_record_clusters
     rows-not-clusters quirk (outputs.py:61-66)."""
-    return run_stats(MZ.read_clusters_snapshot(spark, sf_dir))
+    return run_stats(MZ.CLUSTERS.read(spark, sf_dir))
 
 
 @register(
     "canonical_summary",
     lambda: f"""
     SELECT cluster_id, canonical_name, COUNT(*) AS count
-    FROM '{MZ.snapshot_glob()}'
+    FROM '{MZ.CLUSTERS.glob()}'
     GROUP BY cluster_id, canonical_name
     """,
 )
 def q_canonical_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 per-cluster member counts (outputs.py:30)."""
-    return canonical_summary(MZ.read_clusters_snapshot(spark, sf_dir))
+    return canonical_summary(MZ.CLUSTERS.read(spark, sf_dir))
 
 
 # ===========================================================================
@@ -726,7 +726,7 @@ _ENRICH_SLUG_SQL = (
            CASE WHEN {_ENRICH_SLUG_SQL} = '' THEN ''
                 ELSE {_ENRICH_SLUG_SQL} || '.example.com' END AS website,
            {_industry_sql_case("canonical_name")} AS industry
-    FROM '{MZ.snapshot_glob()}'
+    FROM '{MZ.CLUSTERS.glob()}'
     """,
 )
 def q_enriched_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -740,7 +740,7 @@ def q_enriched_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_dedup_ai_spark.enrich import StubEnricher
     from datafusion_dedup_ai_spark.plans.pipeline import CLUSTER_COLUMNS
 
-    clusters = MZ.read_clusters_snapshot(spark, sf_dir)
+    clusters = MZ.CLUSTERS.read(spark, sf_dir)
     return StubEnricher().enrich(clusters).select(
         *CLUSTER_COLUMNS, "website", "industry"
     )

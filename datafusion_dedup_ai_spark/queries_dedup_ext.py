@@ -49,7 +49,7 @@ def _minhash_mins_with(glob: str) -> str:
 
 
 def _minhash_signatures_oracle() -> str:
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH {_minhash_mins_with(g)}
     SELECT doc_id, to_json(list(hv ORDER BY i))::VARCHAR AS sig_json
@@ -73,7 +73,7 @@ def _band_cands_with(glob: str) -> str:
 
 
 def _minhash_near_pairs_oracle() -> str:
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH {_minhash_mins_with(g)},
     {_band_cands_with(g)},
@@ -109,7 +109,7 @@ def _minhash_two_phase_oracle() -> str:
     borderline-only exact verify. The routing cutoffs are the SAME Python
     integers the Spark plan uses (D.min_agree_cut), so the oracle needs no
     float-literal threshold parsing."""
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     hi = D.min_agree_cut(_JACCARD_T + _TWO_PHASE_EPS, _NUM_HASHES)
     lo = D.min_agree_cut(_JACCARD_T - _TWO_PHASE_EPS, _NUM_HASHES)
     return f"""
@@ -167,7 +167,7 @@ def _incremental_near_dup_oracle() -> str:
     documents, so the global fixture serves both sides; only the candidate
     join is restricted to cross-set pairs — the same |batch| x collision-rate
     topology as the Spark index path."""
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH {_minhash_mins_with(g)},
     {_band_cands_with(g)},
@@ -217,7 +217,7 @@ def _simhash_fp_with(glob: str) -> str:
 
 
 def _simhash_fingerprints_oracle() -> str:
-    g = HF.token_hashes_glob()
+    g = HF.TOKEN_HASHES.glob()
     return f"""
     WITH {_simhash_fp_with(g)}
     SELECT doc_id, simhash FROM fp
@@ -225,7 +225,7 @@ def _simhash_fingerprints_oracle() -> str:
 
 
 def _simhash_near_pairs_oracle() -> str:
-    g = HF.token_hashes_glob()
+    g = HF.TOKEN_HASHES.glob()
     n_chunks = _MAX_HAMMING + 1
     width = 64 // n_chunks
     masks = []
@@ -447,27 +447,18 @@ def q_incremental_exact_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return new.select("doc_id", "content_hash", "n_chars")
 
 
-# Corpus signature indexes built by THIS process, keyed by sf_dir — the
-# index is immutable per scale factor, so one build serves every evaluation
-# (query construction stays cheap, and repeated runs don't litter /tmp with
-# corpus-sized parquet copies).
-_INDEX_BUILT: set[str] = set()
-
-
 def _corpus_index_path(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
+    """The corpus signature index, built once per process per sf: it is
+    immutable per scale factor, so one build serves every evaluation."""
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.operators import minhash_index as MI
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(repo_root, ".materialized", sf_name, "minhash_index")
-    if path not in _INDEX_BUILT:
+    def build(path: str) -> None:
         d = load_spread(spark, sf_dir, "documents")
         sh = d.select("doc_id", T.distinct_shingles(F.col("text")).alias("shingles"))
         MI.build_minhash_index(sh.where(F.expr(_CORPUS_PRED)), path)
-        _INDEX_BUILT.add(path)
-    return path
+
+    return MZ.build_once(MZ.artifact_path(sf_dir, "minhash_index"), build)
 
 
 @register("incremental_near_dup_matches", _incremental_near_dup_oracle)

@@ -37,7 +37,7 @@ def _text_dedup_clusters_oracle() -> str:
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
     from datafusion_dedup_ai_spark.oracles import sql_connected_components
 
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH RECURSIVE {QD._minhash_mins_with(g)},
     {QD._band_cands_with(g)},
@@ -432,37 +432,29 @@ def q_skew_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Streaming ingest surfaced as a batch-shaped entry: per-process staged
-# replay directories, torn down and rebuilt once per process so reruns are
-# deterministic and stale state from earlier processes never leaks in.
-_STREAM_INGEST_DONE: set[str] = set()
-
-# The registered entries whose fn memoizes a converged streaming replay per
-# (process, sf): their first call drives the stream, later calls scan the
-# snapshot parquet. Benchmarks that want the OPERATOR cost must call
-# reset_replay_memos() before every timed run (scale_probe.py always did;
-# bench_full.py since round 9 — its round-8 medians measured the snapshot
-# scan, undercounting ~150s of replay work: round-8 verdict #1).
-STREAMING_REPLAY_ENTRIES = (
-    "streaming_near_dup_ingest",
-    "streaming_sliding_counts",
-    "streaming_stateful_first_events",
-    "streaming_attribution_join",
-    "streaming_semantic_ingest",
-)
+# Streaming ingest surfaced as batch-shaped entries: each drives its stream
+# to completion in a work dir (materialize.artifact_path) that is torn down
+# and rebuilt once per process (materialize.build_once), so reruns are
+# deterministic and stale state from earlier processes never leaks in; later
+# calls scan the converged result. Benchmarks that want the OPERATOR cost
+# call reset_replay_memos() before every timed run (bench_full.py,
+# scale_probe.py). Entry name -> work dir name:
+_REPLAY_WORK_DIRS = {
+    "streaming_near_dup_ingest": "stream_ingest",
+    "streaming_sliding_counts": "stream_sliding",
+    "streaming_stateful_first_events": "stream_stateful",
+    "streaming_attribution_join": "stream_ssjoin",
+    "streaming_semantic_ingest": "sem_ingest",
+}
+STREAMING_REPLAY_ENTRIES = tuple(_REPLAY_WORK_DIRS)
 
 
 def reset_replay_memos() -> None:
-    """Clear every streaming-replay memo so the next call of any
+    """Forget every streaming replay so the next call of any
     STREAMING_REPLAY_ENTRIES entry re-drives the stream from scratch."""
-    for memo in (
-        _STREAM_INGEST_DONE,
-        _STREAM_SLIDING_DONE,
-        _STATEFUL_DEDUP_DONE,
-        _SSJOIN_DONE,
-        _SEM_INGEST_DONE,
-    ):
-        memo.clear()
+    from datafusion_dedup_ai_spark import materialize as MZ
+
+    MZ.forget(*_REPLAY_WORK_DIRS.values())
 
 
 def _streaming_near_dup_ingest_oracle() -> str:
@@ -497,7 +489,7 @@ def _streaming_near_dup_ingest_oracle() -> str:
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
     from datafusion_dedup_ai_spark.oracles import sql_greedy_min_id_dropped
 
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH RECURSIVE {QD._minhash_mins_with(g)},
     {QD._band_cands_with(g)},
@@ -547,36 +539,31 @@ def q_streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming.ingest import (
         replay_documents_as_stream,
         start_near_dup_ingest,
     )
 
-    root = os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "stream_ingest"
-    )
-    corpus_dir = os.path.join(root, "corpus")
-    if root not in _STREAM_INGEST_DONE:
+    def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
         stream = replay_documents_as_stream(
             spark, sf_dir, os.path.join(root, "stage")
         )
         q = start_near_dup_ingest(
             stream,
-            corpus_dir,
+            os.path.join(root, "corpus"),
             os.path.join(root, "index"),
             os.path.join(root, "ckpt"),
             threshold=0.5,
             available_now=True,
         )
         q.awaitTermination()
-        _STREAM_INGEST_DONE.add(root)
-    corpus = spark.read.parquet(corpus_dir)
+
+    root = MZ.build_once(MZ.artifact_path(sf_dir, "stream_ingest"), drive)
+    corpus = spark.read.parquet(os.path.join(root, "corpus"))
     return corpus.select("doc_id", F.md5("text").alias("text_md5"))
 
-
-_STREAM_SLIDING_DONE: set[str] = set()
 
 # Sliding-window params (streaming/windows.py defaults): length 2h, slide
 # 30min => every event lands in exactly length/slide = 4 epoch-aligned
@@ -627,14 +614,10 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming import windows as W
 
-    root = os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "stream_sliding"
-    )
-    out_dir = os.path.join(root, "result")
-    if root not in _STREAM_SLIDING_DONE:
+    def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
         stream = W.replay_events_as_stream(
             spark, sf_dir, os.path.join(root, "stage")
@@ -647,20 +630,18 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             q.processAllAvailable()
             spark.table("sliding_registry").write.mode("overwrite").parquet(
-                out_dir
+                os.path.join(root, "result")
             )
         finally:
             q.stop()
-        _STREAM_SLIDING_DONE.add(root)
-    return spark.read.parquet(out_dir).select(
+
+    root = MZ.build_once(MZ.artifact_path(sf_dir, "stream_sliding"), drive)
+    return spark.read.parquet(os.path.join(root, "result")).select(
         "win_start_us",
         "win_end_us",
         "event_type",
         F.col("n").cast("bigint").alias("n"),
     )
-
-
-_STATEFUL_DEDUP_DONE: set[str] = set()
 
 
 @register(
@@ -696,17 +677,13 @@ def q_streaming_stateful_first_events(spark: SparkSession, sf_dir: str) -> DataF
     import os
     import shutil
 
-    from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming import windows as W
     from datafusion_dedup_ai_spark.streaming.stateful import (
         streaming_dedup_first_event,
     )
 
-    root = os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "stream_stateful"
-    )
-    out_dir = os.path.join(root, "result")
-    if root not in _STATEFUL_DEDUP_DONE:
+    def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
         stream = W.replay_events_as_stream(
             spark, sf_dir, os.path.join(root, "stage")
@@ -719,17 +696,16 @@ def q_streaming_stateful_first_events(spark: SparkSession, sf_dir: str) -> DataF
         try:
             q.processAllAvailable()
             spark.table("stateful_registry").write.mode("overwrite").parquet(
-                out_dir
+                os.path.join(root, "result")
             )
         finally:
             q.stop()
-        _STATEFUL_DEDUP_DONE.add(root)
-    return spark.read.parquet(out_dir).select(
+
+    root = MZ.build_once(MZ.artifact_path(sf_dir, "stream_stateful"), drive)
+    return spark.read.parquet(os.path.join(root, "result")).select(
         "user_id", "event_type", "event_id", "first_ts_us"
     )
 
-
-_SSJOIN_DONE: set[str] = set()
 
 _ATTR_HORIZON_US = 3_600_000_000  # 60 minutes
 
@@ -776,14 +752,10 @@ def q_streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming import windows as W
 
-    root = os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "stream_ssjoin"
-    )
-    out_dir = os.path.join(root, "result")
-    if root not in _SSJOIN_DONE:
+    def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
         stream = W.replay_events_as_stream(
             spark, sf_dir, os.path.join(root, "stage")
@@ -797,12 +769,13 @@ def q_streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             q.processAllAvailable()
             spark.table("ssjoin_registry").write.mode("overwrite").parquet(
-                out_dir
+                os.path.join(root, "result")
             )
         finally:
             q.stop()
-        _SSJOIN_DONE.add(root)
-    return spark.read.parquet(out_dir).select(
+
+    root = MZ.build_once(MZ.artifact_path(sf_dir, "stream_ssjoin"), drive)
+    return spark.read.parquet(os.path.join(root, "result")).select(
         "user_id", "click_id", "purchase_id", "click_us", "purchase_us"
     )
 
@@ -915,34 +888,17 @@ def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _semantic_cells_glob() -> str:
-    """DuckDB-side path to the (vec_id, cell) assignment fixture, resolved
-    lazily and (re)materialized here — same contract as
-    materialize.snapshot_glob / queries_multimodal._media_glob, including
-    the standalone-consumer session fallback
-    (materialize.ensure_fixture_session)."""
-    import os
-
-    from datafusion_dedup_ai_spark.materialize import (
-        ensure_fixture_session,
-        oracle_sf_dir,
-    )
-    from datafusion_dedup_ai_spark.operators import semantic_dedup as SD
-
-    spark = ensure_fixture_session(SD.semantic_cells_path(oracle_sf_dir()))
-    if spark is not None:
-        SD.materialize_semantic_cells(spark, oracle_sf_dir())
-    return os.path.join(SD.semantic_cells_path(oracle_sf_dir()), "*.parquet")
-
-
 def _semantic_dedup_oracle() -> str:
-    from datafusion_dedup_ai_spark.operators.semantic_dedup import SEMANTIC_TAU
+    from datafusion_dedup_ai_spark.operators.semantic_dedup import (
+        SEMANTIC_CELLS,
+        SEMANTIC_TAU,
+    )
     from datafusion_dedup_ai_spark.queries_similarity import _sql_cosine
 
     cos = _sql_cosine("a.v", "b.v")
     return f"""
     WITH cells AS (
-        SELECT vec_id, cell FROM '{_semantic_cells_glob()}'
+        SELECT vec_id, cell FROM '{SEMANTIC_CELLS.glob()}'
     ), v AS (
         SELECT c.vec_id, c.cell, e.embedding::DOUBLE[] AS v
         FROM cells c JOIN embeddings e USING (vec_id)
@@ -1592,27 +1548,19 @@ from datafusion_dedup_ai_spark.shared_params import (  # noqa: E402
 _VEC_CORPUS_PRED = "vec_id % 10 < 8"
 _VEC_BATCH_PRED = "vec_id % 10 >= 8"
 
-_VINDEX_BUILT: set[str] = set()
-
-
 def _vector_index_path(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.operators import vector_index as VI
 
-    path = os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "vector_index"
-    )
-    if path not in _VINDEX_BUILT:
+    def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         # Explicit n_bits=4: this index is hash-gated against the FIXED
         # lsh_buckets fixture geometry (an index whose width froze at build
         # time). Production builds omit n_bits and get the corpus-adaptive
         # width recorded in the sidecar (build_vector_index docstring).
         VI.build_vector_index(emb.where(F.expr(_VEC_CORPUS_PRED)), path, n_bits=4)
-        _VINDEX_BUILT.add(path)
-    return path
+
+    return MZ.build_once(MZ.artifact_path(sf_dir, "vector_index"), build)
 
 
 def _incremental_semantic_oracle() -> str:
@@ -1622,7 +1570,7 @@ def _incremental_semantic_oracle() -> str:
     then the bitwise-mirrored cosine verifies."""
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
 
-    g = HF.lsh_buckets_glob()
+    g = HF.LSH_BUCKETS.glob()
     return f"""
     WITH cvec AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -1664,9 +1612,6 @@ def q_incremental_semantic_matches(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_SEM_INGEST_DONE: set[str] = set()
-
-
 def _streaming_semantic_ingest_oracle() -> str:
     """SQL replay of the CONVERGED semantic-ingest survivor corpus — the
     embedding twin of _streaming_near_dup_ingest_oracle, same two-part
@@ -1685,7 +1630,7 @@ def _streaming_semantic_ingest_oracle() -> str:
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
     from datafusion_dedup_ai_spark.oracles import sql_greedy_min_id_dropped
 
-    g = HF.lsh_buckets_glob()
+    g = HF.LSH_BUCKETS.glob()
     return f"""
     WITH RECURSIVE cvec AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -1730,32 +1675,29 @@ def q_streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from datafusion_dedup_ai_spark.materialize import _REPO_ROOT, sf_cache_key
+    from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming.ingest import (
         replay_embeddings_as_stream,
         start_semantic_ingest,
     )
 
-    root = os.path.join(
-        _REPO_ROOT, ".materialized", sf_cache_key(sf_dir), "sem_ingest"
-    )
-    corpus_dir = os.path.join(root, "corpus")
-    if root not in _SEM_INGEST_DONE:
+    def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
         stream = replay_embeddings_as_stream(
             spark, sf_dir, os.path.join(root, "stage")
         )
         q = start_semantic_ingest(
             stream,
-            corpus_dir,
+            os.path.join(root, "corpus"),
             os.path.join(root, "index"),
             os.path.join(root, "ckpt"),
             available_now=True,
             index_n_bits=4,
         )
         q.awaitTermination()
-        _SEM_INGEST_DONE.add(root)
-    corpus = spark.read.parquet(corpus_dir)
+
+    root = MZ.build_once(MZ.artifact_path(sf_dir, "sem_ingest"), drive)
+    corpus = spark.read.parquet(os.path.join(root, "corpus"))
     return corpus.select("vec_id", "label")
 
 
@@ -2314,7 +2256,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tokenized_length_stats_oracle() -> str:
     """SQL replay of the tokenizer APPLY step from the frozen piece fixture
-    (hash_fixtures.materialize_bpe_pieces — trained once, shared by both
+    (hash_fixtures.BPE_PIECES — trained once, shared by both
     engines like the semantic_dedup centroids): a recursive CTE walks each
     distinct word left to right, each step consuming
     coalesce(max(len(piece)) over pieces prefix-matching at pos, 1)
@@ -2323,7 +2265,7 @@ def _tokenized_length_stats_oracle() -> str:
     arithmetic except the final exact-BIGINT-over-BIGINT division."""
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
 
-    g = HF.bpe_pieces_glob()
+    g = HF.BPE_PIECES.glob()
     return f"""
     WITH RECURSIVE words AS (
         SELECT DISTINCT tok FROM (
@@ -2379,7 +2321,9 @@ def q_tokenized_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
     from datafusion_dedup_ai_spark.operators import tokenizer as TK
 
-    pieces = HF.load_bpe_pieces(spark, sf_dir)
+    pieces = sorted(
+        r["piece"] for r in HF.BPE_PIECES.read(spark, sf_dir).collect()
+    )
     d = load_table(spark, sf_dir, "documents")
     occ = d.select(
         "doc_id", "source", F.explode(T.tokens(F.col("text"))).alias("tok")
@@ -2415,7 +2359,7 @@ def _media_near_dup_oracle() -> str:
     float64), the mean is one division, the median is (a+b)/2 of picked
     order statistics."""
     from datafusion_dedup_ai_spark.operators.dedup import _signed64
-    from datafusion_dedup_ai_spark.queries_multimodal import _media_glob
+    from datafusion_dedup_ai_spark.operators import multimodal as M
 
     max_hamming = 6
     n_chunks = max_hamming + 1
@@ -2433,7 +2377,7 @@ def _media_near_dup_oracle() -> str:
     )
     return f"""
     WITH m0 AS (
-        SELECT doc_id, payload FROM '{_media_glob()}'
+        SELECT doc_id, payload FROM '{M.MEDIA.glob()}'
     ), plant_src AS (
         SELECT doc_id, payload FROM m0 ORDER BY doc_id LIMIT 10
     ), m AS (
@@ -2527,7 +2471,7 @@ def q_media_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_dedup_ai_spark.operators import multimodal as M
     from datafusion_dedup_ai_spark.operators.dedup import simhash_near_pairs
 
-    media = M.load_media(spark, sf_dir)
+    media = M.MEDIA.read(spark, sf_dir)
     # The md5-derived payloads have no natural near-dups, so plant 10
     # byte-perturbed copies first (deterministic, same convention as the
     # PII planting) — the banded join then finds real matches instead of
@@ -2803,7 +2747,7 @@ _NIBBLES = "0123456789ABCDEF"
 
 
 def _media_nibble_oracle() -> str:
-    from datafusion_dedup_ai_spark.queries_multimodal import _media_glob
+    from datafusion_dedup_ai_spark.operators import multimodal as M
 
     bins = ",\n           ".join(
         f"CAST(length(hi) - length(translate(hi, '{c}', '')) AS BIGINT)"
@@ -2815,7 +2759,7 @@ def _media_nibble_oracle() -> str:
         SELECT doc_id, media_type,
                CAST(octet_length(payload) AS BIGINT) AS n_bytes,
                regexp_replace(hex(payload), '(.)(.)', '\\1', 'g') AS hi
-        FROM '{_media_glob()}'
+        FROM '{M.MEDIA.glob()}'
     )
     SELECT doc_id, media_type, n_bytes,
            {bins}
@@ -2835,7 +2779,7 @@ def q_media_nibble_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
     for byte. A pure string-expression map — no shuffle, no UDF."""
     from datafusion_dedup_ai_spark.operators import multimodal as M
 
-    media = M.load_media(spark, sf_dir)
+    media = M.MEDIA.read(spark, sf_dir)
     hi = F.regexp_replace(F.hex(F.col("payload")), "(.)(.)", "$1")
     cols = [
         "doc_id",
@@ -3345,7 +3289,9 @@ def _cluster_balanced_oracle() -> str:
 
 
 def _cluster_balanced_oracle_resolved() -> str:
-    return _cluster_balanced_oracle().replace("{glob}", _semantic_cells_glob())
+    from datafusion_dedup_ai_spark.operators.semantic_dedup import SEMANTIC_CELLS
+
+    return _cluster_balanced_oracle().replace("{glob}", SEMANTIC_CELLS.glob())
 
 
 @register("cluster_balanced_sample", _cluster_balanced_oracle_resolved)
@@ -3930,7 +3876,7 @@ def _fuzzy_contamination_oracle() -> str:
         _minhash_mins_with,
     )
 
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH {_minhash_mins_with(g)},
     {_band_cands_with(g)},
@@ -4061,7 +4007,7 @@ _MEDIA_PLANT_MOD = 100
 
 
 def _multimodal_curation_oracle() -> str:
-    from datafusion_dedup_ai_spark.queries_multimodal import _media_glob
+    from datafusion_dedup_ai_spark.operators import multimodal as M
     from datafusion_dedup_ai_spark.registry import get_oracle
 
     return f"""
@@ -4070,7 +4016,7 @@ def _multimodal_curation_oracle() -> str:
         SELECT doc_id, media_type,
                CAST(octet_length(payload) AS BIGINT) AS n_bytes,
                md5(hex(payload)) AS payload_md5
-        FROM '{_media_glob()}'
+        FROM '{M.MEDIA.glob()}'
     ), m AS (
         SELECT * FROM m0
         UNION ALL
@@ -4129,7 +4075,7 @@ def q_multimodal_curation_decisions(
     from datafusion_dedup_ai_spark.operators import multimodal as M
     from datafusion_dedup_ai_spark.queries_text import q_doc_quality_scores
 
-    media = M.load_media(spark, sf_dir)
+    media = M.MEDIA.read(spark, sf_dir)
     qual0 = q_doc_quality_scores(spark, sf_dir).select("doc_id", "quality")
     m0 = media.select(
         "doc_id",
@@ -4201,8 +4147,8 @@ def _ann_lsh_gated_oracle() -> str:
         _sql_cosine,
     )
 
-    g = HF.lsh_buckets_glob()
-    qm = HF.lsh_query_margins_glob()
+    g = HF.LSH_BUCKETS.glob()
+    qm = HF.LSH_QUERY_MARGINS.glob()
     return f"""
     WITH c AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -5089,7 +5035,7 @@ def _b3_oracle() -> str:
     return f"""
     WITH snap AS (
         SELECT row_order, base_name, cluster_id, cluster_size
-        FROM '{MZ.snapshot_glob()}'
+        FROM '{MZ.CLUSTERS.glob()}'
     ), labeled AS (
         SELECT row_order, cluster_id, cluster_size,
                CASE WHEN base_name = '' THEN '&' || row_order
@@ -5158,7 +5104,7 @@ def q_cluster_b3_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.functions.normalize import token_sort_key
 
-    snap = MZ.read_clusters_snapshot(spark, sf_dir).select(
+    snap = MZ.CLUSTERS.read(spark, sf_dir).select(
         "row_order", "base_name", "cluster_id", "cluster_size"
     )
     labeled = snap.select(
@@ -5398,7 +5344,7 @@ def _minhash_estimate_oracle() -> str:
     )
     from datafusion_dedup_ai_spark.registry import get_oracle
 
-    g = HF.shingle_hashes_glob()
+    g = HF.SHINGLE_HASHES.glob()
     return f"""
     WITH {_minhash_mins_with(g)},
     pairs AS ({get_oracle("ngram_jaccard_pairs")}),

@@ -1,8 +1,7 @@
 """Multimodal query pack: payload stats and frame sampling are oracle-gated,
-now over a TRUE parquet BINARY column — ``operators.multimodal`` materializes
-a deterministic binary fixture once per process and both the Spark queries
-and the DuckDB oracles read the same parquet files (the materialized-snapshot
-pattern of materialize.py). The mapInPandas feature extractor is rows-only
+now over a TRUE parquet BINARY column — ``operators.multimodal.MEDIA`` is a
+deterministic binary ``materialize.Fixture`` that both the Spark queries and
+the DuckDB oracles read. The mapInPandas feature extractor is rows-only
 (its arithmetic is pinned in tests/test_multimodal.py).
 
 DuckDB 1.0.0 has no md5(BLOB), so the content-hash column both sides emit is
@@ -11,32 +10,11 @@ md5(hex(payload)) — hex() of a BLOB is uppercase VARCHAR in both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_dedup_ai_spark.materialize import oracle_sf_dir
 from datafusion_dedup_ai_spark.operators import multimodal as M
 from datafusion_dedup_ai_spark.registry import register
-
-
-def _media_glob() -> str:
-    """DuckDB-side path to the fixture the driver's compare targets.
-
-    Resolved lazily (the oracle registrations are callables); the fixture is
-    (re)materialized HERE — so the oracle is valid regardless of whether the
-    driver resolves oracles before or after running the Spark query, and a
-    stale fixture left by an earlier process is refreshed before either side
-    reads it. Standalone (no-active-session) consumers get a session built
-    for them when the fixture is missing on disk — see
-    materialize.ensure_fixture_session."""
-    from datafusion_dedup_ai_spark.materialize import ensure_fixture_session
-
-    spark = ensure_fixture_session(M.media_fixture_path(oracle_sf_dir()))
-    if spark is not None:
-        M.materialize_media(spark, oracle_sf_dir())
-    return os.path.join(M.media_fixture_path(oracle_sf_dir()), "*.parquet")
 
 
 @register(
@@ -46,13 +24,13 @@ def _media_glob() -> str:
            CAST(octet_length(payload) AS BIGINT) AS n_bytes,
            md5(hex(payload)) AS payload_md5,
            n_frames
-    FROM '{_media_glob()}'
+    FROM '{M.MEDIA.glob()}'
     """,
 )
 def q_media_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary handling: payload byte length + content hash + typed
     metadata, computed on an actual parquet BINARY column."""
-    media = M.load_media(spark, sf_dir)
+    media = M.MEDIA.read(spark, sf_dir)
     return media.select(
         "doc_id",
         "media_type",
@@ -68,7 +46,7 @@ def q_media_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH video AS (
         SELECT doc_id, n_frames,
                CAST(octet_length(payload) AS BIGINT) AS n_bytes
-        FROM '{_media_glob()}'
+        FROM '{M.MEDIA.glob()}'
         WHERE media_type = 'video'
     ), frames AS (
         SELECT doc_id, n_frames, n_bytes,
@@ -82,25 +60,10 @@ def q_media_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evenly-spaced frame sampling over video payloads (sequence + explode);
-    the per-frame decode is the pluggable stub."""
-    media = M.load_media(spark, sf_dir)
+    """Evenly-spaced frame sampling over video payloads (sequence +
+    explode)."""
+    media = M.MEDIA.read(spark, sf_dir)
     return M.sample_frames(media)
-
-
-def _media_features_glob() -> str:
-    """DuckDB-side path to the featurizer-entropy fixture (see
-    materialize_media_features), resolved lazily like _media_glob."""
-    from datafusion_dedup_ai_spark.materialize import ensure_fixture_session
-
-    spark = ensure_fixture_session(
-        M.media_features_fixture_path(oracle_sf_dir())
-    )
-    if spark is not None:
-        M.materialize_media_features(spark, oracle_sf_dir())
-    return os.path.join(
-        M.media_features_fixture_path(oracle_sf_dir()), "*.parquet"
-    )
 
 
 def _media_feature_histograms_oracle() -> str:
@@ -124,12 +87,12 @@ def _media_feature_histograms_oracle() -> str:
         SELECT doc_id, media_type,
                CAST(octet_length(payload) AS BIGINT) AS n_bytes,
                regexp_replace(hex(payload), '(.)(.)', '\\1', 'g') AS hi
-        FROM '{_media_glob()}'
+        FROM '{M.MEDIA.glob()}'
     )
     SELECT h.doc_id, h.media_type, h.n_bytes,
            f.byte_entropy,
            {json_expr} AS byte_histogram_json
-    FROM h JOIN '{_media_features_glob()}' f ON f.doc_id = h.doc_id
+    FROM h JOIN '{M.MEDIA_FEATURES.glob()}' f ON f.doc_id = h.doc_id
     """
 
 
@@ -142,7 +105,7 @@ def q_media_feature_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering from the raw payload in SQL and joins the entropy from the
     materialized featurizer fixture (see
     _media_feature_histograms_oracle)."""
-    media = M.load_media(spark, sf_dir)
+    media = M.MEDIA.read(spark, sf_dir)
     feats = M.extract_features(media)
     # Serialize the histogram for the contract surface: the driver's rows-only
     # canonicalizer sorts every column and array cells are unhashable in

@@ -281,7 +281,7 @@ def composite_near_pairs(emb: DataFrame) -> DataFrame:
     Round-6: n_bits adapts to the corpus count — the fixture-tuned 4-bit
     default is quadratic beyond fixture scale (probe: exponent 1.43 at
     10x), and the oracle fixture computes the SAME bits from the same
-    count (hash_fixtures.materialize_lsh_buckets_adaptive), so the gate
+    count (hash_fixtures.LSH_BUCKETS_ADAPTIVE), so the gate
     holds at every sf. The count is one metadata-cheap job on the
     embeddings scan, paid once per composite construction.
 
@@ -302,13 +302,13 @@ def composite_near_pairs(emb: DataFrame) -> DataFrame:
 def _embedding_dedup_clusters_oracle() -> str:
     """SQL replay of the semantic-dedup composite from the materialized
     hyperplane-bucket fixture (operators/hash_fixtures.py::
-    materialize_lsh_buckets — the numpy matmul is the only non-SQL step):
+    LSH_BUCKETS_ADAPTIVE — the numpy matmul is the only non-SQL step):
     bucket self-join candidates, bitwise-mirrored cosine verify, then
     connected components as a recursive transitive closure."""
     from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
     from datafusion_dedup_ai_spark.oracles import sql_connected_components
 
-    g = HF.lsh_buckets_adaptive_glob()
+    g = HF.LSH_BUCKETS_ADAPTIVE.glob()
     return f"""
     WITH RECURSIVE cvec AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -383,8 +383,8 @@ def _lsh_width_report_oracle() -> str:
 
     parts = []
     for mode, g in (
-        ("fixed", HF.lsh_buckets_glob()),
-        ("adaptive", HF.lsh_buckets_adaptive_glob()),
+        ("fixed", HF.LSH_BUCKETS.glob()),
+        ("adaptive", HF.LSH_BUCKETS_ADAPTIVE.glob()),
     ):
         parts.append(f"""
     SELECT '{mode}' AS width_mode,

@@ -642,17 +642,13 @@ def test_ann_lsh_gated_recall_and_bucket_provenance(spark, sf_dir):
     got = q_ann_lsh_topk_gated(spark, sf_dir).collect()
     assert got
     buckets = {}
-    bdf = spark.read.parquet(
-        HF.materialize_lsh_buckets(spark, sf_dir)
-    ).collect()
+    bdf = HF.LSH_BUCKETS.read(spark, sf_dir).collect()
     for r in bdf:
         buckets.setdefault(r["vec_id"], set()).add((r["table"], r["bucket"]))
     # query probe sets: base bucket + (bucket XOR 1<<argmin-margin-bit)
     qprobe: dict[int, set] = {}
     best: dict[tuple, tuple] = {}
-    for r in spark.read.parquet(
-        HF.materialize_lsh_query_margins(spark, sf_dir)
-    ).collect():
+    for r in HF.LSH_QUERY_MARGINS.read(spark, sf_dir).collect():
         key = (r["vec_id"], r["table"])
         qprobe.setdefault(r["vec_id"], set()).add((r["table"], r["bucket"]))
         if key not in best or r["margin"] < best[key][0]:
@@ -882,7 +878,7 @@ def test_b3_metrics_match_python_reference(spark, sf_dir):
     from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.queries_extras import q_cluster_b3_metrics
 
-    snap = MZ.read_clusters_snapshot(spark, sf_dir).collect()
+    snap = MZ.CLUSTERS.read(spark, sf_dir).collect()
     items = []
     for row in snap:
         base = row["base_name"] or ""

@@ -1,20 +1,26 @@
 """Multimodal plumbing: binary schema, Arrow featurizer invariants, frame
-sampling bounds, and the decode stub contract."""
+sampling bounds, the decode seam, and the parquet-fixture contract."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
+from datafusion_dedup_ai_spark import materialize as MZ
+from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
 from datafusion_dedup_ai_spark.operators import multimodal as M
+from datafusion_dedup_ai_spark.operators import semantic_dedup as SD
 from datafusion_dedup_ai_spark.sources.readers import load_table
 
 
 @pytest.fixture(scope="module")
 def media(spark, sf_dir):
     # the materialized fixture — the true parquet BINARY scan queries use
-    df = M.load_media(spark, sf_dir)
+    df = M.MEDIA.read(spark, sf_dir)
     df.cache()
     return df
 
@@ -29,8 +35,7 @@ def test_fixture_is_true_binary_parquet(spark, sf_dir, media):
     that fail utf8 decoding for typical rows."""
     import duckdb
 
-    import os
-    path = M.media_fixture_path(sf_dir)
+    path = M.MEDIA.path(sf_dir)
     part = [
         os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
     ][0]
@@ -86,35 +91,53 @@ def test_frame_samples_within_payload(media):
         assert 0 <= r["byte_offset"] < sizes[r["doc_id"]]
 
 
-def test_oracle_resolution_materializes_fixture(spark, sf_dir):
-    """Execution-order independence: resolving the media oracle SQL must
-    (re)materialize the parquet fixture itself when a SparkSession is active
-    — the driver may run oracles BEFORE the Spark query, and a stale fixture
-    from an earlier process must be refreshed before either side reads it."""
-    import os
-    import shutil
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_FIXTURES = sorted(
+    (
+        f
+        for mod in (MZ, HF, M, SD)
+        for f in vars(mod).values()
+        if isinstance(f, MZ.Fixture)
+    ),
+    key=lambda f: f.name,
+)
+# The fixture directory names stay fixed: trees already on disk and
+# standalone oracle consumers resolve them by name.
+_FIXTURE_NAMES = [
+    "bpe_pieces",
+    "clusters",
+    "lsh_buckets",
+    "lsh_buckets_adaptive",
+    "lsh_query_margins",
+    "media",
+    "media_features",
+    "semantic_cells",
+    "shingle_hashes",
+    "token_hashes",
+]
 
-    from datafusion_dedup_ai_spark.queries_multimodal import _media_glob
 
-    path = M.media_fixture_path(sf_dir)
+@pytest.mark.parametrize("fixture", _FIXTURES, ids=lambda f: f.name)
+def test_oracle_resolution_materializes_fixture(spark, sf_dir, fixture):
+    """The fixture contract, per parquet fixture: (1) it lives at
+    ``.materialized/<sf_cache_key(sf_dir)>/<name>.parquet``; (2) execution-
+    order independence — resolving its oracle glob (re)materializes it when
+    a SparkSession is active, since the driver may run oracles BEFORE the
+    Spark query and a stale copy must be refreshed before either side reads
+    it; (3) a second materialize in the same process does not rewrite it."""
+    assert [f.name for f in _FIXTURES] == _FIXTURE_NAMES
+    path = fixture.path(sf_dir)
+    assert path == os.path.join(
+        _REPO_ROOT, ".materialized", MZ.sf_cache_key(sf_dir), fixture.name + ".parquet"
+    )
     shutil.rmtree(path, ignore_errors=True)
-    M._written.discard(path)
-    glob = _media_glob()
+    MZ.forget(os.path.basename(path))
+    assert fixture.glob() == os.path.join(path, "*.parquet")
     assert os.path.isdir(path), "oracle resolution did not materialize"
-    assert glob.startswith(path)
-    # cluster-snapshot oracles follow the same contract
-    from datafusion_dedup_ai_spark import materialize as MZ
-
-    snap = MZ.clusters_snapshot_path(sf_dir)
-    shutil.rmtree(snap, ignore_errors=True)
-    MZ._written.discard(snap)
-    MZ.snapshot_glob()
-    assert os.path.isdir(snap)
-
-
-def test_decode_stub_contract():
-    with pytest.raises(NotImplementedError):
-        M.decode_media(b"\x00", "image")
+    before = os.stat(path)
+    assert fixture.materialize(spark, sf_dir) == path
+    after = os.stat(path)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
 
 
 def test_pluggable_decoder_drives_featurizer(media):
@@ -168,7 +191,7 @@ def test_perceptual_signature_matches_python_reference(spark, sf_dir):
     Python/numpy on every payload and require bit-exact signatures."""
     import numpy as np
 
-    media = M.load_media(spark, sf_dir)
+    media = M.MEDIA.read(spark, sf_dir)
     rows = media.select("doc_id", "payload").collect()
     got = {
         r["doc_id"]: r["psig"]

@@ -1,6 +1,6 @@
-"""Round-8 unit pins: the rotation policy function, the post-write fixture
-reaping (round-7 advice: no destructive IO inside sf_cache_key), and the
-phonetic max_bucket_size fuse semantics."""
+"""Unit pins: the rotation policy function, the post-build fixture reaping
+(no destructive IO inside sf_cache_key), the streaming-replay memo reset,
+and the phonetic max_bucket_size fuse semantics."""
 
 from __future__ import annotations
 
@@ -51,8 +51,8 @@ def test_validation_history_freeze():
     assert h7["phonetic_blocked_pairs"] == 7
 
 
-def test_reap_after_write_reaps_only_stale_versions(tmp_path):
-    """_reap_after_write (called from atomic_parquet_overwrite) deletes
+def test_reap_after_write_reaps_only_stale_versions(tmp_path, monkeypatch):
+    """The first build under a key dir (materialize.build_once) reaps
     same-sf trees under OLD code fingerprints, keeps the current one, and
     never touches other prefixes or non-.materialized paths. sf_cache_key
     itself stays a pure path computation."""
@@ -65,14 +65,14 @@ def test_reap_after_write_reaps_only_stale_versions(tmp_path):
     old = os.path.join(base, f"{prefix}-00000000")
     legacy = os.path.join(base, prefix)  # pre-versioning layout
     other = os.path.join(base, "sfother-cafebabe-00000000")
+    monkeypatch.setattr(M, "_built", set())
     try:
         for d in (cur, old, legacy, other):
             os.makedirs(d, exist_ok=True)
-        M._reaped.discard(prefix)
         # pure getter: no deletion happens on key computation alone
         M.sf_cache_key("/tmp/reaptest-sfdir")
         assert os.path.isdir(old) and os.path.isdir(legacy)
-        M._reap_after_write(os.path.join(cur, "x.parquet"))
+        M.build_once(os.path.join(cur, "x.parquet"), lambda path: None)
         assert os.path.isdir(cur), "current-version tree must survive"
         assert not os.path.isdir(old), "old-fingerprint tree must be reaped"
         assert not os.path.isdir(legacy), "pre-versioning tree must be reaped"
@@ -80,13 +80,74 @@ def test_reap_after_write_reaps_only_stale_versions(tmp_path):
         # non-.materialized paths are a no-op
         outside = tmp_path / f"{prefix}-{M.code_fingerprint()}"
         outside.mkdir()
-        M._reaped.discard(prefix)
-        M._reap_after_write(str(outside / "x.parquet"))
+        M._reap_stale_versions(str(outside))
         assert outside.is_dir()
     finally:
         for d in (cur, old, legacy, other):
             shutil.rmtree(d, ignore_errors=True)
-        M._reaped.discard(prefix)
+
+
+def test_reset_replay_memos_forgets_only_the_streaming_replays(
+    tmp_path, monkeypatch
+):
+    """bench_full.py and scale_probe.py call reset_replay_memos() so a timed
+    run re-drives each streaming replay instead of scanning its converged
+    result. It must forget exactly the five streaming work dirs and keep
+    every parquet fixture and the persisted indexes. Checked at the memo:
+    no stream is driven."""
+    from datafusion_dedup_ai_spark import materialize as M
+    from datafusion_dedup_ai_spark.operators import hash_fixtures as HF
+    from datafusion_dedup_ai_spark.operators import multimodal as MM
+    from datafusion_dedup_ai_spark.operators import semantic_dedup as SD
+    from datafusion_dedup_ai_spark.queries_extras import (
+        STREAMING_REPLAY_ENTRIES,
+        reset_replay_memos,
+    )
+
+    replays = [
+        "stream_ingest",
+        "stream_sliding",
+        "stream_stateful",
+        "stream_ssjoin",
+        "sem_ingest",
+    ]
+    fixtures = [
+        f.name + ".parquet"
+        for mod in (M, HF, MM, SD)
+        for f in vars(mod).values()
+        if isinstance(f, M.Fixture)
+    ]
+    kept = fixtures + ["vector_index", "minhash_index"]
+    assert len(STREAMING_REPLAY_ENTRIES) == len(replays)
+    monkeypatch.setattr(M, "_built", set())  # leave the session's memo alone
+    sf = str(tmp_path / "sf_memo")
+    paths = [M.artifact_path(sf, name) for name in replays + kept]
+    for path in paths:
+        M.build_once(path, lambda path: None)
+    reset_replay_memos()
+    rebuilt: list[str] = []
+    for path in paths:
+        M.build_once(path, rebuilt.append)
+    assert sorted(os.path.basename(p) for p in rebuilt) == sorted(replays)
+
+
+def test_minhash_index_path_is_versioned(tmp_path, monkeypatch):
+    """The persisted MinHash index follows the one path rule: two sf dirs
+    sharing a basename get separate indexes under their versioned keys."""
+    from datafusion_dedup_ai_spark import materialize as M
+    from datafusion_dedup_ai_spark.queries_dedup_ext import _corpus_index_path
+
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sf_a, sf_b = str(tmp_path / "a" / "sf1"), str(tmp_path / "b" / "sf1")
+    expected = [
+        os.path.join(repo_root, ".materialized", M.sf_cache_key(sf), "minhash_index")
+        for sf in (sf_a, sf_b)
+    ]
+    # memoized as built, so no Spark build runs
+    monkeypatch.setattr(M, "_built", set(expected))
+    got = [_corpus_index_path(None, sf) for sf in (sf_a, sf_b)]
+    assert got == expected
+    assert got[0] != got[1]
 
 
 def test_phonetic_max_bucket_size_drops_only_oversized_codes(spark):

@@ -308,7 +308,7 @@ def test_lsh_bits_for_adaptive_sizing():
 
 def test_adaptive_fixture_and_composite_agree_on_bits(spark, sf_dir):
     """Cross-module pin: the oracle fixture (hash_fixtures.
-    materialize_lsh_buckets_adaptive) and the Spark composite
+    LSH_BUCKETS_ADAPTIVE) and the Spark composite
     (queries_similarity.composite_near_pairs) MUST derive n_bits from the
     same corpus count, or the hash gate silently diverges at any sf where
     the adaptive width departs from the fixed-width default. Verified
@@ -326,7 +326,7 @@ def test_adaptive_fixture_and_composite_agree_on_bits(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     bits = max(lsh_bits_schedule(n))
-    path = HF.materialize_lsh_buckets_adaptive(spark, sf_dir)
+    path = HF.LSH_BUCKETS_ADAPTIVE.materialize(spark, sf_dir)
     rows = duckdb.sql(
         f"SELECT COUNT(*) AS c, MAX(bucket) AS mb FROM '{path}/*.parquet'"
     ).fetchone()
