@@ -100,6 +100,12 @@ def _reap_stale_versions(key_dir: str) -> None:
         # entry == prefix is the pre-versioning layout
         if (entry == prefix or entry.startswith(prefix + "-")) and entry != key:
             shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
+    # the MinHash index once lived at .materialized/<sf basename>/minhash_index;
+    # the basename dir goes too once nothing else is left in it
+    legacy = os.path.join(base, prefix.rsplit("-", 1)[0])
+    shutil.rmtree(os.path.join(legacy, "minhash_index"), ignore_errors=True)
+    if os.path.isdir(legacy) and not os.listdir(legacy):
+        os.rmdir(legacy)
 
 
 # The driver runs the side-by-side compare at sf0.01 with no env set; pytest

@@ -81,11 +81,12 @@ def _lsh_bucket_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity_search.lsh_bucketize at FIXED build-time
     parameters (16 tables x 4 bits, seed 7) — the fixture behind the two
     index-shaped oracles (`ann_lsh_topk_gated`, whose query tier is tuned
-    once, and `incremental_semantic_matches`, whose persisted vector index
-    freezes its hyperplanes at build time; an index's geometry does not
-    change as the corpus grows). The ONE non-SQL step (a numpy matmul);
-    everything downstream — bucket self-join, exact-cosine verify,
-    component labeling — is SQL the oracle replays. The code computation
+    once, and `incremental_semantic_matches`, whose persisted
+    lsh_index.HYPERPLANE index freezes its hyperplanes at build time; an
+    index's geometry does not change as the corpus grows). The ONE non-SQL
+    step (a numpy matmul); everything downstream — bucket self-join,
+    exact-cosine verify, component labeling — is SQL the oracle replays.
+    The code computation
     itself is pinned against a numpy-free pure-Python reference in
     tests/test_similarity.py. The ad-hoc batch-dedup composite uses the
     corpus-ADAPTIVE twin LSH_BUCKETS_ADAPTIVE instead."""

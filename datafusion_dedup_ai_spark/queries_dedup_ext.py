@@ -451,12 +451,12 @@ def _corpus_index_path(spark: SparkSession, sf_dir: str) -> str:
     """The corpus signature index, built once per process per sf: it is
     immutable per scale factor, so one build serves every evaluation."""
     from datafusion_dedup_ai_spark import materialize as MZ
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     def build(path: str) -> None:
         d = load_spread(spark, sf_dir, "documents")
         sh = d.select("doc_id", T.distinct_shingles(F.col("text")).alias("shingles"))
-        MI.build_minhash_index(sh.where(F.expr(_CORPUS_PRED)), path)
+        LX.build(LX.MINHASH, sh.where(F.expr(_CORPUS_PRED)), path)
 
     return MZ.build_once(MZ.artifact_path(sf_dir, "minhash_index"), build)
 
@@ -465,7 +465,7 @@ def _corpus_index_path(spark: SparkSession, sf_dir: str) -> str:
 def q_incremental_near_dup_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH matches of incoming-batch docs against the existing corpus
     (cross-set only — |batch| x collision-rate candidates, never |corpus|^2),
-    via the PERSISTED signature index (operators/minhash_index.py): the
+    via the PERSISTED signature index (operators/lsh_index.py): the
     corpus is shingled/signed ONCE PER PROCESS into a parquet index (the
     materialize.py snapshot pattern), then the batch is matched against the
     index without rescanning corpus text — the shape a per-crawl pipeline
@@ -474,10 +474,15 @@ def q_incremental_near_dup_matches(spark: SparkSession, sf_dir: str) -> DataFram
     Jaccard ground truth are pinned in tests/test_dedup_ext.py.
     Hash-gated since round 5: the oracle replays the cross-set pipeline in
     SQL from the shingle-hash fixture."""
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from pyspark import StorageLevel
+
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     index_path = _corpus_index_path(spark, sf_dir)
     d = load_spread(spark, sf_dir, "documents")
     sh = d.select("doc_id", T.distinct_shingles(F.col("text")).alias("shingles"))
-    batch_sh = sh.where(F.expr(_BATCH_PRED))
-    return MI.incremental_near_dup_matches_indexed(spark, index_path, batch_sh)
+    # the match reads the batch twice (signatures and verify)
+    batch_sh = sh.where(F.expr(_BATCH_PRED)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return LX.match(LX.MINHASH, spark, index_path, batch_sh, _JACCARD_T)

@@ -466,7 +466,7 @@ def _streaming_near_dup_ingest_oracle() -> str:
     * Detection is batch-independent. A pair is detected iff the two docs
       share an LSH band (signatures are per-doc functions of the text at
       FIXED geometry — 64 hashes / 16 bands / seed 42 on BOTH the in-batch
-      path and the persisted index, minhash_index.py) AND exact Jaccard >=
+      path and the persisted index, lsh_index.py) AND exact Jaccard >=
       0.5. Band collision and Jaccard depend only on the two documents, so
       the same pair graph is seen whether the docs meet in one batch or
       across the index.
@@ -541,14 +541,14 @@ def q_streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming.ingest import (
-        replay_documents_as_stream,
+        replay_as_stream,
         start_near_dup_ingest,
     )
 
     def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
-        stream = replay_documents_as_stream(
-            spark, sf_dir, os.path.join(root, "stage")
+        stream = replay_as_stream(
+            spark, sf_dir, "documents", "doc_id", os.path.join(root, "stage")
         )
         q = start_near_dup_ingest(
             stream,
@@ -1550,15 +1550,17 @@ _VEC_BATCH_PRED = "vec_id % 10 >= 8"
 
 def _vector_index_path(spark: SparkSession, sf_dir: str) -> str:
     from datafusion_dedup_ai_spark import materialize as MZ
-    from datafusion_dedup_ai_spark.operators import vector_index as VI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         # Explicit n_bits=4: this index is hash-gated against the FIXED
         # lsh_buckets fixture geometry (an index whose width froze at build
         # time). Production builds omit n_bits and get the corpus-adaptive
-        # width recorded in the sidecar (build_vector_index docstring).
-        VI.build_vector_index(emb.where(F.expr(_VEC_CORPUS_PRED)), path, n_bits=4)
+        # width recorded in the sidecar (lsh_index.HYPERPLANE).
+        LX.build(
+            LX.HYPERPLANE, emb.where(F.expr(_VEC_CORPUS_PRED)), path, n_bits=4
+        )
 
     return MZ.build_once(MZ.artifact_path(sf_dir, "vector_index"), build)
 
@@ -1594,22 +1596,20 @@ def _incremental_semantic_oracle() -> str:
 def q_incremental_semantic_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic near-dup matches of an incoming batch (vec_id%10>=8) against
     the existing corpus (vec_id%10<8), via the PERSISTED vector index
-    (operators/vector_index.py): the corpus is coded ONCE PER PROCESS into a
+    (operators/lsh_index.py): the corpus is coded ONCE PER PROCESS into a
     parquet index; the batch path computes only its own codes, bucket-joins
     them against the index's stored codes, and exact-cosine-verifies the
     candidates against the index's stored embeddings — corpus codes are
     never recomputed (single-ArrowEvalPython plan assert in
-    tests/test_vector_index.py). Hash-gated: the oracle replays the
+    tests/test_lsh_index.py). Hash-gated: the oracle replays the
     cross-set bucket join + bitwise-mirrored cosine from the materialized
     hyperplane-bucket fixture."""
-    from datafusion_dedup_ai_spark.operators import vector_index as VI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     index_path = _vector_index_path(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.where(F.expr(_VEC_BATCH_PRED))
-    return VI.incremental_semantic_matches_indexed(
-        spark, index_path, batch, threshold=NEAR_DUP_THRESHOLD
-    )
+    return LX.match(LX.HYPERPLANE, spark, index_path, batch, NEAR_DUP_THRESHOLD)
 
 
 def _streaming_semantic_ingest_oracle() -> str:
@@ -1677,14 +1677,14 @@ def q_streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from datafusion_dedup_ai_spark import materialize as MZ
     from datafusion_dedup_ai_spark.streaming.ingest import (
-        replay_embeddings_as_stream,
+        replay_as_stream,
         start_semantic_ingest,
     )
 
     def drive(root: str) -> None:
         shutil.rmtree(root, ignore_errors=True)
-        stream = replay_embeddings_as_stream(
-            spark, sf_dir, os.path.join(root, "stage")
+        stream = replay_as_stream(
+            spark, sf_dir, "embeddings", "vec_id", os.path.join(root, "stage")
         )
         q = start_semantic_ingest(
             stream,

@@ -184,9 +184,9 @@ def compact_in_place(
     it on any failure it can catch, and the streaming sinks' reconcile pass
     self-heals on restart; a direct (non-streaming) caller killed at exactly
     that point recovers manually by renaming ``<dir>.old`` back. Returns the
-    output file count. This is what the persisted-index compactors
-    (minhash_index/vector_index) delegate to after streaming appends decay
-    into thousands of small files."""
+    output file count. ``operators.lsh_index.compact`` delegates here for
+    both index kinds after streaming appends decay into thousands of small
+    files."""
     import shutil
 
     tmp = data_dir + ".compact"

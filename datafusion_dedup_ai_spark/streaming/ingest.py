@@ -1,31 +1,60 @@
 """Streaming corpus ingestion: continuous incremental dedup via
 ``foreachBatch`` (extension scope — the always-on form of
-``operators.dedup.incremental_exact_dedup``).
+``operators.dedup.incremental_exact_dedup`` and of the persisted-LSH-index
+matches in ``operators.lsh_index``).
 
 Each micro-batch of incoming documents is deduplicated (a) within the batch
-(keep lowest id per content hash) and (b) against everything already written
-to the output corpus, then APPENDED to that corpus. The sink is **idempotent
-under replay**: foreachBatch is at-least-once, but a replayed document's
-content hash is already in the corpus, so the anti-join drops it — the
-content-addressed dedup IS the exactly-once mechanism, with no transactional
-sink required.
+and (b) against everything already written to the output corpus, then
+APPENDED to that corpus. The sinks are **idempotent under replay**:
+foreachBatch is at-least-once, but a replayed item already has its
+duplicate in the corpus, so it is dropped — content identity (or
+similarity, one tier up) IS the exactly-once mechanism, with no
+transactional sink required.
 
-Scale shape: the corpus side of the anti-join reads only the hash column —
-with the corpus written as parquet, that is a single-column scan (column
-pruning), and in production the hashes would live in a compacted index table
-appended per batch instead of a rescan. The per-batch work is
-O(|batch| + |corpus-hash-scan|), independent of corpus row width.
+Scale shape: the exact sink's anti-join reads only the hash column of the
+corpus (column pruning); the screening sinks read only the persisted index,
+never the corpus. The per-batch work is O(|batch| + |corpus-key-scan|),
+independent of corpus row width.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from datafusion_dedup_ai_spark.operators.dedup import incremental_exact_dedup
+from datafusion_dedup_ai_spark.operators import lsh_index as LX
+from datafusion_dedup_ai_spark.operators.dedup import (
+    greedy_min_id_dropped,
+    incremental_exact_dedup,
+)
+from datafusion_dedup_ai_spark.sources.layout import parquet_files
+
+
+def _start(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``process`` as the foreachBatch sink. ``available_now=True``
+    drains queued input and stops — the deterministic mode for tests and
+    backfills; pass False for a continuously running ingest."""
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _read_corpus(spark, corpus_dir: str) -> DataFrame | None:
+    """The parquet corpus accumulated so far, or None before the first
+    batch has written any."""
+    return spark.read.parquet(corpus_dir) if parquet_files(corpus_dir) else None
 
 
 def start_incremental_ingest(
@@ -36,34 +65,139 @@ def start_incremental_ingest(
     id_col: str = "doc_id",
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the foreachBatch incremental-dedup sink.
+    """Start the foreachBatch exact-dedup sink: keep the lowest id per
+    content hash within the batch, anti-join against the corpus hashes.
 
     ``stream`` is any streaming DataFrame with (id_col, text_col, ...);
     ``corpus_dir`` is the parquet corpus being accumulated (created on the
-    first batch). ``available_now=True`` drains queued input and stops —
-    the deterministic mode for tests and backfills; pass False for a
-    continuously running ingest.
+    first batch).
     """
     spark = stream.sparkSession
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.isdir(corpus_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(corpus_dir)
-        ):
-            corpus = spark.read.parquet(corpus_dir)
-            new = incremental_exact_dedup(corpus, batch_df, text_col, id_col)
-        else:
+        corpus = _read_corpus(spark, corpus_dir)
+        if corpus is None:
             # first batch: no corpus yet — only in-batch dedup applies
-            empty = batch_df.limit(0)
-            new = incremental_exact_dedup(empty, batch_df, text_col, id_col)
+            corpus = batch_df.limit(0)
+        new = incremental_exact_dedup(corpus, batch_df, text_col, id_col)
         new.write.mode("append").parquet(corpus_dir)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint_dir, available_now)
+
+
+def _start_screening_sink(
+    stream: DataFrame,
+    kind: LX.IndexKind,
+    corpus_dir: str,
+    index_dir: str,
+    checkpoint_dir: str,
+    id_col: str,
+    payload_col: str,
+    indexable: Callable[[DataFrame], DataFrame],
+    screen: Callable[..., tuple[DataFrame, DataFrame]],
+    available_now: bool,
+    compact_max_files: int | None,
+    build_params: dict,
+) -> StreamingQuery:
+    """The index lifecycle both near-dup screening sinks share.
+
+    Per micro-batch the sink's ``screen(batch_df, have_index, pin)``, where
+    ``pin`` persists a frame until the micro-batch ends:
+
+    1. drops batch items matching the persisted INDEX (a cross-set bucket
+       join — |batch| x collision rate, never touching the corpus);
+    2. drops within-batch near-dups by LEADER election
+       (operators/dedup.greedy_min_id_dropped): process ids ascending, keep
+       an item iff it has no already-kept near-dup. NOT "drop every id_b of
+       a pair" — on a chain a~b, b~c without a~c that rule keeps only {a},
+       and a replayed c then matches nothing in the index (its only
+       neighbor b was dropped) and ingests twice.
+
+    and returns the survivors' (corpus rows, index rows). This lifecycle
+    appends the first to the parquet corpus and the second to the index;
+    ``indexable`` maps corpus rows to index rows for the reconcile.
+
+    Replay idempotency: a replayed survivor matches itself in the index at
+    similarity 1.0, and every replayed non-survivor matches the KEPT leader
+    that displaced it. The index stays in step with its corpus through
+    these rules:
+
+    * **The corpus is the authority; the index is a self-healing derived
+      structure.** A crash between the corpus write and the index append
+      would leave survivors invisible to future matching, so the FIRST batch
+      after every (re)start RECONCILES: corpus items missing from the index
+      (an id-only anti-join) are appended from the corpus rows, or the index
+      is built from the corpus when it does not exist. Only the first batch:
+      the crash window only opens across a restart (a foreachBatch failure
+      kills the query, and the healthy sink appends to both structures
+      itself), while a per-batch reconcile is an O(|corpus|) job per
+      micro-batch. Later batches probe the sidecar (``lsh_index.exists``).
+    * **No index mid-run** (the first batch of a fresh sink, or an index
+      lost out of band) rebuilds from the CORPUS, never from the batch's
+      survivors alone: the corpus write already includes them, and a
+      survivors-only build would drop every older corpus id from matching
+      until a restart. On a fresh sink the cost is the same.
+    * **``compact_max_files``**: every append adds at least one small
+      parquet file, so a long-running sink decays into thousands of files.
+      When set, the index is compacted in place (``lsh_index.compact``)
+      whenever its file count exceeds the threshold. A crash mid-swap kills
+      the query, and the restart reconciles from the corpus (a mid-run
+      missing index rebuilds from it too).
+
+    Per-batch caches are released when the batch ends (the sink runs
+    forever; a persist per micro-batch would pin executor storage without
+    bound).
+    """
+    spark = stream.sparkSession
+
+    def _reconcile() -> bool:
+        """Bring the index in step with the corpus; True if an index exists
+        afterwards (there is anything to match against)."""
+        corpus = _read_corpus(spark, corpus_dir)
+        if corpus is None:
+            return False
+        corpus = indexable(corpus)
+        if LX.exists(index_dir):
+            idx_ids = LX.read(spark, index_dir).select(id_col)
+            missing = corpus.join(idx_ids, id_col, "left_anti")
+            if not missing.isEmpty():
+                LX.append(kind, missing, index_dir, id_col, payload_col)
+        else:
+            LX.build(kind, corpus, index_dir, id_col, payload_col, **build_params)
+        return True
+
+    reconciled = False
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal reconciled
+        if reconciled:
+            have_index = LX.exists(index_dir)
+        else:
+            have_index = _reconcile()
+            reconciled = True
+        pinned: list[DataFrame] = []
+
+        def pin(df: DataFrame) -> DataFrame:
+            pinned.append(df.persist())
+            return pinned[-1]
+
+        try:
+            corpus_rows, index_rows = screen(batch_df, have_index, pin)
+            corpus_rows.write.mode("append").parquet(corpus_dir)
+            if LX.exists(index_dir):
+                LX.append(kind, index_rows, index_dir, id_col, payload_col)
+            else:
+                _reconcile()
+            if (
+                compact_max_files is not None
+                and len(parquet_files(LX.data_path(index_dir))) > compact_max_files
+            ):
+                LX.compact(spark, index_dir)
+        finally:
+            for df in pinned:
+                df.unpersist()
+
+    return _start(stream, _process, checkpoint_dir, available_now)
 
 
 def start_near_dup_ingest(
@@ -77,70 +211,18 @@ def start_near_dup_ingest(
     available_now: bool = True,
     compact_max_files: int | None = None,
 ) -> StreamingQuery:
-    """Always-on NEAR-duplicate screening: the streaming form of the
-    persisted-MinHash-index pipeline (operators/minhash_index.py).
+    """Always-on NEAR-duplicate screening of a document stream against a
+    persisted MinHash index at ``jaccard >= threshold`` (index lifecycle:
+    ``_start_screening_sink``).
 
-    Per micro-batch:
-
-    1. shingle the batch;
-    2. drop batch docs matching the signature INDEX at ``jaccard >=
-       threshold`` (cross-set band join — |batch| x collision-rate, never
-       touching corpus text);
-    3. drop within-batch near-dups by LEADER election
-       (operators/dedup.greedy_min_id_dropped): process ids ascending, keep
-       a doc iff it has no already-kept near-dup. NOT "drop every id_b of a
-       pair" — on a chain a~b, b~c without a~c that rule keeps only {a},
-       and a replayed c then matches nothing in the index (its only
-       neighbor b was dropped) and ingests twice;
-    4. append the survivors to the parquet corpus AND their signatures +
-       shingle sets to the index.
-
-    Replay idempotency needs no transactional sink: a replayed survivor
-    matches itself in the index at jaccard 1.0, and every replayed
-    non-survivor matches the KEPT leader that displaced it — content
-    similarity is the exactly-once mechanism (the same argument as the
-    exact-hash ingest, one tier up). Two details make the contract hold in
-    the failure cases a naive two-write sink misses:
-
-    * **Crash between the corpus write and the index append** would leave
-      survivors invisible to future matching. The FIRST batch after every
-      (re)start therefore RECONCILES: corpus docs missing from the index
-      (an id-only anti-join) get their signatures appended from the corpus
-      rows. The corpus is the authority; the index is a self-healing
-      derived structure. First-batch-only (round 11) because the crash
-      window only opens across a restart — a foreachBatch failure kills
-      the query, and the healthy sink appends to both structures itself —
-      while a per-batch reconcile is an O(|corpus|) scan+anti-join job per
-      micro-batch: the one super-linear term in an otherwise
-      |batch|-proportional sink (a production sink runs thousands of
-      micro-batches against an ever-growing corpus). Later batches
-      re-derive index presence with the cheap sidecar probe.
-    * **Docs too short to shingle** (fewer than 2 tokens) would have empty
-      shingle sets, silently vanish from the index, and bypass dedup
-      forever. The sink's shingle step falls back to the full text as a
-      singleton shingle, so identical short docs match at jaccard 1.0 like
-      any other exact duplicate.
-
-    Per-batch caches are explicitly released (the sink runs forever; a
-    persist per micro-batch would pin executor storage without bound).
-
-    ``compact_max_files``: every append adds at least one small parquet
-    file, so a long-running sink decays into thousands of files. When set,
-    the sink compacts the index in place (compact_minhash_index) whenever
-    its file count exceeds the threshold. A crash mid-swap is covered
-    two ways: a compaction crash kills the query, and the first batch
-    after the restart reconciles from the corpus (the authority); and
-    even mid-run, a batch that observes index_exists()==False rebuilds
-    via the same corpus-authority sync rather than from its own
-    survivors, so older corpus ids can never silently drop out of
-    matching (round-11 advisor note).
+    Docs too short to shingle (fewer than 2 tokens) would have empty shingle
+    sets, silently vanish from the index and bypass dedup forever. The
+    shingle step falls back to the full text as a singleton shingle, so
+    identical short docs match at jaccard 1.0 like any other exact
+    duplicate.
     """
     from datafusion_dedup_ai_spark.functions import text as T
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
-    from datafusion_dedup_ai_spark.operators.dedup import (
-        greedy_min_id_dropped,
-        minhash_near_dup_pairs,
-    )
+    from datafusion_dedup_ai_spark.operators.dedup import minhash_near_dup_pairs
 
     spark = stream.sparkSession
 
@@ -153,144 +235,28 @@ def start_near_dup_ingest(
             .alias("shingles"),
         )
 
-    def _corpus_exists() -> bool:
-        return os.path.isdir(corpus_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(corpus_dir)
+    def _screen(batch_df, have_index, pin):
+        sh = pin(_shingled(batch_df))
+        kept = sh
+        if have_index:
+            matched = (
+                LX.match(LX.MINHASH, spark, index_dir, sh, threshold, id_col)
+                .select(F.col("batch_id").alias(id_col))
+                .distinct()
+            )
+            kept = sh.join(matched, id_col, "left_anti")
+        in_batch = minhash_near_dup_pairs(
+            kept, id_col=id_col, threshold=threshold, persist=False
         )
+        losers = greedy_min_id_dropped(in_batch).withColumnRenamed("id", id_col)
+        survivors_sh = pin(kept.join(losers, id_col, "left_anti"))
+        survivors = batch_df.join(survivors_sh.select(id_col), id_col, "left_semi")
+        return survivors, survivors_sh
 
-    def _sync_index_with_corpus() -> bool:
-        """Self-heal the index from the corpus; True if an index exists
-        afterwards (i.e. there is anything to match against)."""
-        if not _corpus_exists():
-            return False
-        corpus = spark.read.parquet(corpus_dir)
-        # index_exists (data AND meta sidecar), not a raw data-dir probe: a
-        # crash inside a build must read as 'no index' and trigger a rebuild,
-        # never wedge the sink on a missing-sidecar error.
-        if MI.index_exists(index_dir):
-            idx_ids = MI.read_minhash_index(spark, index_dir).select(id_col)
-            missing = corpus.join(idx_ids, id_col, "left_anti")
-            if not missing.isEmpty():
-                MI.append_minhash_index(_shingled(missing), index_dir, id_col=id_col)
-        else:
-            MI.build_minhash_index(_shingled(corpus), index_dir, id_col=id_col)
-        return True
-
-    reconciled = False  # first-batch-after-(re)start reconcile (docstring)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal reconciled
-        if reconciled:
-            have_index = MI.index_exists(index_dir)
-        else:
-            have_index = _sync_index_with_corpus()
-            reconciled = True
-        sh = _shingled(batch_df).persist()
-        survivors_sh = None
-        try:
-            kept = sh
-            if have_index:
-                matched = (
-                    MI.incremental_near_dup_matches_indexed(
-                        spark,
-                        index_dir,
-                        sh,
-                        id_col=id_col,
-                        threshold=threshold,
-                        persist=False,
-                    )
-                    .select(F.col("batch_id").alias(id_col))
-                    .distinct()
-                )
-                kept = sh.join(matched, id_col, "left_anti")
-            in_batch = minhash_near_dup_pairs(
-                kept, id_col=id_col, threshold=threshold, persist=False
-            )
-            losers = greedy_min_id_dropped(in_batch).withColumnRenamed(
-                "id", id_col
-            )
-            survivors_sh = kept.join(losers, id_col, "left_anti").persist()
-            survivors = batch_df.join(
-                survivors_sh.select(id_col), id_col, "left_semi"
-            )
-            survivors.write.mode("append").parquet(corpus_dir)
-            if MI.index_exists(index_dir):
-                MI.append_minhash_index(survivors_sh, index_dir, id_col=id_col)
-            else:
-                # No index mid-run (first batch of a fresh sink, or the
-                # out-of-contract case of the index vanishing out-of-band):
-                # rebuild from the CORPUS authority, not from this batch's
-                # survivors alone — the corpus write above already includes
-                # them, and a survivors-only build would silently drop every
-                # older corpus id from matching until a restart (round-11
-                # advisor note). On a fresh sink the corpus contains exactly
-                # this batch's survivors, so the cost is identical.
-                _sync_index_with_corpus()
-            if compact_max_files is not None:
-                from datafusion_dedup_ai_spark.sources.layout import (
-                    parquet_files,
-                )
-
-                if len(parquet_files(MI._data_path(index_dir))) > compact_max_files:
-                    MI.compact_minhash_index(spark, index_dir)
-        finally:
-            sh.unpersist()
-            if survivors_sh is not None:
-                survivors_sh.unpersist()
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def replay_documents_as_stream(
-    spark,
-    sf_dir: str,
-    stage_dir: str,
-    n_chunks: int = 4,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Stage the documents table as n_chunks json files and read them back as
-    a file-source stream (one file per trigger -> n_chunks micro-batches).
-    Deterministic chunking by doc_id range so every run produces the same
-    batch boundaries."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from datafusion_dedup_ai_spark.sources.readers import load_table
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    if not os.path.isdir(stage_dir) or not os.listdir(stage_dir):
-        docs = load_table(spark, sf_dir, "documents")
-        n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-        step = (n + n_chunks - 1) // n_chunks
-        for i in range(n_chunks):
-            chunk = docs.where(
-                (F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step)
-            )
-            chunk.coalesce(1).write.mode("overwrite").json(
-                os.path.join(stage_dir, f"chunk={i:03d}")
-            )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .json(stage_dir)
+    return _start_screening_sink(
+        stream, LX.MINHASH, corpus_dir, index_dir, checkpoint_dir,
+        id_col, "shingles", _shingled, _screen,
+        available_now, compact_max_files, {},
     )
 
 
@@ -306,60 +272,31 @@ def start_semantic_ingest(
     compact_max_files: int | None = None,
     index_n_bits: int | None = None,
 ) -> StreamingQuery:
-    """Always-on SEMANTIC near-duplicate screening over an embedding stream:
-    the streaming form of the persisted-vector-index pipeline
-    (operators/vector_index.py) — the embedding twin of
-    ``start_near_dup_ingest``, same contract one modality over.
+    """Always-on SEMANTIC near-duplicate screening of an embedding stream
+    against a persisted hyperplane index at ``cosine >= threshold`` (index
+    lifecycle: ``_start_screening_sink``).
 
-    Per micro-batch:
+    **Zero vectors** have undefined cosine — under Spark's default ANSI mode
+    the division THROWS (with ANSI off it yields NULL, which never clears the
+    threshold either way) — so zero-norm vectors must never reach a cosine.
+    The sink (a) keeps them OUT of the index everywhere, including the
+    reconcile, so no candidate pair can involve one; (b) dedups them exactly
+    instead: within-batch by identical-vector min-id, and against the corpus
+    by identical-vector semi-join (which also covers replay) — the role the
+    singleton-shingle fallback plays for too-short documents.
 
-    1. code the batch (one Arrow matmul — batch side only);
-    2. drop batch vectors matching the vector INDEX at ``cosine >=
-       threshold`` (cross-set bucket join; corpus codes are read, never
-       recomputed);
-    3. drop within-batch near-dups by leader election (greedy_min_id_dropped
-       — same replay-safety argument as the text sink: every dropped vector
-       has a KEPT neighbor to match on replay);
-    4. append the survivors to the parquet corpus AND their codes +
-       embeddings to the index.
-
-    Replay idempotency: a replayed survivor is in the index and matches
-    itself at cosine 1.0 >= threshold, so it is dropped — content similarity
-    is the exactly-once mechanism. The failure-case details mirror the text
-    sink:
-
-    * **Crash between corpus write and index append**: the FIRST batch
-      after every (re)start reconciles — corpus vectors missing from the
-      index (id anti-join) get their codes appended from the corpus rows.
-      Corpus is the authority, the index self-heals. First-batch-only
-      (round 11), same argument as the text sink: the crash window only
-      opens across a restart, and the per-batch form was an O(|corpus|)
-      job per micro-batch — super-linear for a long-running sink. Later
-      batches use the cheap sidecar-existence probe.
-    * **Zero vectors** have undefined cosine — under Spark's default ANSI
-      mode the division THROWS (and with ANSI off it yields NULL, which
-      never clears the threshold either way) — so zero-norm vectors must
-      never reach a cosine. The sink (a) keeps them OUT of the vector index
-      everywhere, including the self-heal reconcile, so no candidate pair
-      can involve one; (b) dedups them exactly instead: within-batch by
-      identical-vector min-id, and against the corpus by identical-vector
-      semi-join (which also covers replay) — the degenerate-input fallback
-      playing the role the singleton-shingle fallback plays for too-short
-      documents.
-
-    ``index_n_bits``: bucket width for the vector index. The default (None)
-    inherits build_vector_index's corpus-adaptive width — which for a
-    STREAMING index freezes at the FIRST batch's survivor count, usually
-    too narrow for the eventual corpus. Production should size it for the
-    TARGET corpus (lsh_bits_for(expected_N)); the hash-gated registry entry
-    pins 4 to match the fixed lsh_buckets oracle-fixture geometry (the same
-    index-width doctrine as queries_extras._vector_index_path).
+    ``index_n_bits``: bucket width for the index. The default (None) is the
+    build's corpus-adaptive width, which for a STREAMING index freezes at
+    the FIRST batch's survivor count, usually too narrow for the eventual
+    corpus. Production should size it for the TARGET corpus
+    (lsh_bits_for(expected_N)); the hash-gated registry entry pins 4 to
+    match the fixed lsh_buckets oracle-fixture geometry.
     """
-    from datafusion_dedup_ai_spark.operators import vector_index as VI
-    from datafusion_dedup_ai_spark.operators.dedup import greedy_min_id_dropped
+    from pyspark.sql import Window
+
     from datafusion_dedup_ai_spark.operators.similarity_search import (
-        dot_fold,
         as_double,
+        dot_fold,
         lsh_near_pairs,
     )
 
@@ -368,169 +305,88 @@ def start_semantic_ingest(
     def _norm2(df: DataFrame):
         return dot_fold(as_double(df[vec_col]), as_double(df[vec_col]))
 
-    def _corpus_exists() -> bool:
-        return os.path.isdir(corpus_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(corpus_dir)
+    def _nonzero(df: DataFrame) -> DataFrame:
+        return df.where(_norm2(df) != 0.0)
+
+    def _screen(batch_df, have_index, pin):
+        batch = pin(batch_df.withColumn("_zero", _norm2(batch_df) == 0.0))
+        # within-batch exact dedup of zero vectors (identical vector, keep
+        # min id) — they are excluded from every cosine path, so similarity
+        # can never dedup them
+        zw = Window.partitionBy(vec_col).orderBy(id_col)
+        zero_losers = (
+            batch.where(F.col("_zero"))
+            .withColumn("_rn", F.row_number().over(zw))
+            .where(F.col("_rn") > 1)
+            .select(id_col)
+        )
+        kept = batch.join(zero_losers, id_col, "left_anti")
+        if have_index:
+            drop = (
+                LX.match(
+                    LX.HYPERPLANE, spark, index_dir, kept.where(~F.col("_zero")),
+                    threshold, id_col, vec_col,
+                )
+                .select(F.col("batch_id").alias(id_col))
+                .distinct()
+            )
+            # only pay the corpus scan for the zero vectors' exact semi-join
+            # when the batch has one (batch is persisted — the probe is cheap)
+            if not batch.where(F.col("_zero")).isEmpty():
+                corpus = spark.read.parquet(corpus_dir)
+                exact_zero = (
+                    kept.where(F.col("_zero"))
+                    .join(corpus.select(vec_col), [vec_col], "left_semi")
+                    .select(id_col)
+                )
+                drop = drop.unionByName(exact_zero)
+            kept = kept.join(drop, id_col, "left_anti")
+        in_batch = lsh_near_pairs(
+            kept.where(~F.col("_zero")),
+            id_col=id_col,
+            vec_col=vec_col,
+            threshold=threshold,
+        )
+        losers = greedy_min_id_dropped(in_batch).withColumnRenamed("id", id_col)
+        # pinned: the corpus write and the index append both consume it —
+        # unpinned, the whole match pipeline would run twice per batch
+        survivors = pin(kept.join(losers, id_col, "left_anti"))
+        return (
+            survivors.drop("_zero"),
+            survivors.where(~F.col("_zero")).drop("_zero"),
         )
 
-    def _sync_index_with_corpus() -> bool:
-        if not _corpus_exists():
-            return False
-        # Zero-norm vectors live in the CORPUS but never in the INDEX: a
-        # zero code collides with real vectors, and the verify cosine then
-        # divides by zero (ANSI: SparkArithmeticException). The reconcile
-        # must apply the same filter or it would "heal" them back in.
-        corpus = spark.read.parquet(corpus_dir)
-        indexable = corpus.where(_norm2(corpus) != 0.0)
-        if VI.index_exists(index_dir):
-            idx_ids = VI.read_vector_index(spark, index_dir).select(id_col)
-            missing = indexable.join(idx_ids, id_col, "left_anti")
-            if not missing.isEmpty():
-                VI.append_vector_index(
-                    missing, index_dir, id_col=id_col, vec_col=vec_col
-                )
-        else:
-            VI.build_vector_index(
-                indexable,
-                index_dir,
-                id_col=id_col,
-                vec_col=vec_col,
-                n_bits=index_n_bits,
-            )
-        return True
-
-    reconciled = False  # first-batch-after-(re)start reconcile (docstring)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        nonlocal reconciled
-        if reconciled:
-            have_index = VI.index_exists(index_dir)
-        else:
-            have_index = _sync_index_with_corpus()
-            reconciled = True
-        batch = batch_df.withColumn(
-            "_zero", _norm2(batch_df) == 0.0
-        ).persist()
-        survivors = None
-        try:
-            # within-batch exact dedup of zero vectors (identical vector,
-            # keep min id) — they are excluded from every cosine path, so
-            # similarity can never dedup them
-            zw = Window.partitionBy(vec_col).orderBy(id_col)
-            zero_losers = (
-                batch.where(F.col("_zero"))
-                .withColumn("_rn", F.row_number().over(zw))
-                .where(F.col("_rn") > 1)
-                .select(id_col)
-            )
-            kept = batch.join(zero_losers, id_col, "left_anti")
-            if have_index:
-                nonzero = kept.where(~F.col("_zero"))
-                matched = (
-                    VI.incremental_semantic_matches_indexed(
-                        spark,
-                        index_dir,
-                        nonzero,
-                        id_col=id_col,
-                        vec_col=vec_col,
-                        threshold=threshold,
-                    )
-                    .select(F.col("batch_id").alias(id_col))
-                    .distinct()
-                )
-                drop = matched
-                # zero-norm vectors are a degenerate edge case; only pay
-                # the corpus scan for their exact semi-join when the batch
-                # actually has one (batch is persisted — the probe is cheap)
-                if not batch.where(F.col("_zero")).isEmpty():
-                    corpus = spark.read.parquet(corpus_dir)
-                    exact_zero = (
-                        kept.where(F.col("_zero"))
-                        .join(
-                            corpus.select(vec_col),
-                            [vec_col],
-                            "left_semi",
-                        )
-                        .select(id_col)
-                    )
-                    drop = matched.unionByName(exact_zero)
-                kept = kept.join(drop, id_col, "left_anti")
-            in_batch = lsh_near_pairs(
-                kept.where(~F.col("_zero")),
-                id_col=id_col,
-                vec_col=vec_col,
-                threshold=threshold,
-            )
-            losers = greedy_min_id_dropped(in_batch).withColumnRenamed(
-                "id", id_col
-            )
-            # persist: the corpus write and the index append below both
-            # consume survivors — without the pin the whole match pipeline
-            # (index scan + bucket join + cosine verify) executes twice per
-            # batch (the text sink persists survivors_sh for the same
-            # reason)
-            survivors = kept.join(losers, id_col, "left_anti").persist()
-            survivors.drop("_zero").write.mode("append").parquet(corpus_dir)
-            indexable = survivors.where(~F.col("_zero")).drop("_zero")
-            if VI.index_exists(index_dir):
-                VI.append_vector_index(
-                    indexable, index_dir, id_col=id_col, vec_col=vec_col
-                )
-            else:
-                # Rebuild from the CORPUS authority (same rationale as the
-                # text sink: a survivors-only build after an out-of-band
-                # index loss would drop older corpus ids from matching
-                # until a restart; the corpus write above already includes
-                # this batch, so a fresh sink pays the same cost either
-                # way). _sync applies the zero-norm filter itself.
-                _sync_index_with_corpus()
-            # Same small-files maintenance as the text sink: compact the
-            # index in place once appends exceed the file threshold; a
-            # crash mid-swap kills the query and the first batch after
-            # restart reconciles from the corpus (and a mid-run missing
-            # index rebuilds via the corpus-authority sync above).
-            if compact_max_files is not None:
-                from datafusion_dedup_ai_spark.sources.layout import (
-                    parquet_files,
-                )
-
-                if len(parquet_files(VI._data_path(index_dir))) > compact_max_files:
-                    VI.compact_vector_index(spark, index_dir)
-        finally:
-            batch.unpersist()
-            if survivors is not None:
-                survivors.unpersist()
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_screening_sink(
+        stream, LX.HYPERPLANE, corpus_dir, index_dir, checkpoint_dir,
+        id_col, vec_col, _nonzero, _screen,
+        available_now, compact_max_files, {"n_bits": index_n_bits},
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def replay_embeddings_as_stream(
+def replay_as_stream(
     spark,
     sf_dir: str,
+    table: str,
+    id_col: str,
     stage_dir: str,
     n_chunks: int = 4,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Stage the embeddings table as n_chunks parquet files and read them
-    back as a file-source stream (parquet staging keeps the float arrays
-    bit-exact across the round trip, which the replay-idempotence contract
-    depends on). Deterministic chunking by vec_id range."""
+    """Stage ``table`` as n_chunks parquet files by ``id_col`` range and read
+    them back as a file-source stream (one file per trigger -> n_chunks
+    micro-batches, the same boundaries on every run). Parquet staging keeps
+    every value bit-exact across the round trip (the float embeddings
+    included), which the replay-idempotence contract depends on. A stage
+    dir that already holds chunks is reused."""
     from datafusion_dedup_ai_spark.sources.readers import load_table
 
     if not os.path.isdir(stage_dir) or not os.listdir(stage_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        n = emb.agg(F.max("vec_id")).collect()[0][0] + 1
+        df = load_table(spark, sf_dir, table)
+        n = df.agg(F.max(id_col)).collect()[0][0] + 1
         step = (n + n_chunks - 1) // n_chunks
         for i in range(n_chunks):
-            chunk = emb.where(
-                (F.col("vec_id") >= i * step) & (F.col("vec_id") < (i + 1) * step)
+            chunk = df.where(
+                (F.col(id_col) >= i * step) & (F.col(id_col) < (i + 1) * step)
             )
             chunk.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(stage_dir, f"chunk={i:03d}")

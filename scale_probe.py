@@ -363,7 +363,7 @@ def time_adaptive_index_match(spark, sf_dir: str, tag: str) -> float:
 
     from pyspark.sql import functions as F
 
-    from datafusion_dedup_ai_spark.operators import vector_index as VI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     spark.catalog.clearCache()
@@ -373,9 +373,9 @@ def time_adaptive_index_match(spark, sf_dir: str, tag: str) -> float:
     if os.path.isdir(path):
         shutil.rmtree(path)
     t0 = time.time()
-    VI.build_vector_index(emb.where(F.expr("vec_id % 10 < 8")), path)
-    VI.incremental_semantic_matches_indexed(
-        spark, path, emb.where(F.expr("vec_id % 10 >= 8")), threshold=0.35
+    LX.build(LX.HYPERPLANE, emb.where(F.expr("vec_id % 10 < 8")), path)
+    LX.match(
+        LX.HYPERPLANE, spark, path, emb.where(F.expr("vec_id % 10 >= 8")), 0.35
     ).count()
     dt = time.time() - t0
     shutil.rmtree(path, ignore_errors=True)

@@ -228,24 +228,23 @@ def test_incremental_near_dup_recall_vs_exact(spark, shingled):
 
 
 # ---------------------------------------------------------------------------
-# Persisted MinHash index (operators/minhash_index.py)
+# Persisted MinHash index (operators/lsh_index.py; the contract both index
+# kinds share is in tests/test_lsh_index.py)
 # ---------------------------------------------------------------------------
 
 
 def test_index_path_matches_recompute_path(spark, shingled, tmp_path):
     """The persisted-index match must be row-identical to the recompute
     topology: same arithmetic, different data source."""
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     corpus_sh = shingled.where(F.expr("doc_id % 10 < 8"))
     batch_sh = shingled.where(F.expr("doc_id % 10 >= 8"))
     path = str(tmp_path / "idx")
-    MI.build_minhash_index(corpus_sh, path)
+    LX.build(LX.MINHASH, corpus_sh, path)
     via_index = {
         tuple(r)
-        for r in MI.incremental_near_dup_matches_indexed(
-            spark, path, batch_sh
-        ).collect()
+        for r in LX.match(LX.MINHASH, spark, path, batch_sh, 0.2).collect()
     }
     recompute = {
         tuple(r)
@@ -255,46 +254,15 @@ def test_index_path_matches_recompute_path(spark, shingled, tmp_path):
     assert via_index, "expected at least one planted near-dup match"
 
 
-def test_index_append_equals_full_rebuild(spark, shingled, tmp_path):
-    """Building on part A then appending part B must match a fresh build on
-    A+B — the per-crawl growth path adds rows, never changes semantics."""
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
-
-    corpus_sh = shingled.where(F.expr("doc_id % 10 < 8"))
-    part_a = corpus_sh.where(F.expr("doc_id % 2 = 0"))
-    part_b = corpus_sh.where(F.expr("doc_id % 2 = 1"))
-    batch_sh = shingled.where(F.expr("doc_id % 10 >= 8"))
-
-    grown = str(tmp_path / "grown")
-    MI.build_minhash_index(part_a, grown)
-    MI.append_minhash_index(part_b, grown)
-    fresh = str(tmp_path / "fresh")
-    MI.build_minhash_index(corpus_sh, fresh)
-
-    got_grown = {
-        tuple(r)
-        for r in MI.incremental_near_dup_matches_indexed(
-            spark, grown, batch_sh
-        ).collect()
-    }
-    got_fresh = {
-        tuple(r)
-        for r in MI.incremental_near_dup_matches_indexed(
-            spark, fresh, batch_sh
-        ).collect()
-    }
-    assert got_grown == got_fresh
-
-
 def test_index_batch_path_never_scans_corpus_text(spark, shingled, tmp_path):
     """The point of the index: matching a batch must not rescan the corpus.
     Machine-check the physical plan — every FileScan must read the index
     dataset, never the documents parquet the corpus came from."""
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     corpus_sh = shingled.where(F.expr("doc_id % 10 < 8"))
     path = str(tmp_path / "idx")
-    MI.build_minhash_index(corpus_sh, path)
+    LX.build(LX.MINHASH, corpus_sh, path)
 
     # batch comes straight from the source table, as in production
     from datafusion_dedup_ai_spark.sources.readers import load_table
@@ -306,64 +274,18 @@ def test_index_batch_path_never_scans_corpus_text(spark, shingled, tmp_path):
     batch_sh = d.where(F.expr("doc_id % 10 >= 8")).select(
         "doc_id", T.distinct_shingles(F.col("text")).alias("shingles")
     )
-    out = MI.incremental_near_dup_matches_indexed(spark, path, batch_sh)
+    out = LX.match(LX.MINHASH, spark, path, batch_sh, 0.2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln or "Scan parquet" in ln]
     doc_scans = [ln for ln in scans if "documents.parquet" in ln]
     # only the batch side may touch documents.parquet: one logical scan,
-    # which the persist() can surface at most twice in the printed tree
-    # (inside the InMemoryRelation's cached plan and its first consumer).
+    # which a caller's persist() can surface at most twice in the printed
+    # tree (inside the InMemoryRelation's cached plan and its first
+    # consumer); unpersisted, the batch's two consumers show it twice too.
     # The recompute path needs corpus shingles too and shows more.
     assert len(doc_scans) <= 2, f"corpus rescan suspected:\n{plan}"
     idx_scans = [ln for ln in scans if "idx" in ln]
     assert idx_scans, f"no index scan in plan:\n{plan}"
-
-
-def test_index_meta_mismatch_rejected(spark, shingled, tmp_path):
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
-
-    corpus_sh = shingled.where(F.expr("doc_id % 10 < 8")).limit(10)
-    path = str(tmp_path / "idx")
-    MI.build_minhash_index(corpus_sh, path, num_hashes=64, seed=42)
-    with pytest.raises(ValueError, match="signature generations"):
-        MI.append_minhash_index(corpus_sh, path, num_hashes=64, seed=7)
-    with pytest.raises(ValueError, match="signature generations"):
-        MI.incremental_near_dup_matches_indexed(
-            spark, path, corpus_sh, num_hashes=32
-        )
-
-
-def test_index_missing_sidecar_reads_as_no_index(spark, shingled, tmp_path):
-    """Crash-safety: build writes the meta sidecar BEFORE the parquet data,
-    so the only orphan state a crash can produce is meta-without-data — which
-    index_exists() reports as 'no index' and a rebuild repairs. A data dir
-    WITHOUT the sidecar (legacy builds / tampering) must also read as 'no
-    index' for self-healing callers, while direct _check_meta callers get a
-    clear rebuild instruction instead of FileNotFoundError."""
-    import os
-
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
-
-    corpus_sh = shingled.where(F.expr("doc_id % 10 < 8")).limit(10)
-    path = str(tmp_path / "idx")
-    MI.build_minhash_index(corpus_sh, path)
-    assert MI.index_exists(path)
-
-    os.remove(MI._meta_path(path))
-    assert not MI.index_exists(path)
-    with pytest.raises(ValueError, match="rebuild"):
-        MI.incremental_near_dup_matches_indexed(spark, path, corpus_sh)
-    # rebuild repairs the orphan state in place
-    MI.build_minhash_index(corpus_sh, path)
-    assert MI.index_exists(path)
-    assert MI.incremental_near_dup_matches_indexed(
-        spark, path, corpus_sh
-    ).count() > 0
-
-    # meta-without-data (crash between sidecar and data write): no index yet
-    fresh = str(tmp_path / "fresh")
-    MI._write_meta(fresh, {"num_hashes": 64, "bands": 16, "seed": 42})
-    assert not MI.index_exists(fresh)
 
 
 def test_duplicate_substring_spans_semantics(spark):
@@ -553,57 +475,6 @@ def test_greedy_min_id_dropped_matches_sequential_property(spark, edges):
         assert neighbors[v] & kept, f"dropped {v} has no kept neighbor"
 
 
-def test_index_compaction_preserves_content_and_cuts_files(
-    spark, shingled, tmp_path
-):
-    """Simulate streaming decay (many tiny appends), compact, and require
-    byte-identical index content, a reduced file count, an intact parameter
-    sidecar, and identical match results through the compacted index."""
-    import os
-
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
-
-    corpus_sh = shingled.where(F.expr("doc_id % 10 < 8"))
-    batch_sh = shingled.where(F.expr("doc_id % 10 >= 8"))
-    path = str(tmp_path / "idx")
-    parts = [corpus_sh.where(F.expr(f"doc_id % 4 = {i}")) for i in range(4)]
-    MI.build_minhash_index(parts[0].repartition(8), path)
-    for p in parts[1:]:
-        MI.append_minhash_index(p.repartition(8), path)
-
-    def files():
-        d = MI._data_path(path)
-        return [
-            f for r, _d, fs in os.walk(d) for f in fs if f.endswith(".parquet")
-        ]
-
-    def content():
-        return {
-            (r["doc_id"], tuple(r["sig"]), tuple(sorted(r["shingles"])))
-            for r in MI.read_minhash_index(spark, path).collect()
-        }
-
-    before_files = len(files())
-    before = content()
-    pre_match = {
-        tuple(r)
-        for r in MI.incremental_near_dup_matches_indexed(
-            spark, path, batch_sh
-        ).collect()
-    }
-    n_out = MI.compact_minhash_index(spark, path)
-    assert n_out == len(files()) < before_files
-    assert content() == before
-    post_match = {
-        tuple(r)
-        for r in MI.incremental_near_dup_matches_indexed(
-            spark, path, batch_sh
-        ).collect()
-    }
-    assert post_match == pre_match
-    MI._check_meta(path, 64, 16, 42)  # sidecar intact
-
-
 # ---------------------------------------------------------------------------
 # Two-phase verify (round-10 verdict #2: bound the verify join's payload mass)
 # ---------------------------------------------------------------------------
@@ -756,14 +627,14 @@ def test_index_meta_records_modulus(spark, shingled, tmp_path):
     must be rejected on append exactly like any parameter mismatch."""
     import json
 
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
 
     path = str(tmp_path / "idx")
-    MI.build_minhash_index(shingled, path)
-    meta = MI._read_meta(path)
+    LX.build(LX.MINHASH, shingled, path)
+    meta = LX.read_meta(path)
     assert meta["modulus"] == D.MINHASH_P
     legacy = {k: v for k, v in meta.items() if k != "modulus"}
-    with open(MI._meta_path(path), "w") as f:
+    with open(LX.meta_path(path), "w") as f:
         json.dump(legacy, f)
     with pytest.raises(ValueError, match="signature generations"):
-        MI.append_minhash_index(shingled, path)
+        LX.append(LX.MINHASH, shingled, path)

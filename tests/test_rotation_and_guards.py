@@ -64,19 +64,33 @@ def test_reap_after_write_reaps_only_stale_versions(tmp_path, monkeypatch):
     cur = os.path.join(base, f"{prefix}-{M.code_fingerprint()}")
     old = os.path.join(base, f"{prefix}-00000000")
     legacy = os.path.join(base, prefix)  # pre-versioning layout
+    # the unversioned MinHash index path: .materialized/<basename>/minhash_index
+    legacy_index = os.path.join(base, "sfreaptest", "minhash_index")
     other = os.path.join(base, "sfother-cafebabe-00000000")
+    other_legacy = os.path.join(base, "sfother", "minhash_index")
     monkeypatch.setattr(M, "_built", set())
     try:
-        for d in (cur, old, legacy, other):
+        for d in (cur, old, legacy, legacy_index, other, other_legacy):
             os.makedirs(d, exist_ok=True)
         # pure getter: no deletion happens on key computation alone
         M.sf_cache_key("/tmp/reaptest-sfdir")
         assert os.path.isdir(old) and os.path.isdir(legacy)
+        assert os.path.isdir(legacy_index)
         M.build_once(os.path.join(cur, "x.parquet"), lambda path: None)
         assert os.path.isdir(cur), "current-version tree must survive"
         assert not os.path.isdir(old), "old-fingerprint tree must be reaped"
         assert not os.path.isdir(legacy), "pre-versioning tree must be reaped"
+        assert not os.path.isdir(os.path.dirname(legacy_index)), (
+            "unversioned minhash_index tree (and its emptied dir) must be reaped"
+        )
         assert os.path.isdir(other), "other sf prefixes must be untouched"
+        assert os.path.isdir(other_legacy), "other sf legacy trees untouched"
+        # a basename dir that holds anything besides the index is kept
+        os.makedirs(legacy_index)
+        keep = os.path.join(base, "sfreaptest", "keep.txt")
+        open(keep, "w").close()
+        M._reap_stale_versions(cur)
+        assert not os.path.isdir(legacy_index) and os.path.isfile(keep)
         # non-.materialized paths are a no-op
         outside = tmp_path / f"{prefix}-{M.code_fingerprint()}"
         outside.mkdir()
@@ -85,6 +99,8 @@ def test_reap_after_write_reaps_only_stale_versions(tmp_path, monkeypatch):
     finally:
         for d in (cur, old, legacy, other):
             shutil.rmtree(d, ignore_errors=True)
+        for d in (legacy_index, other_legacy):
+            shutil.rmtree(os.path.dirname(d), ignore_errors=True)
 
 
 def test_reset_replay_memos_forgets_only_the_streaming_replays(

@@ -241,8 +241,8 @@ def test_streaming_incremental_ingest_dedups_across_batches(spark, sf_dir, tmp_p
     from datafusion_dedup_ai_spark.streaming import ingest as I
     from datafusion_dedup_ai_spark.sources.readers import load_table
 
-    stream = I.replay_documents_as_stream(
-        spark, sf_dir, str(tmp_path / "stage"), n_chunks=4
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", str(tmp_path / "stage"), n_chunks=4
     )
     q = I.start_incremental_ingest(
         stream,
@@ -279,12 +279,16 @@ def test_streaming_incremental_ingest_replay_is_idempotent(spark, sf_dir, tmp_pa
 
     stage = str(tmp_path / "stage")
     corpus_dir = str(tmp_path / "corpus")
-    stream = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=2)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=2
+    )
     q = I.start_incremental_ingest(stream, corpus_dir, str(tmp_path / "ckpt1"))
     q.awaitTermination(300)
     n1 = spark.read.parquet(corpus_dir).count()
 
-    stream2 = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=2)
+    stream2 = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=2
+    )
     q2 = I.start_incremental_ingest(stream2, corpus_dir, str(tmp_path / "ckpt2"))
     q2.awaitTermination(300)
     n2 = spark.read.parquet(corpus_dir).count()
@@ -373,13 +377,14 @@ def test_streaming_near_dup_ingest_matches_sequential_batch(spark, sf_dir, tmp_p
     accepts, and the final index must contain exactly the survivors."""
     from datafusion_dedup_ai_spark.functions import text as T
     from datafusion_dedup_ai_spark.operators import dedup as D
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
     from datafusion_dedup_ai_spark.sources.readers import load_table
     from datafusion_dedup_ai_spark.streaming import ingest as I
 
     n_chunks, thr = 3, 0.5
-    stream = I.replay_documents_as_stream(
-        spark, sf_dir, str(tmp_path / "stage"), n_chunks=n_chunks
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", str(tmp_path / "stage"),
+        n_chunks=n_chunks,
     )
     q = I.start_near_dup_ingest(
         stream,
@@ -439,7 +444,7 @@ def test_streaming_near_dup_ingest_matches_sequential_batch(spark, sf_dir, tmp_p
     assert got == want
     idx_ids = {
         r["doc_id"]
-        for r in MI.read_minhash_index(spark, str(tmp_path / "index"))
+        for r in LX.read(spark, str(tmp_path / "index"))
         .select("doc_id")
         .collect()
     }
@@ -454,14 +459,18 @@ def test_streaming_near_dup_ingest_replay_is_idempotent(spark, sf_dir, tmp_path)
     stage = str(tmp_path / "stage")
     corpus_dir = str(tmp_path / "corpus")
     index_dir = str(tmp_path / "index")
-    stream = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=2)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=2
+    )
     q = I.start_near_dup_ingest(
         stream, corpus_dir, index_dir, str(tmp_path / "ckpt1")
     )
     q.awaitTermination(300)
     n1 = spark.read.parquet(corpus_dir).count()
 
-    stream2 = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=2)
+    stream2 = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=2
+    )
     q2 = I.start_near_dup_ingest(
         stream2, corpus_dir, index_dir, str(tmp_path / "ckpt2")
     )
@@ -549,12 +558,12 @@ def test_streaming_semantic_ingest_survivor_set_is_pair_free(spark, sf_dir, tmp_
     semantic-ingest sink must leave a corpus with ZERO near-dup pairs under
     the sink's own matcher (every pair is caught either in-batch or against
     the index), and the index must mirror the corpus ids exactly."""
-    from datafusion_dedup_ai_spark.operators import vector_index as VI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
     from datafusion_dedup_ai_spark.operators.similarity_search import lsh_near_pairs
     from datafusion_dedup_ai_spark.streaming import ingest as I
 
-    stream = I.replay_embeddings_as_stream(
-        spark, sf_dir, str(tmp_path / "stage"), n_chunks=4
+    stream = I.replay_as_stream(
+        spark, sf_dir, "embeddings", "vec_id", str(tmp_path / "stage"), n_chunks=4
     )
     q = I.start_semantic_ingest(
         stream,
@@ -570,7 +579,7 @@ def test_streaming_semantic_ingest_survivor_set_is_pair_free(spark, sf_dir, tmp_
     assert lsh_near_pairs(corpus, threshold=0.35).isEmpty()
     idx_ids = {
         r["vec_id"]
-        for r in VI.read_vector_index(spark, str(tmp_path / "vindex"))
+        for r in LX.read(spark, str(tmp_path / "vindex"))
         .select("vec_id")
         .collect()
     }
@@ -586,12 +595,16 @@ def test_streaming_semantic_ingest_replay_is_idempotent(spark, sf_dir, tmp_path)
     stage = str(tmp_path / "stage")
     corpus_dir = str(tmp_path / "corpus")
     index_dir = str(tmp_path / "vindex")
-    stream = I.replay_embeddings_as_stream(spark, sf_dir, stage, n_chunks=2)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "embeddings", "vec_id", stage, n_chunks=2
+    )
     q = I.start_semantic_ingest(stream, corpus_dir, index_dir, str(tmp_path / "c1"))
     q.awaitTermination(300)
     n1 = spark.read.parquet(corpus_dir).count()
 
-    stream2 = I.replay_embeddings_as_stream(spark, sf_dir, stage, n_chunks=2)
+    stream2 = I.replay_as_stream(
+        spark, sf_dir, "embeddings", "vec_id", stage, n_chunks=2
+    )
     q2 = I.start_semantic_ingest(stream2, corpus_dir, index_dir, str(tmp_path / "c2"))
     q2.awaitTermination(300)
     n2 = spark.read.parquet(corpus_dir).count()
@@ -614,7 +627,7 @@ def test_streaming_semantic_ingest_zero_vectors(spark, tmp_path):
         StructType,
     )
 
-    from datafusion_dedup_ai_spark.operators import vector_index as VI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
     from datafusion_dedup_ai_spark.streaming import ingest as I
 
     schema = StructType(
@@ -655,7 +668,7 @@ def test_streaming_semantic_ingest_zero_vectors(spark, tmp_path):
     # 2 (in-batch zero dup), 4 (cross-batch zero content dup), 5 (cosine
     # near-dup of 3) all dropped
     assert corpus == {1, 3}, corpus
-    idx = {r["vec_id"] for r in VI.read_vector_index(spark, index_dir).collect()}
+    idx = {r["vec_id"] for r in LX.read(spark, index_dir).collect()}
     assert idx == {3}, idx  # the zero vector is corpus-only, never indexed
 
     # full replay with fresh checkpoint: nothing new
@@ -677,12 +690,12 @@ def test_streaming_ingest_compaction_hook(spark, sf_dir, tmp_path):
     """With compact_max_files set low, the sink compacts the index during
     the run: final file count at most the threshold+1 band, and the index
     content still matches a rebuild from the written corpus."""
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
     from datafusion_dedup_ai_spark.sources.layout import parquet_files
     from datafusion_dedup_ai_spark.streaming import ingest as I
 
-    stream = I.replay_documents_as_stream(
-        spark, sf_dir, str(tmp_path / "stage"), n_chunks=4
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", str(tmp_path / "stage"), n_chunks=4
     )
     q = I.start_near_dup_ingest(
         stream,
@@ -693,14 +706,14 @@ def test_streaming_ingest_compaction_hook(spark, sf_dir, tmp_path):
         compact_max_files=2,
     )
     q.awaitTermination(300)
-    n_files = len(parquet_files(MI._data_path(str(tmp_path / "index"))))
+    n_files = len(parquet_files(LX.data_path(str(tmp_path / "index"))))
     # the LAST batch's append may land after the final compaction, so allow
     # threshold + a small band — without the hook, 4 batches x 8-partition
     # appends produce dozens of files
     assert n_files <= 6, n_files
     idx_ids = {
         r["doc_id"]
-        for r in MI.read_minhash_index(spark, str(tmp_path / "index")).collect()
+        for r in LX.read(spark, str(tmp_path / "index")).collect()
     }
     corpus_ids = {
         r["doc_id"]
@@ -719,13 +732,15 @@ def test_streaming_near_dup_ingest_crash_and_resume(spark, sf_dir, tmp_path, mon
     crash between data and meta writes leaves) must read as 'no index',
     rebuild from the corpus authority, and still admit zero replayed rows.
     """
-    from datafusion_dedup_ai_spark.operators import minhash_index as MI
+    from datafusion_dedup_ai_spark.operators import lsh_index as LX
     from datafusion_dedup_ai_spark.streaming import ingest as I
 
     stage = str(tmp_path / "stage")
 
     # --- uninterrupted reference run -------------------------------------
-    stream = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=3)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=3
+    )
     q = I.start_near_dup_ingest(
         stream,
         corpus_dir=str(tmp_path / "ref_corpus"),
@@ -740,19 +755,22 @@ def test_streaming_near_dup_ingest_crash_and_resume(spark, sf_dir, tmp_path, mon
 
     # --- crash run: fail the FIRST index append (batch 1: batch 0 BUILDS
     # the index, so the first append call is batch 1's, after its corpus
-    # write) -----------------------------------------------------------------
+    # write). Both screening sinks append through the one lifecycle, so
+    # this injection covers the semantic sink's crash window too. --------
     corpus_dir = str(tmp_path / "corpus")
     index_dir = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
-    real_append = MI.append_minhash_index
+    real_append = LX.append
     calls = {"n": 0}
 
     def exploding_append(*args, **kwargs):
         calls["n"] += 1
         raise RuntimeError("injected crash between corpus and index writes")
 
-    monkeypatch.setattr(MI, "append_minhash_index", exploding_append)
-    stream = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=3)
+    monkeypatch.setattr(LX, "append", exploding_append)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=3
+    )
     q = I.start_near_dup_ingest(stream, corpus_dir, index_dir, ckpt)
     with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination(300)
@@ -763,13 +781,15 @@ def test_streaming_near_dup_ingest_crash_and_resume(spark, sf_dir, tmp_path, mon
     }
     idx_ids = {
         r["doc_id"]
-        for r in MI.read_minhash_index(spark, index_dir).select("doc_id").collect()
+        for r in LX.read(spark, index_dir).select("doc_id").collect()
     }
     assert corpus_ids - idx_ids, "crash must leave index-invisible survivors"
 
     # --- resume from the SAME checkpoint with the real append ------------
-    monkeypatch.setattr(MI, "append_minhash_index", real_append)
-    stream = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=3)
+    monkeypatch.setattr(LX, "append", real_append)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=3
+    )
     q = I.start_near_dup_ingest(stream, corpus_dir, index_dir, ckpt)
     q.awaitTermination(300)
 
@@ -779,19 +799,21 @@ def test_streaming_near_dup_ingest_crash_and_resume(spark, sf_dir, tmp_path, mon
     assert got == want, "resumed survivor set diverges from uninterrupted run"
     idx_ids = {
         r["doc_id"]
-        for r in MI.read_minhash_index(spark, index_dir).select("doc_id").collect()
+        for r in LX.read(spark, index_dir).select("doc_id").collect()
     }
     assert idx_ids == want
 
     # --- meta-sidecar crash state: data without meta reads as 'no index',
     # rebuilds from the corpus, and replay still admits nothing -----------
-    os.remove(MI._meta_path(index_dir))
-    assert not MI.index_exists(index_dir)
-    stream = I.replay_documents_as_stream(spark, sf_dir, stage, n_chunks=3)
+    os.remove(LX.meta_path(index_dir))
+    assert not LX.exists(index_dir)
+    stream = I.replay_as_stream(
+        spark, sf_dir, "documents", "doc_id", stage, n_chunks=3
+    )
     q = I.start_near_dup_ingest(
         stream, corpus_dir, index_dir, str(tmp_path / "ckpt_meta")
     )
     q.awaitTermination(300)
-    assert MI.index_exists(index_dir)
+    assert LX.exists(index_dir)
     n_after = spark.read.parquet(corpus_dir).count()
     assert n_after == len(want), "meta-rebuild replay admitted duplicates"

@@ -1,6 +1,7 @@
-"""Persisted vector-index guarantees: index path == recompute path,
-append == rebuild, parameter-generation safety, and the no-corpus-recompute
-plan property (single ArrowEvalPython on the batch side)."""
+"""Hyperplane-index checks (operators/lsh_index.HYPERPLANE): index path ==
+recompute path, the corpus-adaptive width frozen in the sidecar, and the
+no-corpus-recompute plan property (single ArrowEvalPython on the batch
+side). The contract both index kinds share is in tests/test_lsh_index.py."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_dedup_ai_spark.operators import similarity_search as S
-from datafusion_dedup_ai_spark.operators import vector_index as VI
+from datafusion_dedup_ai_spark.operators import lsh_index as LX
 from datafusion_dedup_ai_spark.sources.readers import load_table
 
 CORPUS = "vec_id % 10 < 8"
@@ -35,14 +36,12 @@ def test_index_matches_equal_recompute(spark, emb, tmp_path):
     path = str(tmp_path / "vindex")
     corpus = emb.where(F.expr(CORPUS))
     batch = emb.where(F.expr(BATCH))
-    VI.build_vector_index(corpus, path)
-    got = _match_set(
-        VI.incremental_semantic_matches_indexed(spark, path, batch, threshold=0.35)
-    )
+    LX.build(LX.HYPERPLANE, corpus, path)
+    got = _match_set(LX.match(LX.HYPERPLANE, spark, path, batch, 0.35))
 
     # recompute at the geometry the build actually chose (adaptive default
     # writes lsh_bits_for(count) to the sidecar)
-    bits = VI.read_index_meta(path)["n_bits"]
+    bits = LX.read_meta(path)["n_bits"]
     cb = S.lsh_bucketize(corpus, n_tables=16, n_bits=bits, seed=7)
     bb = S.lsh_bucketize(batch, n_tables=16, n_bits=bits, seed=7)
     cands = (
@@ -70,34 +69,6 @@ def test_index_matches_equal_recompute(spark, emb, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_append_equals_rebuild(spark, emb, tmp_path):
-    """Index grown by appends must match an index rebuilt from the union."""
-    p_grow = str(tmp_path / "grow")
-    p_full = str(tmp_path / "full")
-    part1 = emb.where(F.expr("vec_id % 10 < 4"))
-    part2 = emb.where(F.expr("vec_id % 10 >= 4 AND vec_id % 10 < 8"))
-    batch = emb.where(F.expr(BATCH))
-
-    VI.build_vector_index(part1, p_grow)
-    VI.append_vector_index(part2, p_grow)
-    # pin the rebuild to the grow index's frozen geometry: the adaptive
-    # default would otherwise pick a (possibly wider) width for the larger
-    # union corpus, and the test compares append-vs-rebuild at EQUAL params
-    VI.build_vector_index(
-        part1.unionByName(part2),
-        p_full,
-        n_bits=VI.read_index_meta(p_grow)["n_bits"],
-    )
-
-    got = _match_set(
-        VI.incremental_semantic_matches_indexed(spark, p_grow, batch, threshold=0.35)
-    )
-    want = _match_set(
-        VI.incremental_semantic_matches_indexed(spark, p_full, batch, threshold=0.35)
-    )
-    assert got == want and len(got) > 0
-
-
 def test_adaptive_default_width_recorded_in_sidecar(spark, emb, tmp_path):
     """build with default n_bits must record the corpus-adaptive
     lsh_bits_for(count) in the sidecar, and default (sidecar-resolving)
@@ -105,49 +76,14 @@ def test_adaptive_default_width_recorded_in_sidecar(spark, emb, tmp_path):
     width."""
     path = str(tmp_path / "vindex_adaptive")
     corpus = emb.where(F.expr(CORPUS))
-    VI.build_vector_index(corpus, path)
-    meta = VI.read_index_meta(path)
+    LX.build(LX.HYPERPLANE, corpus, path)
+    meta = LX.read_meta(path)
     assert meta["n_bits"] == S.lsh_bits_for(corpus.count())
     # sidecar-resolved append + match round-trip
     batch = emb.where(F.expr(BATCH))
-    VI.append_vector_index(batch, path)
-    out = VI.incremental_semantic_matches_indexed(
-        spark, path, batch, threshold=0.35
-    )
+    LX.append(LX.HYPERPLANE, batch, path)
+    out = LX.match(LX.HYPERPLANE, spark, path, batch, 0.35)
     assert out.count() > 0  # batch vectors match themselves in the index
-
-
-def test_parameter_generation_rejected(spark, emb, tmp_path):
-    """Append/match with different hyperplane parameters than the build must
-    fail loudly — mixing generations silently destroys recall."""
-    path = str(tmp_path / "vindex")
-    VI.build_vector_index(emb.where(F.expr(CORPUS)), path, n_tables=16)
-    batch = emb.where(F.expr(BATCH))
-    with pytest.raises(ValueError, match="hyperplane generations"):
-        VI.append_vector_index(batch, path, n_tables=8)
-    with pytest.raises(ValueError, match="hyperplane generations"):
-        VI.incremental_semantic_matches_indexed(spark, path, batch, n_tables=8)
-
-
-def test_index_exists_requires_meta_and_data(spark, emb, tmp_path):
-    """Meta-without-data (crash after sidecar write) and data-without-meta
-    (tampering) both read as 'no index' / hard error respectively."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "vindex")
-    assert not VI.index_exists(path)
-    VI.build_vector_index(emb.limit(20), path)
-    assert VI.index_exists(path)
-    # data-without-meta: _check_meta refuses with a rebuild pointer
-    os.remove(VI._meta_path(path))
-    assert not VI.index_exists(path)
-    with pytest.raises(ValueError, match="rebuild"):
-        VI.incremental_semantic_matches_indexed(spark, path, emb.limit(5))
-    # meta-without-data: incomplete, so self-healing callers rebuild
-    shutil.rmtree(VI._data_path(path))
-    VI._write_meta(path, {"n_tables": 16, "n_bits": 4, "dim": 64, "seed": 7})
-    assert not VI.index_exists(path)
 
 
 def test_match_plan_computes_batch_codes_only(spark, emb, tmp_path):
@@ -155,40 +91,7 @@ def test_match_plan_computes_batch_codes_only(spark, emb, tmp_path):
     ArrowEvalPython (the batch's code UDF) — corpus codes come from the
     index parquet, never from a second UDF pass."""
     path = str(tmp_path / "vindex")
-    VI.build_vector_index(emb.where(F.expr(CORPUS)), path)
-    df = VI.incremental_semantic_matches_indexed(
-        spark, path, emb.where(F.expr(BATCH))
-    )
+    LX.build(LX.HYPERPLANE, emb.where(F.expr(CORPUS)), path)
+    df = LX.match(LX.HYPERPLANE, spark, path, emb.where(F.expr(BATCH)), 0.35)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
-
-
-def test_vector_index_compaction_preserves_matches(spark, emb, tmp_path):
-    """Append-decayed index -> compact -> identical match results, fewer
-    files, sidecar intact."""
-    import os
-
-    path = str(tmp_path / "vindex_c")
-    corpus = emb.where(F.expr(CORPUS))
-    batch = emb.where(F.expr(BATCH))
-    parts = [corpus.where(F.expr(f"vec_id % 4 = {i}")) for i in range(4)]
-    VI.build_vector_index(parts[0].repartition(8), path)
-    for p in parts[1:]:
-        VI.append_vector_index(p.repartition(8), path)
-
-    def n_files():
-        d = VI._data_path(path)
-        return sum(
-            1 for _r, _d, fs in os.walk(d) for f in fs if f.endswith(".parquet")
-        )
-
-    before_files = n_files()
-    pre = _match_set(
-        VI.incremental_semantic_matches_indexed(spark, path, batch, threshold=0.35)
-    )
-    n_out = VI.compact_vector_index(spark, path)
-    assert n_out == n_files() < before_files
-    post = _match_set(
-        VI.incremental_semantic_matches_indexed(spark, path, batch, threshold=0.35)
-    )
-    assert post == pre
