@@ -41,7 +41,8 @@ Subcommand — the LLM-pipeline journey (round-10):
 
 runs the oracle-gated clean_corpus -> deterministic split -> manifest
 composition over a (doc_id, text) parquet and writes manifest.parquet +
-stats.json (see curate_main).
+stats.json (see curate_main). Its Spark jobs carry the description
+``curate <file name>``.
 """
 
 from __future__ import annotations
@@ -115,10 +116,20 @@ def curate_main(argv: list[str], spark=None) -> int:
     #8): run the registered clean_corpus -> split -> manifest composition
     (queries_curation.training_manifest_frame, every stage oracle-gated)
     over a user parquet, no Python required. Writes manifest.parquet and a
-    per-split stats.json, prints the stats table."""
+    per-split stats.json, prints the stats table.
+
+    The per-split totals in stats.json are observed on the manifest write
+    (``DataFrame.observe``), so the manifest is never read back;
+    ``input_docs`` is one ``docs.count()``, because no single node of the
+    manifest plan sees each input row exactly once. The run's Spark jobs
+    carry the description ``curate <file name>``."""
     import json
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from datafusion_dedup_ai_spark.queries_curation import (
+        SPLITS,
         training_manifest_frame,
     )
     from datafusion_dedup_ai_spark.session import build_session
@@ -127,6 +138,9 @@ def curate_main(argv: list[str], spark=None) -> int:
     owns_session = spark is None
     if owns_session:
         spark = build_session(app_name="curate-cli")
+    sc = spark.sparkContext
+    prev_description = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(f"curate {os.path.basename(args.docs)}")
     try:
         docs = spark.read.parquet(args.docs)
         missing = {"doc_id", "text"} - set(docs.columns)
@@ -145,8 +159,6 @@ def curate_main(argv: list[str], spark=None) -> int:
             # word counts -> deterministic count-then-lex merges). The
             # vocabulary-sized collect is the documented driver-side-model
             # exception — Heaps-law-small on any corpus.
-            from pyspark.sql import functions as F
-
             from datafusion_dedup_ai_spark.functions import text as T
             from datafusion_dedup_ai_spark.operators import tokenizer as TK
 
@@ -161,47 +173,39 @@ def curate_main(argv: list[str], spark=None) -> int:
         manifest = training_manifest_frame(
             docs, bpe_pieces=bpe_pieces, near_dup_tier=args.near_dup_tier
         )
-        manifest.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "manifest.parquet")
-        )
-        from pyspark.sql import functions as F
-
-        written = spark.read.parquet(os.path.join(out_dir, "manifest.parquet"))
-        aggs = [
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_chunks").alias("n_chunks"),
-        ]
-        if "n_bpe_tokens" in written.columns:
-            aggs.append(F.sum("n_bpe_tokens").alias("n_bpe_tokens"))
-        stats_rows = (
-            written.groupBy("split").agg(*aggs).orderBy("split").collect()
-        )
-        n_in = docs.count()
+        # Per-split totals are counted by the write itself (one conditional
+        # sum per split and field), not by re-reading the manifest.
+        fields = {"n_docs": "1", "n_tokens": "n_tokens", "n_chunks": "n_chunks"}
+        if bpe_pieces is not None:
+            fields["n_bpe_tokens"] = "n_bpe_tokens"
+        obs = Observation("curate_stats")
+        manifest.observe(
+            obs,
+            *[
+                F.expr(f"sum(CASE WHEN split = '{split}' THEN {v} END) AS {split}_{k}")
+                for split in SPLITS
+                for k, v in fields.items()
+            ],
+        ).write.mode("overwrite").parquet(os.path.join(out_dir, "manifest.parquet"))
+        got = obs.get
+        # a split no survivor landed in gets no key, as a groupBy would give
+        splits = {
+            split: {k: int(got[f"{split}_{k}"]) for k in fields}
+            for split in sorted(SPLITS)
+            if got[f"{split}_n_docs"]
+        }
         stats = {
-            "input_docs": n_in,
-            "kept_docs": sum(r["n_docs"] for r in stats_rows),
+            "input_docs": docs.count(),
+            "kept_docs": sum(s["n_docs"] for s in splits.values()),
             "near_dup_tier": args.near_dup_tier,
-            "splits": {
-                r["split"]: {
-                    "n_docs": r["n_docs"],
-                    "n_tokens": int(r["n_tokens"]),
-                    "n_chunks": int(r["n_chunks"]),
-                    **(
-                        {"n_bpe_tokens": int(r["n_bpe_tokens"])}
-                        if "n_bpe_tokens" in r.asDict()
-                        else {}
-                    ),
-                }
-                for r in stats_rows
-            },
+            "splits": splits,
         }
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(stats, f, indent=2, sort_keys=True)
         print("\nCuration Complete!")
         print(f"Input Docs: {stats['input_docs']}")
         print(f"Kept Docs: {stats['kept_docs']}")
-        for split, s in stats["splits"].items():
+        for split, s in splits.items():
             print(
                 f"  {split}: {s['n_docs']} docs, {s['n_tokens']} tokens, "
                 f"{s['n_chunks']} chunks"
@@ -209,6 +213,7 @@ def curate_main(argv: list[str], spark=None) -> int:
         print(f"Manifest written to: {out_dir}")
         return 0
     finally:
+        sc.setLocalProperty(_JOB_DESCRIPTION, prev_description)
         if owns_session:
             spark.stop()
 

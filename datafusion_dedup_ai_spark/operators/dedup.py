@@ -12,6 +12,15 @@ Everything stays JVM-side: shingle hashing uses ``xxhash64``, MinHash mins are
 doc id), SimHash bit votes are 64 ``sum(±1)`` columns, and Hamming distance is
 ``bit_count(a XOR b)``. No Python in any per-row path.
 
+A repeated column family (the 64 mins, the band structs, the 64 votes and
+their OR fold, the chunk structs) is built as SQL text, one ``F.expr`` per
+member or one for the whole family, never as a per-Column chain: every node
+of a Column chain costs several py4j round trips at plan-build time (64
+MinHash mins as Column chains take ~4,400), which a micro-batch or a CLI run
+pays on every build. Integer literals are written as ``F.lit`` types them
+(INT when the value fits 32 bits, else BIGINT — the SQL parser's rule too),
+so the SQL form plans exactly as the equivalent Column chain would.
+
 Determinism: hash mixing constants derive from a fixed seed via
 ``random.Random`` at plan-build time, so plans are identical across runs.
 """
@@ -43,8 +52,16 @@ _MASK32 = (1 << 32) - 1
 
 def _signed64(v: int) -> int:
     """Wrap an unsigned 64-bit pattern into Java's signed long range (bit 63
-    set means negative) so it can cross py4j as a LongType literal."""
+    set means negative), the value a BIGINT literal must carry."""
     return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def _sql_int(v: int) -> str:
+    """SQL text of the integer literal ``v``, typed as ``F.lit(v)`` types it:
+    INT when it fits 32 bits, else BIGINT. -2^63 has no literal spelling (the
+    parser reads 9223372036854775808 as a decimal), so it is a constant-folded
+    shift."""
+    return "shiftleft(CAST(1 AS BIGINT), 63)" if v == -(1 << 63) else str(v)
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
@@ -126,14 +143,12 @@ def minhash_signatures(
         F.col(id_col), F.xxhash64(F.col("s")).bitwiseAND(F.lit(_MASK32)).alias("x")
     )
     mins = [
-        F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
+        F.expr(f"min(({a} * x + {b}) % {MINHASH_P}) AS h{i}")
         for i, (a, b) in enumerate(params)
     ]
     agged = ex.groupBy(id_col).agg(*mins)
-    return agged.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
-    )
+    sig = ", ".join(f"h{i}" for i in range(num_hashes))
+    return agged.select(F.col(id_col), F.expr(f"array({sig}) AS sig"))
 
 
 def band_buckets(
@@ -147,14 +162,13 @@ def band_buckets(
     xxhash64(band's signature slice). Pure column work over (id, sig) — no
     shingle or text access, which is what lets the persisted signature index
     serve candidate generation without rescanning the corpus."""
-    band_cols = []
-    for b in range(bands):
-        chunk = F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band)
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.xxhash64(chunk).alias("bucket"))
-        )
+    band_structs = ", ".join(
+        f"struct({b} AS band, "
+        f"xxhash64(slice(`{sig_col}`, {b * rows_per_band + 1}, {rows_per_band})) AS bucket)"
+        for b in range(bands)
+    )
     return signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
+        F.col(id_col), F.expr(f"explode(array({band_structs})) AS bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
@@ -195,15 +209,15 @@ def verify_jaccard(
         F.col(id_col).alias("id_b"), F.col(shingles_col).alias("sh_b")
     )
     joined = candidates.join(sh_a, "id_a").join(sh_b, "id_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        joined.withColumn("n_common", inter.cast("bigint"))
-        .withColumn("n_union", union.cast("bigint"))
-        .withColumn("jaccard", inter.cast("double") / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "n_union", "jaccard")
-    )
+    inter = "size(array_intersect(sh_a, sh_b))"
+    union = f"(size(sh_a) + size(sh_b) - {inter})"
+    return joined.selectExpr(
+        "id_a",
+        "id_b",
+        f"CAST({inter} AS BIGINT) AS n_common",
+        f"CAST({union} AS BIGINT) AS n_union",
+        f"CAST({inter} AS DOUBLE) / {union} AS jaccard",
+    ).where(F.col("jaccard") >= threshold)
 
 
 def minhash_near_dup_pairs(
@@ -424,20 +438,17 @@ def simhash64(
     ex = tokenized.select(
         F.col(id_col), F.explode(F.col(tokens_col)).alias("t")
     ).select(F.col(id_col), F.xxhash64(F.col("t")).alias("h"))
+    bits = [_sql_int(_signed64(1 << j)) for j in range(64)]
     votes = [
-        F.sum(
-            F.when(F.col("h").bitwiseAND(F.lit(_signed64(1 << j))) != 0, 1).otherwise(-1)
-        ).alias(f"v{j}")
-        for j in range(64)
+        F.expr(f"sum(CASE WHEN (h & {bit}) != 0 THEN 1 ELSE -1 END) AS v{j}")
+        for j, bit in enumerate(bits)
     ]
     agged = ex.groupBy(id_col).agg(*votes)
-    sim = None
-    for j in range(64):
-        bit = F.when(
-            F.col(f"v{j}") >= 0, F.lit(_signed64(1 << j)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sim = bit if sim is None else sim.bitwiseOR(bit)
-    return agged.select(F.col(id_col), sim.alias("simhash"))
+    sim = " | ".join(
+        f"CASE WHEN v{j} >= 0 THEN CAST({bit} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for j, bit in enumerate(bits)
+    )
+    return agged.select(F.col(id_col), F.expr(f"{sim} AS simhash"))
 
 
 def simhash_near_pairs(
@@ -452,19 +463,14 @@ def simhash_near_pairs(
     bit_count(xor). Avoids the quadratic all-pairs scan entirely."""
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
-    chunk_cols = []
+    chunk_structs = []
     for c in range(n_chunks):
         shift = c * width
         w = width if c < n_chunks - 1 else 64 - shift
-        mask = _signed64(((1 << w) - 1) << shift)
-        chunk_cols.append(
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.col(sim_col).bitwiseAND(F.lit(mask)).alias("val"),
-            )
-        )
+        mask = _sql_int(_signed64(((1 << w) - 1) << shift))
+        chunk_structs.append(f"struct({c} AS chunk, `{sim_col}` & {mask} AS val)")
     buckets = fingerprints.select(
-        F.col(id_col), F.explode(F.array(*chunk_cols)).alias("cc")
+        F.col(id_col), F.expr(f"explode(array({', '.join(chunk_structs)})) AS cc")
     ).select(id_col, F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val"))
     sims = fingerprints.select(id_col, sim_col)
     cands = (

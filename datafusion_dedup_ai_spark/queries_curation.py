@@ -250,6 +250,8 @@ def q_doc_pii_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5-prefix thresholds: 0xcccd/0x10000 = 80.0%, 0xe666/0x10000 = 90.0%.
 SPLIT_TRAIN_HEX = "cccd"
 SPLIT_VAL_HEX = "e666"
+# every label the split expressions below can emit
+SPLITS = ("train", "val", "test")
 
 
 @register(

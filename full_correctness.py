@@ -7,8 +7,11 @@ Writes CORRECTNESS_FULL.json: {name: {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}} — same shape as the driver's CORRECTNESS_r*.json.
 Oracle-less queries get the rows-only record (err: "no_oracle").
 
-Usage: python full_correctness.py [out.json]   (sf dir from
+Usage: python full_correctness.py [out.json [query ...]]   (sf dir from
 SPARK_GRAFT_TEST_SF_DIR, default /root/testdata/sf0.01)
+
+With query names after the output path, only those queries are checked, in
+registry order, with the same record shape; an unknown name is an error.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ def _canonical_hash(df) -> str:
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_FULL.json"
+    only = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
     os.environ["SPARK_GRAFT_TEST_SF_DIR"] = sf_dir  # oracle paths resolve same
 
@@ -51,12 +55,18 @@ def main() -> None:
     from datafusion_dedup_ai_spark.session import build_session
     from datafusion_dedup_ai_spark.sources.readers import TESTDATA_TABLES
 
+    qs = entry_mod.queries()
+    unknown = sorted(set(only) - set(qs))
+    if unknown:
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
+    if only:
+        qs = {name: fn for name, fn in qs.items() if name in only}
+
     spark = build_session(app_name="full-correctness")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entry_mod.queries()
     # resolve the oracle dict ONCE: resolution is not free (callable oracles
     # materialize their parquet fixtures on first touch)
     oracles = entry_mod.oracle_sql()

@@ -307,6 +307,29 @@ def test_cli_autodetects_string_column(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _assert_stats_match_manifest(spark, out_dir) -> dict:
+    """stats.json's per-split totals, observed on the manifest write, equal
+    the Spark form they replaced: a groupBy(split) over the written
+    manifest, with only the splits that hold a survivor as keys."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    written = spark.read.parquet(os.path.join(out_dir, "manifest.parquet"))
+    sums = [c for c in ("n_tokens", "n_chunks", "n_bpe_tokens") if c in written.columns]
+    want = {
+        r["split"]: {"n_docs": r["n_docs"], **{c: int(r[c]) for c in sums}}
+        for r in written.groupBy("split")
+        .agg(F.count("*").alias("n_docs"), *[F.sum(c).alias(c) for c in sums])
+        .collect()
+    }
+    with open(os.path.join(out_dir, "stats.json")) as f:
+        stats = json.load(f)
+    assert stats["splits"] == want
+    assert stats["kept_docs"] == written.count()
+    return stats
+
+
 def test_cli_curate_end_to_end(spark, tmp_path):
     """`python -m datafusion_dedup_ai_spark curate docs.parquet --out DIR`
     over a small fixture corpus with a planted exact duplicate, a near
@@ -361,6 +384,9 @@ def test_cli_curate_end_to_end(spark, tmp_path):
     assert stats["kept_docs"] == 2
     assert sum(s["n_docs"] for s in stats["splits"].values()) == 2
     assert all(k in ("train", "val", "test") for k in stats["splits"])
+    # two survivors miss at least one split, which must get no key
+    assert len(stats["splits"]) < 3
+    _assert_stats_match_manifest(spark, out_dir)
 
 
 def test_cli_curate_bpe_tokens(spark, tmp_path):
@@ -368,8 +394,6 @@ def test_cli_curate_bpe_tokens(spark, tmp_path):
     manifest carries per-doc n_bpe_tokens: positive for every survivor,
     equal to the library replay (train on corpus word counts -> greedy
     longest-match encode), and summed into stats.json per split."""
-    import json
-
     from pyspark.sql import functions as F
 
     from datafusion_dedup_ai_spark.functions import text as T
@@ -415,8 +439,7 @@ def test_cli_curate_bpe_tokens(spark, tmp_path):
     }
     assert {d: r["n_bpe_tokens"] for d, r in rows.items()} == want
 
-    with open(os.path.join(out_dir, "stats.json")) as f:
-        stats = json.load(f)
+    stats = _assert_stats_match_manifest(spark, out_dir)
     for split, s in stats["splits"].items():
         assert s["n_bpe_tokens"] == sum(
             r["n_bpe_tokens"] for r in rows.values() if r["split"] == split
@@ -437,15 +460,20 @@ def test_cli_curate_minhash_tier(spark, tmp_path):
     unrunnable on constant-vocabulary corpora at 100x, measured ENOSPC in
     the curate probe) runs the LSH + two-phase-verify victim stage:
 
-    * deterministic (two runs, identical manifests);
+    * deterministic (two runs, identical manifests). The second run reads
+      a copy of the input at another path: on the same path it would reuse
+      the first run's persisted frames and compare the cache with itself;
     * victims are a SUBSET of the exact tier's on this fixture (the
       two-phase pair set equals the all-exact MinHash pair set on
       fixed-seed corpora — tests/test_dedup_ext.py — and LSH candidates
       are a subset of all pairs), so every minhash-tier survivor set
       contains the exact-tier survivors;
-    * stats.json records which tier produced it.
+    * stats.json records which tier produced it, and its per-split totals
+      equal a groupBy over the written manifest, with and without
+      ``--bpe-tokens``.
     """
     import json
+    import shutil
 
     from datafusion_dedup_ai_spark.sources.readers import load_table
 
@@ -460,13 +488,23 @@ def test_cli_curate_minhash_tier(spark, tmp_path):
         ["curate", inp, "--out", out_mh, "--near-dup-tier", "minhash"],
         spark=spark,
     ) == 0
+    inp2 = str(tmp_path / "docs_copy.parquet")
+    shutil.copytree(inp, inp2)
     out_mh2 = str(tmp_path / "curated_mh2")
     assert main(
-        ["curate", inp, "--out", out_mh2, "--near-dup-tier", "minhash"],
+        ["curate", inp2, "--out", out_mh2, "--near-dup-tier", "minhash"],
+        spark=spark,
+    ) == 0
+    out_mh_bpe = str(tmp_path / "curated_mh_bpe")
+    assert main(
+        ["curate", inp2, "--out", out_mh_bpe, "--near-dup-tier", "minhash",
+         "--bpe-tokens"],
         spark=spark,
     ) == 0
     out_exact = str(tmp_path / "curated_exact")
     assert main(["curate", inp, "--out", out_exact], spark=spark) == 0
+    for out in (out_mh, out_mh2, out_mh_bpe, out_exact):
+        _assert_stats_match_manifest(spark, out)
 
     mh = {
         r["doc_id"]: (r["split"], r["n_tokens"], r["n_chunks"])

@@ -638,3 +638,45 @@ def test_index_meta_records_modulus(spark, shingled, tmp_path):
         json.dump(legacy, f)
     with pytest.raises(ValueError, match="signature generations"):
         LX.append(LX.MINHASH, shingled, path)
+
+
+@pytest.mark.parametrize(
+    "v", [0, -1, 1 << 30, -(1 << 31), (1 << 31) - 1, 1 << 31, D.MINHASH_P, -(1 << 63)]
+)
+def test_sql_int_types_like_lit(spark, v):
+    """The SQL-text literals of the expression families carry the value and
+    the type ``F.lit`` gives the same int: INT inside 32 bits, else BIGINT,
+    and -2^63, which has no literal spelling, still a BIGINT."""
+    got = spark.range(1).select(F.expr(D._sql_int(v)).alias("v"))
+    want = spark.range(1).select(F.lit(v).alias("v"))
+    assert got.schema == want.schema
+    assert got.first()["v"] == v
+
+
+def test_minhash_manifest_build_py4j_budget(spark, monkeypatch):
+    """Driver-cost guard: building the curate manifest with the MinHash tier
+    stays under 4,000 py4j round trips. Its repeated column families (64
+    MinHash mins, 16 band structs) are SQL text; built as Column chains
+    the manifest costs ~10.9k round trips, which a CLI run or a streaming
+    micro-batch pays at every plan build. The first build is not counted,
+    so one-time imports and JVM class lookups do not enter the budget."""
+    import py4j.clientserver as cs
+
+    from datafusion_dedup_ai_spark.queries_curation import training_manifest_frame
+
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog"), (1, "a b c d e")],
+        "doc_id BIGINT, text STRING",
+    )
+    training_manifest_frame(docs, near_dup_tier="minhash")
+    send = cs.ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(cs.ClientServerConnection, "send_command", counting)
+        training_manifest_frame(docs, near_dup_tier="minhash")
+    assert 0 < calls[0] <= 4000, calls[0]
